@@ -8,8 +8,8 @@ identical across runs, engines, parallelism levels, and resumed
 checkpoints. 15 hex digits = 60 bits: fits a signed int64 on both
 engines and leaves mod-n bias below 2^-40 for any practical n.
 
-Consumers: operators/sampling.py (stratified + epoch gates),
-operators/holdouts.py (negative-draw stream). Changing this expression
+Consumers: operators/holdouts.py (negative-draw stream) and
+plans/queries.py (random-walk steps). Changing this expression
 changes every one of them in lockstep — that is the point.
 """
 

@@ -989,8 +989,6 @@ cand AS (
 DECON_N = 4      # shingle width for contamination checks
 DECON_MOD = 97   # doc_id % 97 == 0 → the held-out "benchmark" set
 
-_DECON_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-
 
 def _ngrams(text: Column, n: int) -> Column:
     """All n-token shingles (space-tokenized), [] when too short —
@@ -1042,12 +1040,7 @@ def doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic doc_id % {DECON_MOD} == 0 slice stands in for an eval
     suite). Shape at 100 TB: the benchmark shingle set is tiny →
     broadcast semi-join against the exploded corpus shingles; one narrow
-    explode + one KB-sized build side, no corpus shuffle. Session-cached
-    (r7): corpus_export re-derives the contaminated set, and without the
-    cache it re-ran the whole ngram kernel + semi-join chain."""
-    key = table_source_key(spark, sf_dir)
-    if key in _DECON_CACHE:
-        return _DECON_CACHE[key]
+    explode + one KB-sized build side, no corpus shuffle."""
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     sh = docs.select(
         "doc_id",
@@ -1057,15 +1050,12 @@ def doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("shingle").isNotNull())
     is_bench = F.col("doc_id") % DECON_MOD == 0
     bench = F.broadcast(sh.filter(is_bench).select("shingle").distinct())
-    out = (
+    return (
         sh.filter(~is_bench)
         .join(bench, "shingle")
         .groupBy("doc_id")
         .agg(F.countDistinct("shingle").alias("n_shared_shingles"))
-        .persist()
     )
-    _DECON_CACHE[key] = out
-    return out
 
 
 def _decon_shingles_sql() -> str:

@@ -1487,11 +1487,9 @@ BFS_ROUNDS = 3
 # these queries reuse the result instead of pinning a fresh copy each
 # time (the cache-accumulation hazard ADVICE r2 flagged).
 # TIMING CAVEAT: a second in-process invocation is a cache hit (~0 s).
-# bench.py times each query exactly once per fresh process, so its
-# numbers are true build timings; any harness that loops the suite
-# in one application must use fresh processes per iteration (as
-# tools/scaling.py does) or its iterative-query timings measure a
-# dict lookup.
+# Any harness that loops the suite in one application must use fresh
+# processes per iteration (as tools/scaling.py does) or its
+# iterative-query timings measure a dict lookup.
 _ITER_CACHE: dict[tuple, DataFrame] = register_session_cache({})
 
 

@@ -16,18 +16,33 @@ test scale:
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 import zipfile
 
 from pyspark.sql import SparkSession
 
 
+def _zip_path() -> str:
+    return os.path.join("/tmp", f"kg_covid_19_spark-{os.getpid()}.zip")
+
+
+@atexit.register
+def _remove_zip() -> None:
+    # per-pid path: a forked child that inherits this handler removes
+    # only a zip it built itself
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(_zip_path())
+
+
 def package_zip() -> str:
     """Zip this package for worker shipping (the spark-submit --py-files
-    artifact, north_rule). Rebuilt per session start; a few KB."""
+    artifact, north_rule). Rebuilt per session start; a few hundred KB
+    (every .py file of the package). Removed at interpreter exit."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
-    out = os.path.join("/tmp", f"kg_covid_19_spark-{os.getpid()}.zip")
+    out = _zip_path()
     with zipfile.ZipFile(out, "w") as zf:
         for dirpath, _dirs, files in os.walk(pkg_dir):
             for f in files:

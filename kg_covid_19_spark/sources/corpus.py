@@ -16,11 +16,6 @@ from pyspark.sql import functions as F
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
 
 def table_source_key(spark: SparkSession, sf_dir: str) -> tuple:
     """Cache key for session-level persisted frames derived from the
@@ -70,6 +65,7 @@ def invalidate_session_caches(spark: SparkSession) -> int:
     changes what any read_table resolution may return and writes are
     rare relative to reads. Returns the number of evicted entries."""
     app = spark.sparkContext.applicationId
+    _SCAN_LAYOUT.clear()
     n = 0
     for cache in _SESSION_CACHES:
         for key in list(cache):
@@ -92,8 +88,8 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # sf_dir → (scan split count, raw bytes), memoized: the .rdd conversion
-# previously used to probe splits costs ~1s of driver time per call, and
-# the answer is static per input.
+# previously used to probe splits costs ~1s of driver time per call.
+# Cleared by invalidate_session_caches, since a rewrite changes the files.
 _SCAN_LAYOUT: dict[str, tuple[int, int]] = {}
 
 
@@ -114,14 +110,12 @@ def _scan_layout(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
                 for f in os.listdir(path)
                 if f.endswith(".parquet")
             ] if os.path.isdir(path) else [os.path.getsize(path)]
-            max_bytes = int(
-                spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-                .rstrip("b")
-            )
-            open_cost = 4 * 1024 * 1024
+            conf = spark._jsparkSession.sessionState().conf()
+            max_bytes = conf.filesMaxPartitionBytes()
+            open_cost = conf.filesOpenCostInBytes()
             total = sum(s + open_cost for s in sizes)
             cached = (max(1, -(-total // max_bytes)), sum(sizes))
-        except (OSError, ValueError):
+        except OSError:
             n = spark.read.parquet(path).rdd.getNumPartitions()
             cached = (n, 0)
         _SCAN_LAYOUT[sf_dir] = cached

@@ -70,27 +70,6 @@ def test_content_edge_id_deterministic(spark):
     assert a == b and len(a) == 64
 
 
-def test_canonicalize_url_rules(spark):
-    from pyspark.sql import functions as F
-
-    from kg_covid_19_spark.functions.urls import canonicalize_url
-
-    cases = [
-        ("HTTPS://ExAmple.org:443/Doc/7?b=2&a=1#frag",
-         "https://example.org/Doc/7?a=1&b=2"),
-        ("HTTPS://ExAmple.org:443/Doc/7/", "https://example.org/Doc/7"),
-        ("http://Host.com:80/x#y", "http://host.com/x"),
-        ("http://host.com:8080/x", "http://host.com:8080/x"),  # non-default
-        ("https://host.com/", "https://host.com/"),  # root slash kept
-        ("https://host.com/UPPER/Path", "https://host.com/UPPER/Path"),
-    ]
-    df = spark.createDataFrame([(u,) for u, _ in cases], "u string")
-    got = [
-        r.c for r in df.select(canonicalize_url(F.col("u")).alias("c")).collect()
-    ]
-    assert got == [want for _, want in cases]
-
-
 def test_len_deciles_approx_brackets_exact(spark):
     """The percentile_approx twin must agree with the exact discrete
     deciles to within one decile bracket per (lang, decile) — the

@@ -11,30 +11,12 @@ import re
 from pyspark.sql import functions as F
 
 from kg_covid_19_spark.plans.pipeline import doc_mentions
-from kg_covid_19_spark.plans.relational import REL_QUERIES
 
 from conftest import SF_DIR
 
 
 def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_tpch_q1_scan_is_pruned_and_pushed(spark):
-    plan = _executed_plan(REL_QUERIES["rel_tpch_q1"](spark, SF_DIR))
-    scan = next(l for l in plan.splitlines() if "FileScan parquet" in l)
-    # filter reached the scan
-    assert "l_shipdate" in scan and "DataFilters: [" in scan
-    assert re.search(r"DataFilters: \[isnotnull\(l_shipdate", scan)
-    # projection pruned: no l_comment / l_orderkey in the read schema
-    assert "l_comment" not in scan
-    assert "l_orderkey" not in scan
-
-
-def test_dim_joins_broadcast_not_sort_merge(spark):
-    plan = _executed_plan(REL_QUERIES["rel_broadcast_dims"](spark, SF_DIR))
-    assert plan.count("BroadcastHashJoin") >= 3
-    assert "SortMergeJoin" not in plan
 
 
 def test_mention_chain_single_udf_min_exchanges(spark):
@@ -53,12 +35,6 @@ def test_mention_chain_single_udf_min_exchanges(spark):
         re.findall(r"Exchange (?!SinglePartition)", plan)
     )
     assert n_exchange <= 1, plan
-
-
-def test_filter_in_pushed_to_scan(spark):
-    plan = _executed_plan(REL_QUERIES["rel_filter_in"](spark, SF_DIR))
-    scan = next(l for l in plan.splitlines() if "FileScan parquet" in l)
-    assert re.search(r"l_returnflag#\d+ IN \(A,N\)", scan)
 
 
 def test_cooccurrence_counts_no_docid_join(spark):
@@ -85,22 +61,6 @@ def test_cooccurrence_counts_no_docid_join(spark):
     assert len(re.findall(r"Exchange (?!SinglePartition)", plan)) <= 2, plan
 
 
-def test_topk_is_two_phase(spark):
-    """The ANN top-k must prune per-partition before the per-query rank:
-    two Window nodes, the first keyed by (pid, query_id) so no stage
-    collapses to <=N_QUERIES partitions."""
-    from kg_covid_19_spark.operators.similarity import emb_knn_bruteforce
-
-    plan = _executed_plan(emb_knn_bruteforce(spark, SF_DIR))
-    windows = [l for l in plan.splitlines() if re.search(r"\bWindow\b", l)]
-    assert len(windows) == 2, plan
-    # phase-1 window partitions by the physical-partition column too
-    assert any("pid" in w and "query_id" in w for w in windows), windows
-    # the exchange feeding the final per-query window reads the pruned
-    # set: there must be an exchange on (pid, query_id) upstream
-    assert re.search(r"hashpartitioning\(pid#\d+", plan), plan
-
-
 def test_asof_join_single_exchange(spark):
     """The as-of join is one windowed carry-forward per user: exactly
     one data exchange and one Window, never a range/theta join."""
@@ -112,53 +72,9 @@ def test_asof_join_single_exchange(spark):
     assert "Join" not in plan
 
 
-def test_bucketed_join_no_exchange(spark, tmp_path):
-    """Tables bucketed on the join key join WITHOUT any Exchange —
-    the write-once/join-many layout the 100-TB design leans on."""
-    from kg_covid_19_spark.plans.bucketed import (
-        bucketed_equijoin,
-        write_bucketed,
-    )
-    from kg_covid_19_spark.plans.pipeline import build_kg
-
-    import shutil
-
-    for t in ("bkt_nodes", "bkt_edges"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-
-    nodes, edges = build_kg(spark, SF_DIR)
-    write_bucketed(nodes, "bkt_nodes", "id")
-    write_bucketed(
-        edges.withColumnRenamed("subject", "id"), "bkt_edges", "id"
-    )
-    # fixture tables are broadcast-sized; pin the thresholds down so
-    # the plan shows the shape a 100-TB fact-fact join would take
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = _executed_plan(
-            bucketed_equijoin(spark, "bkt_edges", "bkt_nodes", "id")
-        )
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-        # bucket metadata reached the scan
-        assert "Bucketed: true" in plan, plan
-        got = bucketed_equijoin(spark, "bkt_edges", "bkt_nodes", "id").count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    want = (
-        edges.withColumnRenamed("subject", "id").join(nodes, "id").count()
-    )
-    assert got == want
-
-
 def test_druggable_two_hop_broadcasts_drug_dim(spark):
     """The druggable 2-hop joins hop tables to the drug dimension via
-    broadcast and never degenerates to a cartesian product — the
-    property PLANS.md states for this query."""
+    broadcast and never degenerates to a cartesian product."""
     from kg_covid_19_spark.plans.queries import kg_druggable_two_hop
 
     plan = _executed_plan(kg_druggable_two_hop(spark, SF_DIR))
@@ -341,19 +257,6 @@ def test_len_deciles_has_no_stratum_array(spark):
     assert "collect_list" not in plan, plan
     assert "HashAggregate" in plan
     assert "partial_count" in plan or "partial_sum" in plan, plan
-
-
-def test_neardup_candidates_never_shuffle(spark):
-    """emb_cosine_neardup's quadratic candidate set must be generated
-    and consumed inside the bucket tasks (FlatMapGroupsInPandas), with
-    NO ids-only self-join producing it: exactly the grouped-kernel
-    operator present, and no SortMergeJoin anywhere (the exchanges the
-    plan keeps are the bucket groupBy and the sparse-survivor dedup)."""
-    from kg_covid_19_spark.operators.similarity import emb_cosine_neardup
-
-    plan = _executed_plan(emb_cosine_neardup(spark, SF_DIR))
-    assert "FlatMapGroupsInPandas" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
 
 
 def test_dup_ngrams_broadcast_is_pruned_with_shuffle_fallback(spark):

@@ -242,32 +242,6 @@ def test_kernel_invariant_to_partitioning(spark, docs):
 
 
 @given(
-    urls=st.lists(
-        st.from_regex(
-            r"https?://[A-Za-z0-9.]{1,12}(:[0-9]{2,4})?(/[a-z0-9/]{0,10})?"
-            r"(\?[a-z]=[0-9](&[a-z]=[0-9]){0,3})?(#[a-z0-9]{0,6})?",
-            fullmatch=True,
-        ),
-        min_size=1,
-        max_size=8,
-    )
-)
-@SET
-def test_url_canonicalize_idempotent(spark, urls):
-    """canon(canon(u)) == canon(u) — the property that makes canonical
-    URLs safe as dedup keys."""
-    from kg_covid_19_spark.functions.urls import canonicalize_url
-
-    df = spark.createDataFrame([(u,) for u in urls], "u string")
-    once = df.select(canonicalize_url(F.col("u")).alias("c1"))
-    twice = once.select(
-        F.col("c1"), canonicalize_url(F.col("c1")).alias("c2")
-    ).collect()
-    for r in twice:
-        assert r["c1"] == r["c2"], r
-
-
-@given(
     texts=st.lists(
         st.text(
             alphabet="abc@. 0123456789+-",

@@ -1,81 +1,10 @@
-"""Corpus sampling / mixing operators (operators/sampling.py)."""
+"""Text-operator goldens: PII redaction (functions/textstats.py), the
+events as-of join (streaming/events.py) and duplicate n-gram counts
+(operators/dedup.py)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from kg_covid_19_spark.operators.sampling import (
-    EPOCH_WEIGHTS,
-    SAMPLE_RATES_PPM,
-    doc_epoch_mix,
-    doc_stratified_sample,
-)
-
-from conftest import SF_DIR, assert_df_matches_oracle
-
-
-def test_stratified_sample_matches_oracle(spark, duck):
-    from kg_covid_19_spark.operators.sampling import SAMPLING_ORACLES
-
-    assert_df_matches_oracle(
-        doc_stratified_sample(spark, SF_DIR),
-        duck,
-        SAMPLING_ORACLES["doc_stratified_sample"],
-    )
-
-
-def test_stratified_sample_rates_approximate(spark):
-    """Each stratum keeps ≈ rate of its documents (hash gate is uniform);
-    at fixture scale allow a wide tolerance but pin the ordering."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    totals = {r["lang"]: r["n"] for r in
-              docs.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    kept = {r["lang"]: r["n"] for r in
-            doc_stratified_sample(spark, SF_DIR)
-            .groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    for lang, rate in SAMPLE_RATES_PPM.items():
-        if totals.get(lang, 0) >= 20:
-            frac = kept.get(lang, 0) / totals[lang]
-            assert abs(frac - rate / 1e6) < 0.35, (lang, frac, rate)
-
-
-def test_epoch_mix_copy_counts_exact(spark):
-    """floor(w) copies always; the fractional extra only ever adds one;
-    per-doc copy indices are dense 0..n-1."""
-    mix = doc_epoch_mix(spark, SF_DIR)
-    per_doc = (
-        mix.groupBy("doc_id", "lang")
-        .agg(F.count("*").alias("n"), F.max("copy").alias("mx"),
-             F.min("copy").alias("mn"))
-        .collect()
-    )
-    assert per_doc, "mix must be non-empty"
-    for r in per_doc:
-        w = EPOCH_WEIGHTS[r["lang"]]
-        base = int(w)
-        assert r["n"] in (base, base + 1), (r["lang"], w, r["n"])
-        assert r["mn"] == 0 and r["mx"] == r["n"] - 1
-
-    # expectation: average copies per doc ≈ w per stratum
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    totals = {r["lang"]: r["n"] for r in
-              docs.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    mixed = {r["lang"]: r["n"] for r in
-             mix.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    for lang, w in EPOCH_WEIGHTS.items():
-        if totals.get(lang, 0) >= 20:
-            avg = mixed.get(lang, 0) / totals[lang]
-            assert abs(avg - w) < 0.5, (lang, avg, w)
-
-
-def test_sampling_is_parallelism_invariant(spark):
-    """Hash gates, not rand(): same sampled set at any partitioning."""
-    a = sorted(tuple(r) for r in doc_stratified_sample(spark, SF_DIR).collect())
-    b = sorted(
-        tuple(r)
-        for r in doc_stratified_sample(spark, SF_DIR).repartition(13).collect()
-    )
-    assert a == b
 
 
 def test_redact_pii_goldens(spark):

@@ -1,44 +1,11 @@
-"""applyInPandasWithState: state survives micro-batch boundaries and
-converges to the batch aggregate."""
+"""Event-stream operators (streaming/events.py): rate spikes, temporal
+splits and bot-user detection on planted patterns."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from kg_covid_19_spark.streaming.stateful import (
-    user_running_totals_stream,
-    user_totals_batch,
-)
-
 from conftest import SF_DIR
-
-
-def test_stateful_running_totals_converge(spark, tmp_path):
-    # split events into 3 files → 3 micro-batches → state must carry over
-    events = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    out = str(tmp_path / "events_split")
-    events.withColumn("part", F.col("event_id") % 3).repartition(3, "part").drop(
-        "part"
-    ).write.parquet(out)
-
-    appended = user_running_totals_stream(spark, out, "t_user_totals")
-    # at least one user must have been updated across >1 trigger
-    multi = (
-        appended.groupBy("user_id").count().filter(F.col("count") > 1).count()
-    )
-    assert multi > 0, "expected state updates across micro-batches"
-
-    # last row per user (max n_events) == batch aggregate
-    final = (
-        appended.groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max("sum_value_cents").alias("sum_value_cents"),
-        )
-    )
-    got = sorted(tuple(r) for r in final.collect())
-    want = sorted(tuple(r) for r in user_totals_batch(spark, out).collect())
-    assert got == want
 
 
 def test_rate_spikes_planted_burst(spark):

@@ -357,11 +357,7 @@ This VM's effective CPU speed fluctuates up to ~2× on minute timescales
 (hypervisor co-tenancy the guest cannot see: /proc/stat steal reads 0,
 cpuinfo pins 2100 MHz, yet the identical commit benched its headline at
 11.6 s and 16.7 s two hours apart while taskset-pinned fixed workloads
-stayed within ~10%). `bench.py` therefore emits two fixed calibration
-probes with every run — `calib_cpu_sec` (single-thread Python loop) and
-`calib_spark_sec` (fixed JVM-only 32-partition aggregation) — so a
-round-over-round comparison can divide out the host-speed ratio before
-concluding anything about the plans. The scaling tables above were
+stayed within ~10%). The scaling tables above were
 taken in a verified-quiet window (flat busy core-seconds across
 parallelism levels is the in-run quietness signature).
 
