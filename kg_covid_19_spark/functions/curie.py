@@ -70,11 +70,6 @@ def pipe_join(col: Column) -> Column:
     return F.concat_ws("|", col)
 
 
-def with_prefix(prefix: str, col: Column) -> Column:
-    """C7: f-string CURIE prefixing (e.g. 'CORD:' scibite_cord.py:180)."""
-    return F.concat(F.lit(prefix), col.cast("string"))
-
-
 def get_identifier_by_prefix(col: Column, prefix: str) -> Column:
     """C8: pick the ``prefix``-ed item from a '|'-list and fix ``HGNC:HGNC:``
     doubling (scibite_cord.py:467-484)."""
@@ -98,16 +93,3 @@ def content_edge_id(subject: Column, obj: Column) -> Column:
     (ontology_transform.py:103-104) — content hash instead of wall-clock uuid."""
     return F.sha2(F.concat_ws("|", subject, obj), 256)
 
-
-def normalize_curie_expr(curie: Column, mapped: Column) -> Column:
-    """J6: SSSOM normalization semantics — left join + coalesce, identity on
-    miss (utils/normalize_utils.py:7-46). ``mapped`` is the object_id column
-    coming out of the broadcast left join."""
-    return collapse_uniprot_curie(F.coalesce(mapped, curie))
-
-
-def prefix_priority_pick(cols: dict[str, Column], priority: list[str]) -> Column:
-    """A6: first non-null id by prefix priority (pharmgkb.py:191-253,
-    utils/transform_utils.py:88-107). ``cols`` maps prefix → candidate id."""
-    ordered = [cols[p] for p in priority if p in cols]
-    return F.coalesce(*ordered)

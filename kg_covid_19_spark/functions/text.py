@@ -25,8 +25,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-TEXT_KERNEL_VERSION = 1
-
 _SCRIPT_RE = re.compile(rb"(?is)<(script|style)\b.*?</\1>")
 _TAG_RE = re.compile(rb"(?s)<[^>]*>")
 _WS_RE = re.compile(r"[\n\t]")

@@ -29,12 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.corpus import (
-    ensure_min_parallelism,
-    read_table,
-    register_session_cache,
-    table_source_key,
-)
+from ..sources.corpus import artifact, ensure_min_parallelism, read_table
 
 
 def _quality_sql_expr() -> str:
@@ -164,21 +159,17 @@ def make_shingle_udf():
     return shingles
 
 
-_SHINGLE_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-
-
 def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, shingle) exploded distinct shingles — persisted per
-    (session, input) like the materialized KG (plans/pipeline.get_kg):
-    the signature build and BOTH sides of the Jaccard-verify
+    """(doc_id, shingle) exploded distinct shingles — a session artifact
+    like the materialized KG (plans/pipeline.get_kg): the signature
+    build and BOTH sides of the Jaccard-verify
     intersection read this frame, so without the cache one
     neardup_pairs run re-scans and re-shingles the corpus three times.
     On a cluster this is the natural intermediate table between the
     corpus and the dedup family."""
-    key = table_source_key(spark, sf_dir)
-    if key not in _SHINGLE_CACHE:
+    def build():
         shingle_udf = make_shingle_udf()
-        sh = (
+        return (
             dedup_corpus(spark, sf_dir, lift=True)
             .select(
                 "doc_id",
@@ -187,14 +178,8 @@ def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("shingle").isNotNull())
             .persist()
         )
-        _SHINGLE_CACHE[key] = sh
-    return _SHINGLE_CACHE[key]
 
-
-_SIG_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-_CAND_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-_SIZES_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-_INTER_CACHE: dict[tuple, DataFrame] = register_session_cache({})
+    return artifact(spark, sf_dir, "shingles", build)
 
 
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -219,8 +204,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the full shingle frame (guide §1.2: remove repeated passes;
     on a cluster this is the persisted signature table next to the
     shingle table)."""
-    key = table_source_key(spark, sf_dir)
-    if key not in _SIG_CACHE:
+    def build():
         sh = doc_shingles(spark, sf_dir)
         aggs = [
             F.min(
@@ -228,21 +212,20 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias(f"h{s}")
             for s in range(N_HASHES)
         ]
-        _SIG_CACHE[key] = sh.groupBy("doc_id").agg(*aggs).persist()
-    return _SIG_CACHE[key]
+        return sh.groupBy("doc_id").agg(*aggs).persist()
+
+    return artifact(spark, sf_dir, "minhash_signatures", build)
 
 
 def doc_shingle_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_sh) distinct-shingle counts — the Jaccard denominator
     side, session-cached (r7): four verify paths each re-aggregated the
     shingle frame for it."""
-    key = table_source_key(spark, sf_dir)
-    if key not in _SIZES_CACHE:
+    def build():
         sh = doc_shingles(spark, sf_dir)
-        _SIZES_CACHE[key] = (
-            sh.groupBy("doc_id").agg(F.count("*").alias("n_sh")).persist()
-        )
-    return _SIZES_CACHE[key]
+        return sh.groupBy("doc_id").agg(F.count("*").alias("n_sh")).persist()
+
+    return artifact(spark, sf_dir, "shingle_sizes", build)
 
 
 def candidate_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -252,11 +235,10 @@ def candidate_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
     containment, and the ppm-scored batch rollups each re-executed this
     double equi-join, the most expensive plan in the dedup family. The
     cache is bounded by the candidate set, not the corpus."""
-    key = table_source_key(spark, sf_dir)
-    if key not in _INTER_CACHE:
+    def build():
         cand = minhash_candidates(spark, sf_dir)
         sh = doc_shingles(spark, sf_dir)
-        inter = (
+        return (
             cand.join(sh.alias("sa"), F.col("a") == F.col("sa.doc_id"))
             .join(
                 sh.alias("sb"),
@@ -267,8 +249,8 @@ def candidate_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("n_inter"))
             .persist()
         )
-        _INTER_CACHE[key] = inter
-    return _INTER_CACHE[key]
+
+    return artifact(spark, sf_dir, "candidate_intersections", build)
 
 
 def _band_cols() -> list[tuple[int, Column]]:
@@ -299,13 +281,12 @@ def minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     a < b. The join key is (band_idx, band_key) — bucket-local self-join.
     Session-cached (r7): five downstream verify/rollup queries start
     from this bounded pair set."""
-    key = table_source_key(spark, sf_dir)
-    if key not in _CAND_CACHE:
+    def build():
         sig = minhash_signatures(spark, sf_dir)
         bands = _band_frame(sig)
         l = bands.alias("l")
         r = bands.alias("r")
-        _CAND_CACHE[key] = (
+        return (
             l.join(
                 r,
                 (F.col("l.band") == F.col("r.band"))
@@ -318,7 +299,8 @@ def minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .persist()
         )
-    return _CAND_CACHE[key]
+
+    return artifact(spark, sf_dir, "minhash_candidates", build)
 
 
 def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -435,17 +417,12 @@ def doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 CLUSTER_ROUNDS = 3
 
 
-_CLUSTER_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-
-
 def doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached wrapper — see _dedup_clusters_build (the
-    iterative final frame is persisted once per application × source ×
-    input, the _ITER_CACHE discipline)."""
-    key = table_source_key(spark, sf_dir)
-    if key not in _CLUSTER_CACHE:
-        _CLUSTER_CACHE[key] = _dedup_clusters_build(spark, sf_dir)
-    return _CLUSTER_CACHE[key]
+    """Session artifact — see _dedup_clusters_build."""
+    return artifact(
+        spark, sf_dir, "dedup_clusters",
+        lambda: _dedup_clusters_build(spark, sf_dir),
+    )
 
 
 def _dedup_clusters_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1125,9 +1102,6 @@ def make_ngram_pos_udf(n: int):
     return ngram_pos
 
 
-_SPAN_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-
-
 def doc_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span-level dedup: merge the positions of cross-document
     duplicated {DECON_N}-grams into MAXIMAL duplicated spans per
@@ -1154,12 +1128,15 @@ def doc_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow kernel ran twice over the corpus (no ReusedExchange across
     the two consumers); it is persisted for the build and released
     once the bounded span frame is materialized. The span frame
-    itself is session-cached: doc_dup_span_strip and doc_dup_profile
+    itself is a session artifact: doc_dup_span_strip and doc_dup_profile
     both start from it, and each used to re-execute the whole
     two-pass chain (guide §1.2: don't compute things twice)."""
-    key = table_source_key(spark, sf_dir)
-    if key in _SPAN_CACHE:
-        return _SPAN_CACHE[key]
+    return artifact(
+        spark, sf_dir, "dup_spans", lambda: _dup_spans_build(spark, sf_dir)
+    )
+
+
+def _dup_spans_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = ensure_min_parallelism(
         spark, sf_dir,
         read_table(spark, sf_dir, "documents").select("doc_id", "text"),
@@ -1198,7 +1175,6 @@ def doc_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spans.count()
     pos.unpersist()
-    _SPAN_CACHE[key] = spans
     return spans
 
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.corpus import register_session_cache, table_source_key
+from ..sources.corpus import artifact
 from ..functions.hashing import hash_mod_sql as _hash_mod_sql
 from ..plans.merged import get_merged
 
@@ -304,8 +304,8 @@ def _global_rank(df: DataFrame, n_parts: int = 32) -> DataFrame:
     so the result must be pinned while ``local`` is hot (a recompute
     could draw different range boundaries and mismatch the offsets),
     and nothing else may stay pinned per invocation. Callers keep the
-    returned frame (route it through a keyed session cache like
-    _ranked_universe) and own its unpersist."""
+    returned frame (as a session artifact, like _ranked_universe) and
+    own its unpersist."""
     local = _local_ranks(df, n_parts).persist()
     counts = {
         r["pid"]: r["c"]
@@ -331,23 +331,18 @@ def _global_rank(df: DataFrame, n_parts: int = 32) -> DataFrame:
     return out
 
 
-_UNIV_CACHE: dict[tuple, tuple[DataFrame, int]] = register_session_cache({})
-
-
 def _ranked_universe(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, int]:
-    """Keyed session cache for the ranked node universe (the get_kg /
-    doc_shingles pattern): one persisted (id, idx) frame per
-    (application, source, input) instead of a fresh persist per
-    invocation — repeated fullscale-negative runs in a bench loop
-    reuse it rather than accumulating pinned storage. The universe is
+    """The ranked node universe as one session artifact — one persisted
+    (id, idx) frame and its count per input, instead of a fresh persist
+    per invocation that repeated fullscale-negative runs in a bench loop
+    would accumulate as pinned storage. The universe is
     CONSTRUCTED HERE (nodes ∪ edge endpoints, the reference's
     make_holdouts universe) rather than passed in: a parameter would
     be silently ignored on cache hit, handing a caller with a
     different universe the wrong ranking."""
-    key = table_source_key(spark, sf_dir)
-    if key not in _UNIV_CACHE:
+    def build():
         nodes, edges = get_merged(spark, sf_dir)
         universe = (
             nodes.select("id")
@@ -356,8 +351,9 @@ def _ranked_universe(
             .distinct()
         )
         univ = _global_rank(universe)
-        _UNIV_CACHE[key] = (univ, univ.count())
-    return _UNIV_CACHE[key]
+        return univ, univ.count()
+
+    return artifact(spark, sf_dir, "ranked_universe", build)
 
 
 def _hash_mod(prefix: str, i: "Column", n: int) -> "Column":

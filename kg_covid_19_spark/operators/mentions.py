@@ -98,14 +98,14 @@ class TokenAhoCorasick:
 # Per-executor automaton cache: key → automaton. Built lazily on first batch,
 # reused for the lifetime of the Python worker (the broadcast-dict analog of
 # the reference's load-once dictionaries, string_ppi.py:46-59).
-_AUTOMATON_CACHE: dict[str, TokenAhoCorasick] = {}
+_AUTOMATONS: dict[str, TokenAhoCorasick] = {}
 
 
 def _get_automaton(key: str, entries) -> TokenAhoCorasick:
-    auto = _AUTOMATON_CACHE.get(key)
+    auto = _AUTOMATONS.get(key)
     if auto is None:
         auto = TokenAhoCorasick(entries)
-        _AUTOMATON_CACHE[key] = auto
+        _AUTOMATONS[key] = auto
     return auto
 
 
@@ -137,7 +137,7 @@ class UnigramRegexMatcher:
         return out
 
 
-_MATCHER_CACHE: dict[str, UnigramRegexMatcher] = {}
+_MATCHERS: dict[str, UnigramRegexMatcher] = {}
 
 
 def make_curie_udf(entries: list[tuple[str, str, str, str]] | None = None,
@@ -158,10 +158,10 @@ def make_curie_udf(entries: list[tuple[str, str, str, str]] | None = None,
     if all_unigram:
         @F.pandas_udf(ArrayType(StringType()))
         def detect_curies(text: pd.Series) -> pd.Series:
-            m = _MATCHER_CACHE.get(cache_key)
+            m = _MATCHERS.get(cache_key)
             if m is None:
                 m = UnigramRegexMatcher(entries)
-                _MATCHER_CACHE[cache_key] = m
+                _MATCHERS[cache_key] = m
             return text.map(lambda t: [] if t is None else m.find_curies(t))
 
         return detect_curies

@@ -40,11 +40,6 @@ MAX_GAP = 4  # max connecting tokens between two mentions (ReVerb-lite)
 
 _TOKEN_RE = re.compile(r"[^a-z0-9]+")
 
-TRIPLE_SCHEMA = (
-    "subject string, predicate string, object string"
-)
-
-
 def _extract_doc(text: str, term_to_curie: dict[str, str]
                  ) -> list[tuple[str, str, str]]:
     """Per-document extraction: sentence windows on '.', token-equality

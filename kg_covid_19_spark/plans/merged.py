@@ -12,23 +12,20 @@ from pyspark.sql import functions as F
 
 from ..dictionaries import merged_cte_sql
 from ..operators.merge import graph_stats, merge_edges, merge_nodes, salted_node_fusion
-from ..sources.corpus import register_session_cache, table_source_key
+from ..sources.corpus import artifact
 from ..sources.ontology import ontology_edges, ontology_nodes
 from .pipeline import get_kg
 
-_MERGED_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = register_session_cache({})
-
-
 def get_merged(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    key = table_source_key(spark, sf_dir)
-    if key not in _MERGED_CACHE:
+    def build():
         doc_nodes, doc_edges = get_kg(spark, sf_dir)
         nodes = merge_nodes([doc_nodes, ontology_nodes(spark)]).persist()
         edges = merge_edges([doc_edges, ontology_edges(spark)]).persist()
         nodes.count()
         edges.count()
-        _MERGED_CACHE[key] = (nodes, edges)
-    return _MERGED_CACHE[key]
+        return nodes, edges
+
+    return artifact(spark, sf_dir, "merged", build)
 
 
 def kg_merged_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,8 +107,7 @@ def kg_ego_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     # walk-adjacency lesson: no ReusedExchange across sibling joins,
     # so an unpinned und re-unions and re-distincts the edge list per
     # hop; measured ~2x at sf1)
-    key = (*table_source_key(spark, sf_dir), "ego_und")
-    if key not in _MERGED_CACHE:
+    def build_und():
         # hash-partition the pinned frame on the hop-join key (r7): the
         # distinct leaves it partitioned on (u, v), so BOTH hop joins
         # re-exchanged the full 2|E| frame; partitioned on u the cached
@@ -129,8 +125,9 @@ def kg_ego_export(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).repartition(F.col("u")).distinct().persist()
         u.count()
-        _MERGED_CACHE[key] = u
-    und = _MERGED_CACHE[key]
+        return u
+
+    und = artifact(spark, sf_dir, "ego_und", build_und)
     seeds = F.broadcast(
         nodes.filter(F.col("category") != "biolink:Publication")
         .select(F.col("id").alias("seed"))
@@ -141,8 +138,7 @@ def kg_ego_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the undirected frame above (no ReusedExchange across sibling
     # joins, so an unpinned h1 re-ran the seed⋈und distinct three
     # times). Bounded: Σ deg(seed) pairs, dictionary-scale seeds.
-    h1_key = (*table_source_key(spark, sf_dir), "ego_h1")
-    if h1_key not in _MERGED_CACHE:
+    def build_h1():
         h1p = (
             seeds.join(und, F.col("seed") == F.col("u"))
             .select("seed", F.col("v").alias("node"))
@@ -150,8 +146,9 @@ def kg_ego_export(spark: SparkSession, sf_dir: str) -> DataFrame:
             .persist()
         )
         h1p.count()
-        _MERGED_CACHE[h1_key] = h1p
-    h1 = _MERGED_CACHE[h1_key]
+        return h1p
+
+    h1 = artifact(spark, sf_dir, "ego_h1", build_h1)
     # r7: the old shape shuffled the hop-2 production TWICE — once for
     # its distinct, once more through the anti-join against h1 — before
     # unioning. MIN-hop over (production ∪ h1) is the same set in ONE

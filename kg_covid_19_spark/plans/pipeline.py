@@ -37,12 +37,7 @@ from ..dictionaries import (
 )
 from ..functions.text import extracted_text
 from ..operators.mentions import make_curie_udf
-from ..sources.corpus import (
-    read_table,
-    register_session_cache,
-    table_source_key,
-    web_pages,
-)
+from ..sources.corpus import _scan_layout, artifact, read_table, web_pages
 
 
 def pages_with_mentions(spark: SparkSession, sf_dir: str,
@@ -217,17 +212,13 @@ def build_kg(spark: SparkSession, sf_dir: str,
 
 
 # ---------------------------------------------------------------------------
-# Materialized-graph cache. The reference never queries raw sources — it
+# Materialized graph. The reference never queries raw sources — it
 # queries the *merged artifact* (a Blazegraph journal loaded from merged-kg,
 # Jenkinsfile:126, query.py:8-15). Our equivalent: build the KG once per
-# (session, input), persist node/edge/mention frames, and let every query
-# plan start from the materialized graph. On a cluster this is the Iceberg
-# output table of the merge stage; locally it is a persisted DataFrame.
+# input snapshot as session artifacts (sources/corpus.artifact) and let
+# every query plan start from the materialized graph. On a cluster this
+# is the Iceberg output table of the merge stage.
 # ---------------------------------------------------------------------------
-
-_KG_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = register_session_cache({})
-_MENTION_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-_ARRAY_CACHE: dict[tuple, DataFrame] = register_session_cache({})
 
 
 def pair_expand(curies) -> "F.Column":  # type: ignore[name-defined]
@@ -260,16 +251,13 @@ def _artifact_partitions(spark: SparkSession, sf_dir: str) -> int:
     no-op at 100 TB (count ≥ existing partitions) and collapses only
     cache-read + projection work locally — the mention kernel's own
     parallelism is untouched (its artifact stays at ingest width)."""
-    from ..sources.corpus import _scan_layout
-
     _, nbytes = _scan_layout(spark, sf_dir)
     return max(2, nbytes // (8 << 20))
 
 
 def get_kg(spark: SparkSession, sf_dir: str,
            langs: tuple[str, ...] | None = None) -> tuple[DataFrame, DataFrame]:
-    key = (*table_source_key(spark, sf_dir), langs)
-    if key not in _KG_CACHE:
+    def build():
         n_parts = _artifact_partitions(spark, sf_dir)
         nodes, edges = build_kg(spark, sf_dir, langs)
         nodes = nodes.coalesce(n_parts).persist()
@@ -278,14 +266,14 @@ def get_kg(spark: SparkSession, sf_dir: str,
         # the transform per union branch.
         nodes.count()
         edges.count()
-        _KG_CACHE[key] = (nodes, edges)
-    return _KG_CACHE[key]
+        return nodes, edges
+
+    return artifact(spark, sf_dir, ("kg", langs), build)
 
 
 def get_mentions(spark: SparkSession, sf_dir: str,
                  langs: tuple[str, ...] | None = None) -> DataFrame:
-    key = (*table_source_key(spark, sf_dir), langs)
-    if key not in _MENTION_CACHE:
+    def build():
         # derived from the shared mention-array artifact (r7) — a
         # row-local explode of the cached projection, NOT a second
         # corpus pass through the mention kernel
@@ -297,16 +285,16 @@ def get_mentions(spark: SparkSession, sf_dir: str,
             .persist()
         )
         m.count()
-        _MENTION_CACHE[key] = m
-    return _MENTION_CACHE[key]
+        return m
+
+    return artifact(spark, sf_dir, ("mentions", langs), build)
 
 
 def get_mention_arrays(spark: SparkSession, sf_dir: str,
                        langs: tuple[str, ...] | None = None) -> DataFrame:
     """Materialized (doc_id, curies:array<string>) projection — the compact
     per-document mention set that row-local pair expansion reads from."""
-    key = (*table_source_key(spark, sf_dir), langs)
-    if key not in _ARRAY_CACHE:
+    def build():
         pm = (
             pages_with_mentions(spark, sf_dir, langs)
             .select("doc_id", "curies")
@@ -324,13 +312,12 @@ def get_mention_arrays(spark: SparkSession, sf_dir: str,
         # run the interpreted pair-expansion HOF over each row (~100
         # steps/doc) — at 8 MB/partition the sf1 expansion serialized
         # onto 2 tasks and the incremental family tripled (measured).
-        from ..sources.corpus import _scan_layout
-
         _, nbytes = _scan_layout(spark, sf_dir)
         compact = (
             pm.coalesce(max(2, nbytes // (512 << 10)))
             .localCheckpoint(eager=True)
         )
         pm.unpersist()
-        _ARRAY_CACHE[key] = compact
-    return _ARRAY_CACHE[key]
+        return compact
+
+    return artifact(spark, sf_dir, ("mention_arrays", langs), build)

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..dictionaries import kg_cte_sql, normalized_gazetteer
-from ..sources.corpus import read_table, register_session_cache, table_source_key
+from ..sources.corpus import artifact, read_table
 from .pipeline import (
     get_kg,
     get_mention_arrays,
@@ -82,13 +82,9 @@ def _undirected(cooc: DataFrame) -> DataFrame:
     )
 
 
-_DEG_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-_UND_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-
-
 def _und_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both directions of the co-occurrence edge list, hash-partitioned
-    on ``subject`` and persisted once per (application, source, input).
+    on ``subject`` and persisted once per input (a session artifact).
 
     r7: every iterative graph query (pagerank, BFS, components, label
     propagation, k-core, moments, wedge joins) re-derived this frame
@@ -102,8 +98,7 @@ def _und_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBys reuse outright (guide §2.4: establish the partitioning
     once). The frame is the dictionary-bounded pair set — KB-to-GB at
     any scale, never corpus-sized."""
-    key = (*table_source_key(spark, sf_dir), "und_cooc")
-    if key not in _UND_CACHE:
+    def build():
         _, edges = get_kg(spark, sf_dir)
         und = (
             _undirected(
@@ -115,13 +110,14 @@ def _und_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .persist()
         )
         und.count()
-        _UND_CACHE[key] = und
-    return _UND_CACHE[key]
+        return und
+
+    return artifact(spark, sf_dir, "und_cooc", build)
 
 
 def _cooc_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, deg) of the undirected co-occurrence graph, persisted once
-    per (application, source, input) — five queries (triangles, capped
+    per input (a session artifact) — five queries (triangles, capped
     common-neighbors, jaccard, degree moments, histogram) each need
     this table, and without the cache every one re-runs the union +
     aggregation (triangles three times over, once per self-join arm).
@@ -130,15 +126,15 @@ def _cooc_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge set, countDistinct(object) == count(*) incident edges; the
     distinct form is used so the cache stays correct even if a
     multi-edge source is ever merged in."""
-    key = table_source_key(spark, sf_dir)
-    if key not in _DEG_CACHE:
+    def build():
         und = _und_cooc(spark, sf_dir)
         deg = und.groupBy(F.col("subject").alias("id")).agg(
             F.countDistinct("object").alias("deg")
         ).persist()
         deg.count()
-        _DEG_CACHE[key] = deg
-    return _DEG_CACHE[key]
+        return deg
+
+    return artifact(spark, sf_dir, "cooc_degrees", build)
 
 
 def kg_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -394,10 +390,10 @@ def kg_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     BFS/pagerank release discipline. Bounded rounds keep the oracle an
     unrolled CTE — the convergence-loop form would follow
     components_fixpoint's localCheckpoint pattern."""
-    key = (*table_source_key(spark, sf_dir), "label_propagation")
-    if key not in _ITER_CACHE:
-        _ITER_CACHE[key] = _lp_build(spark, sf_dir)
-    return _ITER_CACHE[key]
+    return artifact(
+        spark, sf_dir, "label_propagation",
+        lambda: _lp_build(spark, sf_dir),
+    )
 
 
 def _lp_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -484,11 +480,10 @@ def kg_label_propagation_fixpoint(
     communities the count-argmax dominates and community structure is
     preserved (barbell pytest). Per-round localCheckpoint(eager) cuts
     lineage — the unbounded-loop discipline."""
-    key = (*table_source_key(spark, sf_dir), "label_propagation_fixpoint")
-    if key not in _ITER_CACHE:
-        und = _und_cooc(spark, sf_dir)
-        _ITER_CACHE[key] = label_propagation_fixpoint_frame(und)
-    return _ITER_CACHE[key]
+    return artifact(
+        spark, sf_dir, "label_propagation_fixpoint",
+        lambda: label_propagation_fixpoint_frame(_und_cooc(spark, sf_dir)),
+    )
 
 
 def label_propagation_fixpoint_frame(und: DataFrame) -> DataFrame:
@@ -686,10 +681,10 @@ def kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     the north-star merge deliberately AVOIDS CC for canonicalization
     (prefix-priority dedup instead) — this is the analytics-side
     component labeling, not the merge path."""
-    key = (*table_source_key(spark, sf_dir), "components")
-    if key not in _ITER_CACHE:
-        _ITER_CACHE[key] = _components_build(spark, sf_dir)
-    return _ITER_CACHE[key]
+    return artifact(
+        spark, sf_dir, "components",
+        lambda: _components_build(spark, sf_dir),
+    )
 
 
 def _components_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -733,11 +728,10 @@ def kg_components_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     is min-reachable-id, which DuckDB computes as a recursive-CTE
     transitive closure — so this query keeps a full value-hash gate,
     unlike sketches."""
-    key = (*table_source_key(spark, sf_dir), "components_fixpoint")
-    if key not in _ITER_CACHE:
-        und = _und_cooc(spark, sf_dir)
-        _ITER_CACHE[key] = components_fixpoint_frame(und)
-    return _ITER_CACHE[key]
+    return artifact(
+        spark, sf_dir, "components_fixpoint",
+        lambda: components_fixpoint_frame(_und_cooc(spark, sf_dir)),
+    )
 
 
 def components_fixpoint_frame(und: DataFrame) -> DataFrame:
@@ -851,10 +845,10 @@ def kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     (edges to surviving endpoints) with the BFS/pagerank persist
     discipline; output is the surviving nodes with their final
     residual degree."""
-    key = (*table_source_key(spark, sf_dir), "kcore")
-    if key not in _ITER_CACHE:
-        _ITER_CACHE[key] = _kcore_build(spark, sf_dir)
-    return _ITER_CACHE[key]
+    return artifact(
+        spark, sf_dir, "kcore",
+        lambda: _kcore_build(spark, sf_dir),
+    )
 
 
 def _kcore_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -896,11 +890,10 @@ def kg_kcore_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark side RAISES if it ever needs more, so the two can never
     silently diverge (the synthetic worst case, a path peeling from
     both ends, is exercised in tests)."""
-    key = (*table_source_key(spark, sf_dir), "kcore_fixpoint")
-    if key not in _ITER_CACHE:
-        und = _und_cooc(spark, sf_dir)
-        _ITER_CACHE[key] = kcore_fixpoint_frame(und, KCORE_K)
-    return _ITER_CACHE[key]
+    return artifact(
+        spark, sf_dir, "kcore_fixpoint",
+        lambda: kcore_fixpoint_frame(_und_cooc(spark, sf_dir), KCORE_K),
+    )
 
 
 def kcore_fixpoint_frame(und: DataFrame, k: int) -> DataFrame:
@@ -1066,20 +1059,17 @@ def _pair_counts(pm: DataFrame) -> DataFrame:
     )
 
 
-_PAIRC_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-
-
 def _cooc_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (subject, object, n_docs) pair-support table, session-cached
     (r7): co-occurrence counts, lift, the walk adjacency and the
     weighted BFS all start from this ≤|dictionary|²-row frame, and each
     re-ran the corpus-wide pair expansion + groupBy without it."""
-    key = table_source_key(spark, sf_dir)
-    if key not in _PAIRC_CACHE:
+    def build():
         pc = _pair_counts(get_mention_arrays(spark, sf_dir)).persist()
         pc.count()
-        _PAIRC_CACHE[key] = pc
-    return _PAIRC_CACHE[key]
+        return pc
+
+    return artifact(spark, sf_dir, "cooc_pair_counts", build)
 
 
 def kg_cooccurrence_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1362,19 +1352,20 @@ def kg_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     kg_walk_skipgrams immediately self-joins; without the cache the
     skip-gram query re-executed the whole unrolled step chain twice
     (once per join arm)."""
-    out_key = (*table_source_key(spark, sf_dir), "walk_corpus")
-    if out_key in _ITER_CACHE:
-        return _ITER_CACHE[out_key]
+    return artifact(
+        spark, sf_dir, "walk_corpus", lambda: _walks_build(spark, sf_dir)
+    )
 
+
+def _walks_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import hash_mod
 
     # the annotated adjacency is referenced once per unrolled step;
     # without pinning it, the corpus-scale pair expansion upstream
     # re-executes WALK_STEPS+1 times (no ReusedExchange across the
-    # step joins) — persist the dictionary-bounded frame once, the
-    # _ITER_CACHE discipline the other iterative queries use
-    key = (*table_source_key(spark, sf_dir), "walk_adjacency")
-    if key not in _ITER_CACHE:
+    # step joins) — persist the dictionary-bounded frame once, as a
+    # session artifact like the other iterative queries' results
+    def build_adjacency():
         und = _cooc_undirected(spark, sf_dir)
         w = Window.partitionBy("u").orderBy("v")
         a = und.select(
@@ -1384,8 +1375,9 @@ def kg_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").over(Window.partitionBy("u")).alias("deg"),
         ).persist()
         a.count()
-        _ITER_CACHE[key] = a
-    adj = _ITER_CACHE[key]
+        return a
+
+    adj = artifact(spark, sf_dir, "walk_adjacency", build_adjacency)
     starts = adj.select("u").distinct()
     frontier = starts.crossJoin(
         spark.range(WALKS_PER_NODE).select(
@@ -1428,7 +1420,6 @@ def kg_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     out = out.persist()
     out.count()
-    _ITER_CACHE[out_key] = out
     return out
 
 
@@ -1480,25 +1471,12 @@ def _cooc_undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BFS_ROUNDS = 3
 
-# final frames of the iterative queries, persisted once per
-# (application, source, input, query) — the get_kg keyed-cache pattern.
-# The loop bodies already unpersist superseded rounds; this bounds the
-# one frame that outlives the loop, so check sweeps that re-invoke
-# these queries reuse the result instead of pinning a fresh copy each
-# time (the cache-accumulation hazard ADVICE r2 flagged).
-# TIMING CAVEAT: a second in-process invocation is a cache hit (~0 s).
-# Any harness that loops the suite in one application must use fresh
-# processes per iteration (as tools/scaling.py does) or its
-# iterative-query timings measure a dict lookup.
-_ITER_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-
-
 def kg_hub_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached wrapper — see _hub_distances_build."""
-    key = (*table_source_key(spark, sf_dir), "hub_distances")
-    if key not in _ITER_CACHE:
-        _ITER_CACHE[key] = _hub_distances_build(spark, sf_dir)
-    return _ITER_CACHE[key]
+    """Session artifact — see _hub_distances_build."""
+    return artifact(
+        spark, sf_dir, "hub_distances",
+        lambda: _hub_distances_build(spark, sf_dir),
+    )
 
 
 def _hub_distances_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1557,11 +1535,11 @@ def _bfs_sql() -> str:
 
 
 def kg_weighted_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached wrapper — see _weighted_distances_build."""
-    key = (*table_source_key(spark, sf_dir), "weighted_distances")
-    if key not in _ITER_CACHE:
-        _ITER_CACHE[key] = _weighted_distances_build(spark, sf_dir)
-    return _ITER_CACHE[key]
+    """Session artifact — see _weighted_distances_build."""
+    return artifact(
+        spark, sf_dir, "weighted_distances",
+        lambda: _weighted_distances_build(spark, sf_dir),
+    )
 
 
 def _weighted_distances_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1812,14 +1790,14 @@ def kg_ktruss_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark side RAISES if it ever needs more — the two can never
     silently diverge (the adversarial case, a triangle strip that
     unravels one triangle per round, is exercised in tests)."""
-    key = (*table_source_key(spark, sf_dir), "ktruss_fixpoint")
-    if key not in _ITER_CACHE:
+    def build():
         _, edges = get_kg(spark, sf_dir)
         e = edges.filter(
             F.col("predicate") == "biolink:correlated_with"
         ).select("subject", "object")
-        _ITER_CACHE[key] = ktruss_fixpoint_frame(e, KTRUSS_K)
-    return _ITER_CACHE[key]
+        return ktruss_fixpoint_frame(e, KTRUSS_K)
+
+    return artifact(spark, sf_dir, "ktruss_fixpoint", build)
 
 
 def ktruss_fixpoint_frame(e: DataFrame, k: int) -> DataFrame:
@@ -2224,11 +2202,11 @@ _PPM = 1_000_000
 
 
 def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached wrapper — see _pagerank_build."""
-    key = (*table_source_key(spark, sf_dir), "pagerank")
-    if key not in _ITER_CACHE:
-        _ITER_CACHE[key] = _pagerank_build(spark, sf_dir)
-    return _ITER_CACHE[key]
+    """Session artifact — see _pagerank_build."""
+    return artifact(
+        spark, sf_dir, "pagerank",
+        lambda: _pagerank_build(spark, sf_dir),
+    )
 
 
 def _rank_update_expr(s_col: str = "s") -> str:
@@ -2311,10 +2289,10 @@ def kg_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism and in the unrolled-CTE oracle; only the base vector
     differs: seeds restart with PR_BASE_PPM, everything else restarts
     with 0, and the initial mass sits on the seeds."""
-    key = (*table_source_key(spark, sf_dir), "pagerank_personalized")
-    if key not in _ITER_CACHE:
-        _ITER_CACHE[key] = _ppr_build(spark, sf_dir)
-    return _ITER_CACHE[key]
+    return artifact(
+        spark, sf_dir, "pagerank_personalized",
+        lambda: _ppr_build(spark, sf_dir),
+    )
 
 
 def _ppr_update_expr(s_col: str = "s") -> str:

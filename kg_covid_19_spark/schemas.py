@@ -8,62 +8,10 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     IntegerType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
-)
-
-# Primary engine input (BASELINE.json input_hint): Iceberg/Parquet table of
-# Common-Crawl-style web pages, partitioned by lang (and days of warc_ts).
-WEB_PAGE_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("warc_ts", TimestampType(), True),
-        StructField("html", BinaryType(), True),
-        StructField("text", StringType(), True),
-        StructField("lang", StringType(), True),
-    ]
-)
-
-# KGX node frame (transform_utils/transform.py:22 + per-source extensions).
-KGX_NODE_SCHEMA = StructType(
-    [
-        StructField("id", StringType(), False),
-        StructField("name", StringType(), True),
-        StructField("category", StringType(), False),
-        StructField("provided_by", StringType(), False),
-    ]
-)
-
-# KGX edge frame (transform_utils/transform.py:23). Dedup key at merge time
-# is (subject, predicate, object, relation) — north_rule.
-KGX_EDGE_SCHEMA = StructType(
-    [
-        StructField("subject", StringType(), False),
-        StructField("predicate", StringType(), False),
-        StructField("object", StringType(), False),
-        StructField("relation", StringType(), True),
-        StructField("provided_by", StringType(), False),
-    ]
-)
-
-GAZETTEER_SCHEMA = StructType(
-    [
-        StructField("term", StringType(), False),
-        StructField("curie", StringType(), False),
-        StructField("name", StringType(), True),
-        StructField("category", StringType(), True),
-    ]
-)
-
-SSSOM_SCHEMA = StructType(
-    [
-        StructField("subject_id", StringType(), False),
-        StructField("object_id", StringType(), True),
-    ]
 )
 
 # Output element type of the mention detector (operators/mentions.py):

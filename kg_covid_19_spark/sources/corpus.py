@@ -5,25 +5,31 @@ Iceberg catalog jars, so path-Parquet is the hermetic fallback; on a real
 cluster `read_table` resolves ``iceberg:<catalog.table>`` names to
 ``spark.read.table`` (partition pruning on lang/warc_ts days comes for free
 either way — both sources expose partition columns to Catalyst).
+
+Every frame derived from these tables that outlives one call is a
+session *artifact* (:func:`artifact`), keyed by its input files.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Callable, Hashable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+T = TypeVar("T")
 
 
 def table_source_key(spark: SparkSession, sf_dir: str) -> tuple:
-    """Cache key for session-level persisted frames derived from the
-    driver tables: (applicationId, RESOLVED SOURCE, sf_dir). The source
-    component matters because read_table's resolution depends on the
-    mutable session conf ``spark.kg.catalog`` — a keyed cache that
-    ignored it would serve frames built from the wrong source after a
-    mid-session catalog toggle (as tests/test_provider.py performs)."""
+    """(applicationId, RESOLVED SOURCE, sf_dir) — the source an artifact
+    is derived from. The source component matters because read_table's
+    resolution depends on the mutable session conf ``spark.kg.catalog``
+    — a key that ignored it would serve frames built from the wrong
+    source after a mid-session catalog toggle (as tests/test_provider.py
+    performs)."""
     try:
         catalog = spark.conf.get("spark.kg.catalog", "") or ""
     except Exception:
@@ -31,48 +37,123 @@ def table_source_key(spark: SparkSession, sf_dir: str) -> tuple:
     return (spark.sparkContext.applicationId, catalog, sf_dir)
 
 
-#: every session-level cache dict keyed by table_source_key (possibly with
-#: extra suffix components) registers itself here so a table REWRITE in the
-#: same session can evict the now-stale persisted frames instead of serving
-#: them for the application lifetime. TableProvider.write calls
-#: invalidate_session_caches after every successful write.
-_SESSION_CACHES: list[dict] = []
-
-
-def register_session_cache(cache: dict) -> dict:
-    """Declare ``cache`` (a dict whose keys start with table_source_key's
-    (applicationId, catalog, sf_dir) triple) as derived from driver
-    tables; returns it for inline use at module scope."""
-    _SESSION_CACHES.append(cache)
-    return cache
-
-
-def _unpersist_value(val) -> None:
-    if isinstance(val, DataFrame):
+def _documents_files(sf_dir: str) -> tuple[tuple[str, int, int], ...]:
+    """Sorted (relative path, size, mtime_ns) of the documents table's
+    data files as Spark's file index sees them: names starting with
+    ``_`` or ``.`` (markers, files still being landed) are skipped and
+    partition directories are recursed. A single-file table lists
+    itself; a missing path lists nothing."""
+    root = f"{sf_dir}/documents.parquet"
+    if os.path.isfile(root):
+        st = os.stat(root)
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    dirs = [""]
+    while dirs:
+        rel = dirs.pop()
         try:
-            val.unpersist(False)
-        except Exception:
-            pass
-    elif isinstance(val, tuple):
-        for v in val:
-            _unpersist_value(v)
+            entries = list(os.scandir(os.path.join(root, rel)))
+        except OSError:
+            continue
+        for e in entries:
+            if e.name.startswith(("_", ".")):
+                continue
+            name = os.path.join(rel, e.name)
+            try:
+                if e.is_dir():
+                    dirs.append(name)
+                else:
+                    st = e.stat()
+                    out.append((name, st.st_size, st.st_mtime_ns))
+            except OSError:
+                continue  # removed while listing
+    return tuple(sorted(out))
+
+
+#: (applicationId, catalog, sf_dir, name) → (fingerprint, value)
+_ARTIFACTS: dict[tuple, tuple] = {}
+_BUILD = threading.RLock()
+
+
+def artifact(spark: SparkSession, sf_dir: str, name: Hashable,
+             build: Callable[[], T]) -> T:
+    """The session artifact ``name`` derived from the tables under
+    ``sf_dir``: returned from the registry while its inputs are
+    unchanged, else ``build()`` — which returns the value already
+    materialized (persisted and counted, or local-checkpointed) — is
+    run and its result kept.
+
+    Keying and release. An entry is keyed by (application, catalog,
+    sf_dir, name) and holds the fingerprint of its inputs: in path mode
+    the sorted (file, size, mtime_ns) list of the documents table's
+    visible data files, in catalog mode ``None`` (there
+    ``TableProvider.write``'s call to :func:`invalidate_session_caches`
+    is the only trigger). A lookup whose fingerprint differs is a miss,
+    and a miss first releases every entry of the same source built from
+    other files: Spark's CacheManager matches a file scan by its root
+    path, so a stale persisted frame would otherwise be substituted
+    into the fresh plans. Releasing unpersists a persisted frame and
+    frees the blocks of the local checkpoints its plan reads from.
+    Misses build under one re-entrant lock with a second lookup inside
+    it, so concurrent callers build an artifact once; hits take no lock.
+
+    Timing caveat: a second call in the same application is a hit that
+    costs a directory listing. A harness that loops the suite in one
+    application must use a fresh process per iteration (as
+    tools/scaling.py does), or its timings of the artifact-backed
+    queries measure a dict lookup.
+
+    Durability: builds that ``localCheckpoint`` (the mention arrays and
+    the iterative graph loops) cut lineage to executor-local blocks. A
+    lost executor, or one removed by dynamic allocation, makes such an
+    artifact unrecoverable until it is rebuilt; a cluster that runs
+    with dynamic allocation should use a reliable ``checkpoint()`` or
+    replicated ``persist`` there instead."""
+    source = table_source_key(spark, sf_dir)
+    fp = None if source[1] else _documents_files(sf_dir)
+    key = (*source, name)
+    hit = _ARTIFACTS.get(key)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    with _BUILD:
+        hit = _ARTIFACTS.get(key)
+        if hit is not None and hit[0] == fp:
+            return hit[1]
+        _release_where(lambda k, f: k[:3] == source and f != fp)
+        value = build()
+        _ARTIFACTS[key] = (fp, value)
+        return value
+
+
+def _release(value) -> None:
+    if isinstance(value, tuple):
+        for v in value:
+            _release(v)
+    elif isinstance(value, DataFrame):
+        value.unpersist(False)
+        leaves = value._jdf.queryExecution().analyzed().collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.nodeName() == "LogicalRDD":
+                leaf.rdd().unpersist(False)
+
+
+def _release_where(pred: Callable[[tuple, object], bool]) -> int:
+    with _BUILD:
+        keys = [k for k, (fp, _) in list(_ARTIFACTS.items()) if pred(k, fp)]
+        for k in keys:
+            _release(_ARTIFACTS.pop(k)[1])
+        return len(keys)
 
 
 def invalidate_session_caches(spark: SparkSession) -> int:
-    """Evict (and unpersist) every registered cache entry belonging to
-    this application. Called by TableProvider.write; conservative
-    (all sources, all sf_dirs for the app) because a catalog-mode write
-    changes what any read_table resolution may return and writes are
-    rare relative to reads. Returns the number of evicted entries."""
+    """Release every artifact of this application and return how many.
+    Called by TableProvider.write; conservative (all sources, all
+    sf_dirs for the app) because a catalog-mode write changes what any
+    read_table resolution may return and writes are rare relative to
+    reads. Path-mode file changes need no call (see :func:`artifact`)."""
     app = spark.sparkContext.applicationId
-    _SCAN_LAYOUT.clear()
-    n = 0
-    for cache in _SESSION_CACHES:
-        for key in list(cache):
-            if isinstance(key, tuple) and key and key[0] == app:
-                _unpersist_value(cache.pop(key))
-                n += 1
-    return n
+    return _release_where(lambda key, _fp: key[0] == app)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -87,39 +168,25 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return TableProvider(spark, sf_dir).read(name)
 
 
-# sf_dir → (scan split count, raw bytes), memoized: the .rdd conversion
-# previously used to probe splits costs ~1s of driver time per call.
-# Cleared by invalidate_session_caches, since a rewrite changes the files.
-_SCAN_LAYOUT: dict[str, tuple[int, int]] = {}
-
-
 def _scan_layout(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
     """(estimated scan splits, total file bytes) for the documents table.
 
     r7: splits are estimated from file sizes with the scan-packing
     formula (maxPartitionBytes + openCostInBytes per file, guide §6)
     instead of a .rdd conversion — the conversion costs ~1 s of driver
-    time and it landed inside the timed KG build. Falls back to the
-    exact probe for non-path sources."""
-    cached = _SCAN_LAYOUT.get(sf_dir)
-    if cached is None:
-        path = f"{sf_dir}/documents.parquet"
-        try:
-            sizes = [
-                os.path.getsize(os.path.join(path, f))
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ] if os.path.isdir(path) else [os.path.getsize(path)]
-            conf = spark._jsparkSession.sessionState().conf()
-            max_bytes = conf.filesMaxPartitionBytes()
-            open_cost = conf.filesOpenCostInBytes()
-            total = sum(s + open_cost for s in sizes)
-            cached = (max(1, -(-total // max_bytes)), sum(sizes))
-        except OSError:
-            n = spark.read.parquet(path).rdd.getNumPartitions()
-            cached = (n, 0)
-        _SCAN_LAYOUT[sf_dir] = cached
-    return cached
+    time and it landed inside the timed KG build. The sizes come from
+    the listing the artifact fingerprint uses; a source with no files
+    under ``sf_dir`` (a catalog table) uses the planner's size estimate
+    as one file."""
+    sizes = [size for _, size, _ in _documents_files(sf_dir)]
+    if not sizes:
+        plan = read_table(spark, sf_dir, "documents")._jdf.queryExecution()
+        sizes = [int(str(plan.optimizedPlan().stats().sizeInBytes()))]
+    conf = spark._jsparkSession.sessionState().conf()
+    max_bytes = conf.filesMaxPartitionBytes()
+    open_cost = conf.filesOpenCostInBytes()
+    total = sum(s + open_cost for s in sizes)
+    return max(1, -(-total // max_bytes)), sum(sizes)
 
 
 def _scan_partitions(spark: SparkSession, sf_dir: str) -> int:

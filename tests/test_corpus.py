@@ -1,7 +1,10 @@
 """Scan-layout estimate for the documents table (sources/corpus.py):
-byte-size settings parse, and a rewrite plus invalidation is seen."""
+byte-size settings parse, only the files Spark reads are counted, and a
+rewrite is seen with or without an invalidation."""
 
 from __future__ import annotations
+
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -10,6 +13,7 @@ from kg_covid_19_spark.sources.corpus import (
     _scan_layout,
     invalidate_session_caches,
 )
+from kg_covid_19_spark.sources.provider import TableProvider
 
 
 def _write_part(sf_dir, n: int) -> int:
@@ -36,9 +40,52 @@ def test_scan_layout_reads_byte_size_conf(spark, tmp_path):
     assert splits == 1
 
 
+def test_scan_layout_counts_only_files_spark_reads(spark, tmp_path):
+    """Partition directories are recursed and hidden files (a part file
+    still being landed) are skipped, as Spark's file index does."""
+    docs = spark.createDataFrame(
+        [(i, f"text {i}", ("en", "de", "fr")[i % 3]) for i in range(30)],
+        "doc_id long, text string, lang string",
+    )
+    TableProvider(spark, str(tmp_path)).write(
+        docs, "documents", partition_by=("lang",)
+    )
+    root = tmp_path / "documents.parquet"
+    pq.write_table(pa.table({"doc_id": [0]}), root / ".part-landing.parquet")
+    read = spark.read.parquet(str(root)).inputFiles()
+    want = sum(os.path.getsize(f.removeprefix("file:")) for f in read)
+    assert len(read) >= 3 and want > 0
+    assert _scan_layout(spark, str(tmp_path))[1] == want
+
+
 def test_invalidate_refreshes_scan_layout(spark, tmp_path):
-    first = _write_part(tmp_path, 0)
-    assert _scan_layout(spark, str(tmp_path))[1] == first
-    second = _write_part(tmp_path, 1)
-    invalidate_session_caches(spark)
-    assert _scan_layout(spark, str(tmp_path))[1] == first + second
+    """A new part file is seen after an invalidation, and without one."""
+    for invalidate in (True, False):
+        sf = tmp_path / str(invalidate)
+        first = _write_part(sf, 0)
+        assert _scan_layout(spark, str(sf))[1] == first
+        second = _write_part(sf, 1)
+        if invalidate:
+            invalidate_session_caches(spark)
+        assert _scan_layout(spark, str(sf))[1] == first + second
+
+
+def test_scan_layout_of_catalog_table_has_bytes(spark, tmp_path):
+    """With no files under sf_dir (a catalog table), the layout comes
+    from the planner's size estimate instead of reporting 0 bytes."""
+    from kg_covid_19_spark.sources.provider import CATALOG_CONF
+
+    docs = spark.createDataFrame(
+        [(i, f"text {i}") for i in range(30)], "doc_id long, text string"
+    )
+    spark.sql("DROP TABLE IF EXISTS spark_catalog.default.documents")
+    prov = TableProvider(spark, str(tmp_path), catalog="spark_catalog")
+    prov.write(docs, "documents")
+    spark.conf.set(CATALOG_CONF, "spark_catalog")
+    try:
+        read = prov.read("documents").inputFiles()
+        want = sum(os.path.getsize(f.removeprefix("file:")) for f in read)
+        assert _scan_layout(spark, str(tmp_path)) == (1, want)
+    finally:
+        spark.conf.unset(CATALOG_CONF)
+        spark.sql("DROP TABLE IF EXISTS spark_catalog.default.documents")

@@ -18,6 +18,7 @@ evidence artifact. Any other query with no oracle is a failure.
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 from decimal import Decimal
@@ -58,6 +59,21 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
     return h.hexdigest()[:16]
 
 
+def _scan(path: str) -> str:
+    """DuckDB scan of one Parquet table: a single file, or a directory
+    of part files read as Spark reads it (partition directories
+    recursed, names starting with ``_`` or ``.`` skipped)."""
+    if not os.path.isdir(path):
+        return f"read_parquet('{path}')"
+    hidden = ("_", ".")
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(hidden)]
+        files += [os.path.join(root, f) for f in names
+                  if not f.startswith(hidden)]
+    return f"read_parquet({sorted(files)!r}, hive_partitioning = true)"
+
+
 def main() -> int:
     args = sys.argv[1:]
     json_out = None
@@ -87,10 +103,9 @@ def main() -> int:
     con.execute("SET temp_directory='/tmp/duckdb_oracle_spill'")
     con.execute("SET max_temp_directory_size='120GiB'")
     for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(path):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM {_scan(path)}")
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
