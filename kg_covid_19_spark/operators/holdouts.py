@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.corpus import artifact
+from ..sources.corpus import artifact, local_frame
 from ..functions.hashing import hash_mod_sql as _hash_mod_sql
 from ..plans.merged import get_merged
 
@@ -317,9 +317,7 @@ def _global_rank(df: DataFrame, n_parts: int = 32) -> DataFrame:
         acc += counts[pid]
     spark = df.sparkSession
     off_df = F.broadcast(
-        spark.createDataFrame(
-            [(p, o) for p, o in offsets.items()], "pid int, off long"
-        )
+        local_frame(spark, list(offsets.items()), "pid int, off long")
     )
     out = (
         local.join(off_df, "pid")

@@ -37,7 +37,13 @@ from ..dictionaries import (
 )
 from ..functions.text import extracted_text
 from ..operators.mentions import make_curie_udf
-from ..sources.corpus import _scan_layout, artifact, read_table, web_pages
+from ..sources.corpus import (
+    _scan_layout,
+    artifact,
+    local_frame,
+    read_table,
+    web_pages,
+)
 
 
 def pages_with_mentions(spark: SparkSession, sf_dir: str,
@@ -117,7 +123,8 @@ def gazetteer_nodes(spark: SparkSession) -> DataFrame:
     """Canonical (curie, name, category) — one row per canonical CURIE,
     min-resolved over gazetteer entries that collapse onto it (the
     connected-component-free prefix/lexicographic dedup of the north rule)."""
-    gaz = spark.createDataFrame(
+    gaz = local_frame(
+        spark,
         normalized_gazetteer(),
         "term string, curie string, name string, category string",
     )

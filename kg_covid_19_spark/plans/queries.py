@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..dictionaries import kg_cte_sql, normalized_gazetteer
-from ..sources.corpus import artifact, read_table
+from ..sources.corpus import artifact, local_frame, read_table
 from .pipeline import (
     get_kg,
     get_mention_arrays,
@@ -623,7 +623,7 @@ def kg_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("via"), F.col("deg").alias("via_deg")
     )
     ln_tab = F.broadcast(
-        spark.createDataFrame(_ln_ppm_table(), "via_deg long, ln_ppm long")
+        local_frame(spark, _ln_ppm_table(), "via_deg long, ln_ppm long")
     )
     a = und.select(F.col("subject").alias("x"), F.col("object").alias("via"))
     b = und.select(F.col("subject").alias("y"), F.col("object").alias("via"))
@@ -2081,7 +2081,8 @@ def kg_linked_mentions_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-semantics DuckDB oracle is unchanged). The argmin is a
     partial-agg min over a struct key and is insensitive to the
     duplicate candidates multiple shared block keys produce."""
-    gaz = spark.createDataFrame(
+    gaz = local_frame(
+        spark,
         normalized_gazetteer(),
         "term string, curie string, name string, category string",
     ).select("term", "curie")

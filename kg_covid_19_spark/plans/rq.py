@@ -15,6 +15,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.corpus import local_frame
+
 # reference queries/<file> → our DataFrame plan (plans/queries.py)
 RQ_TO_PLAN = {
     "query-01-bl-cat-counts.rq": "kg_category_counts",
@@ -72,7 +74,7 @@ def result_bindings_to_df(spark: SparkSession, result_dict: dict) -> DataFrame:
         )
         for row in result_dict["results"]["bindings"]
     ]
-    return spark.createDataFrame(rows, ", ".join(f"`{c}` string" for c in cols))
+    return local_frame(spark, rows, ", ".join(f"`{c}` string" for c in cols))
 
 
 def result_dict_to_tsv(result_dict: dict, outfile: str) -> None:

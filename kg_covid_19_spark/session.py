@@ -8,7 +8,10 @@ test scale:
   with AQE plus explicit salting in the canonicalization groupBy
   (operators/merge.py).
 * Arrow execution for pandas UDFs — every custom kernel in this engine is
-  Arrow-batched; row-at-a-time Python UDFs are banned.
+  Arrow-batched; row-at-a-time Python UDFs are banned. Driver-side
+  constant frames (gazetteer, SSSOM map, offsets) cross to the JVM as
+  Arrow tables too (``sources.corpus.local_frame``), so they plan as
+  ``LocalRelation``s and no job starts Python workers to read them.
 * UTC session timezone — required for DuckDB-oracle comparability and, at
   scale, for deterministic partition pruning on timestamp columns.
 * shuffle.partitions is a knob: ~cores locally, thousands on a cluster.

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from .corpus import local_frame
+
 SOURCE = "ChEMBL"
 SUBSET = "SARS-CoV-2 subset"
 PROVIDED_BY = f"{SOURCE} {SUBSET}"
@@ -247,7 +249,7 @@ def chembl_transform(spark: SparkSession, files: dict[str, str],
         )
         for curie, name in taxa.items()
     ]
-    taxon_nodes = spark.createDataFrame(taxon_rows, _schema(NODE_COLS))
+    taxon_nodes = local_frame(spark, taxon_rows, _schema(NODE_COLS))
 
     nodes = molecules.unionByName(assays).unionByName(documents).unionByName(
         taxon_nodes

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.curie import guess_bl_category
+from .corpus import local_frame
 
 SOURCE = "sars_cov_2_gene_annot"
 
@@ -163,9 +164,7 @@ def synonym_overlap(
             (i, line.replace("\n", "").split(", "))
             for i, line in enumerate(fh)
         ]
-    scholar = spark.createDataFrame(
-        scholar_rows, "line_id int, names array<string>"
-    )
+    scholar = local_frame(spark, scholar_rows, "line_id int, names array<string>")
     hits = (
         scholar.select("line_id", F.explode("names").alias("gene_name"))
         .groupBy("gene_name")

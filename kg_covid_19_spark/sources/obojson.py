@@ -44,6 +44,7 @@ from pyspark.sql.types import (
 
 from ..dictionaries import SSSOM_MAP
 from ..functions.curie import content_edge_id, guess_bl_category
+from .corpus import local_frame
 
 _SYN = StructType(
     [StructField("val", StringType()), StructField("pred", StringType())]
@@ -200,9 +201,7 @@ def chebi_mapping_extras(
     iri points at the DrugCentral drugcard. The SSSOM map is broadcast
     and the node side is semi-joined — no ontology-wide shuffle."""
     if sssom is None:
-        sssom = spark.createDataFrame(
-            SSSOM_MAP, "subject_id string, object_id string"
-        )
+        sssom = local_frame(spark, SSSOM_MAP, "subject_id string, object_id string")
     sssom = F.broadcast(sssom.filter(F.col("object_id") != ""))
     mapped = chebi_nodes.select("id").join(
         sssom, F.col("id") == F.col("subject_id")

@@ -25,6 +25,7 @@ from ..dictionaries import (
 )
 from ..functions.curie import content_edge_id, guess_bl_category
 from ..plans.pipeline import gazetteer_nodes
+from .corpus import local_frame
 
 
 def ontology_nodes(spark: SparkSession) -> DataFrame:
@@ -34,7 +35,7 @@ def ontology_nodes(spark: SparkSession) -> DataFrame:
         "category",
         F.lit(ONTO_PROVIDED_BY).alias("provided_by"),
     )
-    sssom = spark.createDataFrame(SSSOM_MAP, "subject_id string, object_id string")
+    sssom = local_frame(spark, SSSOM_MAP, "subject_id string, object_id string")
     xref = sssom.select(F.col("subject_id").alias("id")).distinct().select(
         "id",
         F.lit(None).cast("string").alias("name"),
@@ -45,7 +46,7 @@ def ontology_nodes(spark: SparkSession) -> DataFrame:
 
 
 def ontology_edges(spark: SparkSession) -> DataFrame:
-    sssom = spark.createDataFrame(SSSOM_MAP, "subject_id string, object_id string")
+    sssom = local_frame(spark, SSSOM_MAP, "subject_id string, object_id string")
     return sssom.select(
         F.col("subject_id").alias("subject"),
         F.lit(SAME_AS_PREDICATE).alias("predicate"),

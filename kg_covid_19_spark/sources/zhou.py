@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .corpus import local_frame
+
 SOURCE = "zhou_host_proteins"
 
 ZHOU_NODE_COLS = ["id", "name", "category", "provided_by"]
@@ -244,9 +246,7 @@ def read_pdf_tables(spark: SparkSession, pdf_path: str,
     fitted = [
         tuple((row + [None] * len(header))[: len(header)]) for row in data
     ]
-    return spark.createDataFrame(
-        fitted, ", ".join(f"`{c}` string" for c in header)
-    )
+    return local_frame(spark, fitted, ", ".join(f"`{c}` string" for c in header))
 
 
 def zhou_transform(spark: SparkSession, rows: DataFrame

@@ -1,6 +1,8 @@
-"""Scan-layout estimate for the documents table (sources/corpus.py):
-byte-size settings parse, only the files Spark reads are counted, and a
-rewrite is seen with or without an invalidation."""
+"""Table helpers of sources/corpus.py. Scan-layout estimate for the
+documents table: byte-size settings parse, only the files Spark reads
+are counted, and a rewrite is seen with or without an invalidation.
+``local_frame``: the same schema and rows as ``createDataFrame(list)``,
+read from a LocalRelation."""
 
 from __future__ import annotations
 
@@ -8,10 +10,13 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
+from kg_covid_19_spark.plans.rq import result_bindings_to_df
 from kg_covid_19_spark.sources.corpus import (
     _scan_layout,
     invalidate_session_caches,
+    local_frame,
 )
 from kg_covid_19_spark.sources.provider import TableProvider
 
@@ -89,3 +94,32 @@ def test_scan_layout_of_catalog_table_has_bytes(spark, tmp_path):
     finally:
         spark.conf.unset(CATALOG_CONF)
         spark.sql("DROP TABLE IF EXISTS spark_catalog.default.documents")
+
+
+def _leaf_names(df) -> set[str]:
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return {leaves.apply(i).nodeName() for i in range(leaves.size())}
+
+
+@pytest.mark.parametrize("rows, ddl", [
+    ([("a", 1, 2**40, ["x", None]), (None, None, None, None),
+      ("c", -3, 4, [])],
+     "s string, i int, l long, a array<string>"),
+    ([], "s string, i int, l long, a array<string>"),
+    ([], "`?s` string, `?o` string"),  # rq bindings, no results
+    ([], "pid int, off long"),  # holdout offsets, no partitions
+])
+def test_local_frame_matches_create_dataframe(spark, rows, ddl):
+    got = local_frame(spark, rows, ddl)
+    want = spark.createDataFrame(rows, ddl)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    assert _leaf_names(got) == {"LocalRelation"}
+
+
+def test_result_bindings_without_rows_keep_columns(spark):
+    df = result_bindings_to_df(
+        spark, {"head": {"vars": ["s", "o"]}, "results": {"bindings": []}}
+    )
+    assert df.columns == ["s", "o"]
+    assert df.collect() == []

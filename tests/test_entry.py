@@ -1,12 +1,15 @@
 """Import-graph guard for the package and the query registry: every
 module imports (so a dangling import of a removed module fails here,
-without a Spark session) and every registered query has an oracle
-unless it is a declared rows-only sketch."""
+without a Spark session), every registered query has an oracle unless
+it is a declared rows-only sketch, and driver-side constant frames are
+built by one helper."""
 
 from __future__ import annotations
 
+import ast
 import importlib
 import pkgutil
+from pathlib import Path
 
 import kg_covid_19_spark
 
@@ -29,3 +32,24 @@ def test_every_query_has_an_oracle():
     queries, oracles = set(entry.queries()), set(entry.oracle_sql())
     assert oracles <= queries, sorted(oracles - queries)
     assert queries - oracles == entry.ROWS_ONLY, sorted(queries - oracles)
+
+
+def test_only_local_frame_calls_create_dataframe():
+    """``createDataFrame(<python list>)`` plans a pickled PythonRDD whose
+    every read starts Python workers; constants go through
+    ``sources.corpus.local_frame`` (an Arrow-built LocalRelation)."""
+    root = Path(kg_covid_19_spark.__file__).parent
+    calls, helper = [], None
+    for path in sorted(root.rglob("*.py")):
+        rel = str(path.relative_to(root))
+        for node in ast.walk(ast.parse(path.read_text(), rel)):
+            if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
+                helper = (rel, node.lineno, node.end_lineno)
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "createDataFrame"):
+                calls.append((rel, node.lineno))
+    assert helper is not None and helper[0] == "sources/corpus.py"
+    outside = [c for c in calls
+               if c[0] != helper[0] or not helper[1] <= c[1] <= helper[2]]
+    assert outside == [], outside

@@ -191,48 +191,6 @@ def test_aqe_splits_planted_hub_skew(spark):
                 spark.conf.set(k, v)
 
 
-def test_runtime_bloom_filter_prunes_fact_side(spark):
-    """Runtime bloom-filter injection — the engine's semi-join
-    reduction for selective dim filters on a fact-fact join, the
-    100-TB lever that cuts the big-side shuffle before it happens.
-    With the creation-side under threshold, the executed plan must
-    carry a bloom filter applied to the fact scan side
-    (might_contain) — executed evidence like the AQE-skew and
-    broadcast assertions, not an enabled-flag assertion."""
-    confs = {
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold":
-            "10MB",
-        "spark.sql.optimizer.runtime.bloomFilter."
-        "applicationSideScanSizeThreshold": "1KB",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    saved = {}
-    for k, v in confs.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-        o = spark.read.parquet(f"{SF_DIR}/orders.parquet").filter(
-            "o_orderpriority = '1-URGENT'"
-        )
-        j = li.join(o, li.l_orderkey == o.o_orderkey).selectExpr(
-            "count(*) AS n"
-        )
-        assert j.collect()[0]["n"] > 0
-        plan = _executed_plan(j)
-        assert "might_contain" in plan, plan
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 def test_range_join_is_banded_equi_join(spark):
     """The batch range join must execute as the banded EQUI-join
     (hash-joinable bucket keys), never a BroadcastNestedLoopJoin /
@@ -414,3 +372,20 @@ def test_random_walks_read_pinned_adjacency(spark):
     n_mem = plan.count("InMemoryTableScan")
     assert n_mem >= WALK_STEPS + 1, plan
     assert "CartesianProduct" not in plan
+
+
+def test_dictionary_frames_are_local_relations(spark):
+    """The gazetteer and the ontology source's frames are driver-side
+    constants: their analyzed plans must read only ``LocalRelation``
+    leaves. A ``LogicalRDD`` leaf is a pickled PythonRDD, which starts
+    Python worker tasks in every job that reads the constant."""
+    from kg_covid_19_spark.plans.pipeline import gazetteer_nodes
+    from kg_covid_19_spark.sources.ontology import (
+        ontology_edges,
+        ontology_nodes,
+    )
+
+    for build in (gazetteer_nodes, ontology_nodes, ontology_edges):
+        leaves = build(spark)._jdf.queryExecution().analyzed().collectLeaves()
+        names = {leaves.apply(i).nodeName() for i in range(leaves.size())}
+        assert names == {"LocalRelation"}, (build.__name__, names)
