@@ -428,10 +428,10 @@ def doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dedup_clusters_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup DELIVERABLE the pair list feeds: near-duplicate
     CLUSTERS with a canonical survivor per cluster — hash-min label
-    propagation (the kg_components plan) over the verified Jaccard
-    pair graph, CLUSTER_ROUNDS bounded rounds (near-dup components are
-    short chains; production iterates the same per-round plan to
-    fixpoint). Output: every clustered doc with its cluster label
+    propagation (the per-round plan of kg_components_fixpoint) over the
+    verified Jaccard pair graph, CLUSTER_ROUNDS bounded rounds (near-dup
+    components are short chains; production iterates the same
+    per-round plan to fixpoint). Output: every clustered doc with its cluster label
     (= min doc_id in its component) and an is_survivor flag — filter
     survivors ∪ unclustered docs to materialize the deduped corpus.
     Deterministic: min over integer ids, no RNG."""

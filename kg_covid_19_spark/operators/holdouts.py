@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.corpus import artifact, local_frame
+from ..sources.corpus import _release, artifact, local_frame
 from ..functions.hashing import hash_mod_sql as _hash_mod_sql
 from ..plans.merged import get_merged
 
@@ -151,6 +151,9 @@ def spanning_forest_hashes(edges_h: DataFrame) -> DataFrame:
         .cast("int")
         .alias("d"),
     ).localCheckpoint(eager=True)
+    # each superseded checkpoint is released as soon as its successor is
+    # materialized, so only the returned forest stays pinned
+    _release(comp)
     for _ in range(FOREST_BFS_UNROLL):
         nbr = (
             und.join(dist, und.b == dist.id)
@@ -180,6 +183,7 @@ def spanning_forest_hashes(edges_h: DataFrame) -> DataFrame:
             .filter(~F.col("d").eqNullSafe(F.col("old")))
             .count()
         )
+        _release(dist)
         dist = new
         if changed == 0:
             break
@@ -201,6 +205,7 @@ def spanning_forest_hashes(edges_h: DataFrame) -> DataFrame:
         .distinct()
     )
     out = forest.localCheckpoint(eager=True)
+    _release(dist)
     und.unpersist()
     return out
 
@@ -422,7 +427,8 @@ FOREST_CC_UNROLL = 64  # == queries.CC_FIXPOINT_MAX_ROUNDS (Spark raises past)
 def _forest_dist_sql() -> str:
     """Unrolled hash-min component rounds + multi-source-BFS
     min-relaxation chain (all MATERIALIZED — every c{k}/d{k} is
-    referenced twice per round, the LP/kcore inlining hazard) ending
+    referenced twice per round, so default CTE inlining would expand
+    the chain exponentially) ending
     in the spanning-forest hash set.
 
     Components are UNROLLED hash-min rounds, NOT a recursive-CTE
@@ -432,7 +438,8 @@ def _forest_dist_sql() -> str:
     corpus-sized merged graph (measured 71 GB RSS before the run was
     killed). Hash-min is |V| rows per round × 64 rounds, equals the
     fixpoint whenever it converges within the unroll (idempotent), and
-    the Spark side raises past the same cap — the kcore contract.
+    the Spark side raises past the same cap, so the two never
+    silently diverge.
     Shares the exact CASE null-handling with the Spark BFS loop so
     neither engine depends on its least()-vs-NULL convention."""
     parts = [

@@ -122,14 +122,20 @@ def web_extract_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def gazetteer_nodes(spark: SparkSession) -> DataFrame:
     """Canonical (curie, name, category) — one row per canonical CURIE,
     min-resolved over gazetteer entries that collapse onto it (the
-    connected-component-free prefix/lexicographic dedup of the north rule)."""
-    gaz = local_frame(
+    connected-component-free prefix/lexicographic dedup of the north rule).
+
+    The min is taken here on the driver, so the frame is a plain
+    ``LocalRelation`` and every plan that joins it carries no exchange
+    or aggregate for it. Python ``str`` order is code-point order, the
+    same order Spark's ``min`` gives UTF-8 strings."""
+    best: dict[str, tuple[str, str]] = {}
+    for _term, curie, name, cat in normalized_gazetteer():
+        n, c = best.get(curie, (name, cat))
+        best[curie] = (min(n, name), min(c, cat))
+    return local_frame(
         spark,
-        normalized_gazetteer(),
-        "term string, curie string, name string, category string",
-    )
-    return gaz.groupBy("curie").agg(
-        F.min("name").alias("name"), F.min("category").alias("category")
+        [(curie, n, c) for curie, (n, c) in sorted(best.items())],
+        "curie string, name string, category string",
     )
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..dictionaries import kg_cte_sql, normalized_gazetteer
-from ..sources.corpus import artifact, local_frame, read_table
+from ..sources.corpus import _release, artifact, local_frame, read_table
 from .pipeline import (
     get_kg,
     get_mention_arrays,
@@ -86,12 +86,12 @@ def _und_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both directions of the co-occurrence edge list, hash-partitioned
     on ``subject`` and persisted once per input (a session artifact).
 
-    r7: every iterative graph query (pagerank, BFS, components, label
-    propagation, k-core, moments, wedge joins) re-derived this frame
-    from the persisted KGX edge union EACH ROUND — at 32 shuffle
-    partitions per branch that was ~130 scan tasks per round and the
-    dominant cost of the whole family at bench scale (measured: 110
-    stages / 8855 tasks for one 3-round BFS). One keyed exchange here
+    r7: every iterative graph query (pagerank, BFS, components, the
+    hop joins) re-derived this frame from the persisted KGX edge
+    union EACH ROUND — at 32 shuffle partitions per branch that was
+    ~130 scan tasks per round and the dominant cost of the whole
+    family at bench scale (measured: 110 stages / 8855 tasks for one
+    3-round BFS). One keyed exchange here
     (partition count = spark.sql.shuffle.partitions, the cluster knob,
     then AQE-coalesced by size) and every round reads a compact cached
     frame whose hashpartitioning(subject) the per-round joins and
@@ -117,10 +117,10 @@ def _und_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cooc_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, deg) of the undirected co-occurrence graph, persisted once
-    per input (a session artifact) — five queries (triangles, capped
-    common-neighbors, jaccard, degree moments, histogram) each need
-    this table, and without the cache every one re-runs the union +
-    aggregation (triangles three times over, once per self-join arm).
+    per input (a session artifact) — triangles, the clustering
+    coefficient and the degree histogram each need this table, and
+    without the cache every one re-runs the union + aggregation
+    (triangles three times over, once per self-join arm).
     The frame is |V| ≤ |dictionary| rows — broadcast-sized here,
     bounded by the entity vocabulary at any scale. On the distinct-pair
     edge set, countDistinct(object) == count(*) incident edges; the
@@ -151,422 +151,6 @@ def kg_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def kg_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link-prediction primitive over the co-occurrence graph: entity
-    pairs ranked by common-neighbor count (triangle-style J12 extension
-    — the self-join shuffles once on the shared-neighbor key and AQE
-    handles the hub-key skew). Pairs with ≥2 common neighbors."""
-    und = _und_cooc(spark, sf_dir)
-    a = und.select(F.col("subject").alias("x"), F.col("object").alias("via"))
-    b = und.select(F.col("subject").alias("y"), F.col("object").alias("via"))
-    return (
-        a.join(b, "via")
-        .filter(F.col("x") < F.col("y"))
-        .groupBy("x", "y")
-        .agg(F.countDistinct("via").alias("n_common"))
-        .filter(F.col("n_common") >= 2)
-    )
-
-
-VIA_DEGREE_CAP = 50
-
-
-def kg_common_neighbors_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Common-neighbor counts THROUGH LOW-DEGREE NEIGHBORS ONLY
-    (deg(via) ≤ VIA_DEGREE_CAP) — the honest 100× form of the wedge
-    join on a power-law graph (SCALE.md ceiling note): the candidate
-    set is inherently d² pairs per shared neighbor, so a degree-d hub
-    contributes d² wedge rows no ordering can remove. Capping the via
-    degree bounds every neighbor's contribution at CAP² while staying
-    EXACT for the long tail, which is where the link-prediction signal
-    lives (a neighbor shared by everyone discriminates nothing — the
-    same reasoning as Adamic-Adar's 1/log(deg) downweight taken to its
-    limit). Deterministic: the cap is a pure degree predicate."""
-    und = _und_cooc(spark, sf_dir)
-    low = (
-        _cooc_degrees(spark, sf_dir)
-        .filter(F.col("deg") <= VIA_DEGREE_CAP)
-        .select(F.col("id").alias("via"))
-    )
-    a = und.select(F.col("subject").alias("x"), F.col("object").alias("via"))
-    b = und.select(F.col("subject").alias("y"), F.col("object").alias("via"))
-    return (
-        a.join(low, "via")  # prune hubs BEFORE the wedge self-join
-        .join(b, "via")
-        .filter(F.col("x") < F.col("y"))
-        .groupBy("x", "y")
-        .agg(F.countDistinct("via").alias("n_common"))
-        .filter(F.col("n_common") >= 2)
-    )
-
-
-def kg_jaccard_link_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link-prediction scoring: Jaccard of neighbor sets per candidate
-    pair, in exact integer ppm (|N(x)∩N(y)| · 10⁶ div |N(x)∪N(y)| —
-    float division would hash-diverge on engine rounding). Builds on
-    the common-neighbors join; degrees come from one dictionary-bounded
-    aggregation and join back on the pair endpoints."""
-    und = _und_cooc(spark, sf_dir)
-    deg = _cooc_degrees(spark, sf_dir)
-    a = und.select(F.col("subject").alias("x"), F.col("object").alias("via"))
-    b = und.select(F.col("subject").alias("y"), F.col("object").alias("via"))
-    common = (
-        a.join(b, "via")
-        .filter(F.col("x") < F.col("y"))
-        .groupBy("x", "y")
-        .agg(F.countDistinct("via").alias("n_common"))
-        .filter(F.col("n_common") >= 2)
-    )
-    dx = deg.select(F.col("id").alias("x"), F.col("deg").alias("deg_x"))
-    dy = deg.select(F.col("id").alias("y"), F.col("deg").alias("deg_y"))
-    return (
-        common.join(dx, "x")
-        .join(dy, "y")
-        .select(
-            "x",
-            "y",
-            "n_common",
-            F.expr(
-                "CAST(n_common * 1000000L div (deg_x + deg_y - n_common) "
-                "AS LONG)"
-            ).alias("jaccard_ppm"),
-        )
-    )
-
-
-NBR_MH_SEEDS = 8   # minhash components per neighbor-set signature
-NBR_MH_BANDS = 4   # bands of 2 → candidates share any band
-
-
-def kg_jaccard_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Neighbor-set similarity by MINHASH SKETCH — the hub-scale path
-    SCALE.md's common-neighbors ceiling promises ("or a sketch (minhash
-    of neighbor sets)"), shipped as code: the exact wedge join is
-    inherently Σdeg² through shared neighbors, while the sketch costs
-    one dictionary-bounded aggregation per node (8 min(md5) partial
-    aggs — a hub's million-edge neighbor list collapses map-side to
-    ONE signature row) plus an LSH band join on signature fragments,
-    independent of degree.
-
-    Fully oracle-pairable, unlike most sketches: permutation-minhash
-    via lexicographic min(md5(seed || ':' || neighbor)) is
-    deterministic and engine-identical, and the similarity estimate
-    (matching components · 10⁶ div seeds) is exact-integer — the
-    accuracy-vs-exact-Jaccard bracket lives in pytest, while the
-    cross-engine hash gates the construction itself."""
-    und = _und_cooc(spark, sf_dir)
-    sigs = und.groupBy(F.col("subject").alias("id")).agg(
-        *[
-            F.min(
-                F.md5(F.concat(F.lit(f"{s}:"), F.col("object")))
-            ).alias(f"h{s}")
-            for s in range(NBR_MH_SEEDS)
-        ]
-    )
-    width = NBR_MH_SEEDS // NBR_MH_BANDS
-    band_keys = [
-        F.concat_ws(
-            "|",
-            F.lit(str(b)),
-            *[F.col(f"h{b * width + j}") for j in range(width)],
-        )
-        for b in range(NBR_MH_BANDS)
-    ]
-    kx = sigs.select(
-        "id", F.explode(F.array(*band_keys)).alias("bk")
-    )
-    cand = (
-        kx.select(F.col("id").alias("x"), "bk")
-        .join(kx.select(F.col("id").alias("y"), "bk"), "bk")
-        .filter(F.col("x") < F.col("y"))
-        .select("x", "y")
-        .distinct()
-    )
-    sx = sigs.select(
-        F.col("id").alias("x"),
-        *[F.col(f"h{s}").alias(f"xh{s}") for s in range(NBR_MH_SEEDS)],
-    )
-    sy = sigs.select(
-        F.col("id").alias("y"),
-        *[F.col(f"h{s}").alias(f"yh{s}") for s in range(NBR_MH_SEEDS)],
-    )
-    n_match = None
-    for s in range(NBR_MH_SEEDS):
-        term = F.when(F.col(f"xh{s}") == F.col(f"yh{s}"), 1).otherwise(0)
-        n_match = term if n_match is None else n_match + term
-    return (
-        cand.join(sx, "x")
-        .join(sy, "y")
-        .select(
-            "x",
-            "y",
-            n_match.cast("int").alias("n_match"),
-            F.expr(
-                f"CAST(({'+'.join(f'(CASE WHEN xh{s} = yh{s} THEN 1 ELSE 0 END)' for s in range(NBR_MH_SEEDS))}) "
-                f"* 1000000L div {NBR_MH_SEEDS} AS LONG)"
-            ).alias("jaccard_est_ppm"),
-        )
-    )
-
-
-def _jaccard_minhash_sql() -> str:
-    width = NBR_MH_SEEDS // NBR_MH_BANDS
-    mins = ", ".join(
-        f"min(md5('{s}:' || object)) AS h{s}" for s in range(NBR_MH_SEEDS)
-    )
-    keys = ", ".join(
-        "'" + str(b) + "|' || "
-        + " || '|' || ".join(f"h{b * width + j}" for j in range(width))
-        for b in range(NBR_MH_BANDS)
-    )
-    match_sum = " + ".join(
-        f"(CASE WHEN sx.h{s} = sy.h{s} THEN 1 ELSE 0 END)"
-        for s in range(NBR_MH_SEEDS)
-    )
-    return f"""und AS (
-  SELECT subject, object FROM cooc_edges
-  UNION ALL
-  SELECT object AS subject, subject AS object FROM cooc_edges
-),
-sigs AS (SELECT subject AS id, {mins} FROM und GROUP BY subject),
-kx AS (SELECT id, unnest([{keys}]) AS bk FROM sigs),
-cand AS (
-  SELECT DISTINCT a.id AS x, b.id AS y
-  FROM kx a JOIN kx b ON a.bk = b.bk AND a.id < b.id
-)
-SELECT c.x, c.y,
-  CAST({match_sum} AS INTEGER) AS n_match,
-  CAST(({match_sum}) * 1000000 // {NBR_MH_SEEDS} AS BIGINT)
-    AS jaccard_est_ppm
-FROM cand c
-JOIN sigs sx ON c.x = sx.id
-JOIN sigs sy ON c.y = sy.id"""
-
-
-def kg_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resource-Allocation link-prediction index in exact integer ppm:
-    RA(x,y) = Σ_{via ∈ N(x)∩N(y)} 1/deg(via), the down-weights-hubs
-    score Adamic-Adar approximates — chosen over AA precisely because
-    1/deg is RATIONAL: `1000000 div deg` is the identical integer in
-    both engines, while AA's 1/log(deg) would hash-diverge on libm
-    rounding (the same reasoning as the jaccard_ppm and pagerank
-    fixed-point). One wedge join (same shape as common-neighbors, same
-    SCALE.md ceiling) + one broadcast-size degree join; the sum is a
-    partial-agg groupBy over pair keys."""
-    und = _und_cooc(spark, sf_dir)
-    deg = _cooc_degrees(spark, sf_dir).select(
-        F.col("id").alias("via"), F.col("deg").alias("via_deg")
-    )
-    a = und.select(F.col("subject").alias("x"), F.col("object").alias("via"))
-    b = und.select(F.col("subject").alias("y"), F.col("object").alias("via"))
-    return (
-        a.join(b, "via")
-        .filter(F.col("x") < F.col("y"))
-        .join(deg, "via")
-        .groupBy("x", "y")
-        .agg(
-            F.expr("CAST(sum(1000000L div via_deg) AS LONG)").alias(
-                "ra_ppm"
-            ),
-            F.countDistinct("via").alias("n_common"),
-        )
-        .filter(F.col("n_common") >= 2)
-    )
-
-
-LP_ROUNDS = 3
-
-
-def kg_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Community detection by semi-synchronous label propagation over
-    the co-occurrence graph: LP_ROUNDS rounds of "adopt the most
-    frequent neighbor label", every tie broken deterministically
-    (count DESC, then label ASC) so the result is exact at any
-    parallelism and in DuckDB — the usual LP randomness is replaced by
-    a total order, the same discipline as the hash-min CC twin. Each
-    round is one copartitioned join + two bounded groupBys (label
-    counts collapse map-side; the argmax is a partial-agg min over a
-    (−count, label) struct, not a window); per-round persist with the
-    BFS/pagerank release discipline. Bounded rounds keep the oracle an
-    unrolled CTE — the convergence-loop form would follow
-    components_fixpoint's localCheckpoint pattern."""
-    return artifact(
-        spark, sf_dir, "label_propagation",
-        lambda: _lp_build(spark, sf_dir),
-    )
-
-
-def _lp_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    und = _und_cooc(spark, sf_dir)
-    return label_propagation_frame(und, LP_ROUNDS)
-
-
-def label_propagation_frame(und: DataFrame, rounds: int) -> DataFrame:
-    """(subject, object) undirected-edge frame → (id, community) after
-    ``rounds`` deterministic LP rounds; frame-parametrized for the
-    community-structure pytest."""
-    # per-round localCheckpoint: see _components_build (r7)
-    lbl = (
-        und.select(F.col("subject").alias("id"))
-        .distinct()
-        .withColumn("lbl", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(rounds):
-        msgs = (
-            und.join(lbl, und.object == lbl.id)
-            .select(und.subject.alias("id"), "lbl")
-        )
-        cnt = msgs.groupBy("id", "lbl").agg(F.count("*").alias("c"))
-        lbl = (
-            cnt.groupBy("id")
-            .agg(
-                F.min(
-                    F.struct((-F.col("c")).alias("nc"),
-                             F.col("lbl").alias("l"))
-                ).alias("b")
-            )
-            .select("id", F.col("b.l").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-    return lbl.select("id", F.col("lbl").alias("community"))
-
-
-def _lp_sql() -> str:
-    parts = [
-        """und AS (
-  SELECT subject, object FROM cooc_edges
-  UNION ALL
-  SELECT object AS subject, subject AS object FROM cooc_edges
-)""",
-        "p0 AS (SELECT DISTINCT subject AS id, subject AS lbl FROM und)",
-    ]
-    for k in range(LP_ROUNDS):
-        parts.append(
-            f"m{k} AS (SELECT und.subject AS id, p{k}.lbl, count(*) AS c "
-            f"FROM und JOIN p{k} ON und.object = p{k}.id GROUP BY 1, 2)"
-        )
-        parts.append(
-            f"p{k + 1} AS (SELECT id, lbl FROM ("
-            f"SELECT id, lbl, row_number() OVER (PARTITION BY id "
-            f"ORDER BY c DESC, lbl ASC) AS rn FROM m{k}) WHERE rn = 1)"
-        )
-    return (
-        ",\n".join(parts)
-        + f"\nSELECT id, lbl AS community FROM p{LP_ROUNDS}"
-    )
-
-
-LP_FIXPOINT_UNROLL = 16  # oracle unroll depth; Spark raises past it
-
-
-def kg_label_propagation_fixpoint(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Convergence-loop twin of kg_label_propagation, with the
-    oscillation hazard designed OUT rather than detected: plain
-    semi-synchronous LP 2-cycles forever on bipartite ties (any
-    pendant edge pair swaps labels every round), so a changed==0 loop
-    would never terminate. The guard is MONOTONICITY — a node adopts
-    the argmax-count neighbor label (count DESC, label ASC, the same
-    total order as the bounded twin) only when that label is lexically
-    SMALLER than its own. Every change strictly lowers a label over a
-    finite domain, so convergence is guaranteed on any input; at the
-    fixpoint the update is a no-op, so an oracle unrolled to
-    LP_FIXPOINT_UNROLL rounds is EXACT whenever Spark converges within
-    that many rounds — and Spark raises if it doesn't (the
-    kcore_fixpoint discipline, never silent divergence). On degree-≤2
-    stretches the rule degenerates to hash-min CC; inside dense
-    communities the count-argmax dominates and community structure is
-    preserved (barbell pytest). Per-round localCheckpoint(eager) cuts
-    lineage — the unbounded-loop discipline."""
-    return artifact(
-        spark, sf_dir, "label_propagation_fixpoint",
-        lambda: label_propagation_fixpoint_frame(_und_cooc(spark, sf_dir)),
-    )
-
-
-def label_propagation_fixpoint_frame(und: DataFrame) -> DataFrame:
-    und = und.persist()  # loop-invariant: joined every round
-    lbl = (
-        und.select(F.col("subject").alias("id"))
-        .distinct()
-        .withColumn("lbl", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(LP_FIXPOINT_UNROLL):
-        best = (
-            und.join(lbl, und.object == lbl.id)
-            .select(und.subject.alias("id"), "lbl")
-            .groupBy("id", "lbl")
-            .agg(F.count("*").alias("c"))
-            .groupBy("id")
-            .agg(
-                F.min(
-                    F.struct((-F.col("c")).alias("nc"),
-                             F.col("lbl").alias("l"))
-                ).alias("b")
-            )
-            .select("id", F.col("b.l").alias("best"))
-        )
-        new = (
-            lbl.join(best, "id")
-            .select("id", F.least("lbl", "best").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new.join(lbl.withColumnRenamed("lbl", "old"), "id")
-            .filter(F.col("lbl") != F.col("old"))
-            .count()
-        )
-        lbl = new
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"monotone label propagation did not converge within "
-            f"{LP_FIXPOINT_UNROLL} rounds — raise LP_FIXPOINT_UNROLL "
-            f"(and the oracle unroll with it)"
-        )
-    und.unpersist()
-    return lbl.select("id", F.col("lbl").alias("community"))
-
-
-def _lp_fixpoint_sql() -> str:
-    """Monotone-LP fixpoint as an over-unrolled CTE chain. AS
-    MATERIALIZED is load-bearing: q{k} is referenced twice per round
-    (message counts + the least() update), so default inlining would
-    expand the 16-round chain 2^16-fold — the DuckDB analog of the
-    lineage nesting the Spark side cuts with localCheckpoint."""
-    parts = [
-        """und AS (
-  SELECT subject, object FROM cooc_edges
-  UNION ALL
-  SELECT object AS subject, subject AS object FROM cooc_edges
-)""",
-        "q0 AS MATERIALIZED "
-        "(SELECT DISTINCT subject AS id, subject AS lbl FROM und)",
-    ]
-    for k in range(LP_FIXPOINT_UNROLL):
-        parts.append(
-            f"n{k} AS MATERIALIZED (SELECT und.subject AS id, q{k}.lbl, "
-            f"count(*) AS c FROM und JOIN q{k} ON und.object = q{k}.id "
-            f"GROUP BY 1, 2)"
-        )
-        parts.append(
-            f"q{k + 1} AS MATERIALIZED (SELECT q{k}.id, "
-            f"CASE WHEN b.lbl < q{k}.lbl THEN b.lbl ELSE q{k}.lbl END "
-            f"AS lbl FROM q{k} JOIN (SELECT id, lbl FROM ("
-            f"SELECT id, lbl, row_number() OVER (PARTITION BY id "
-            f"ORDER BY c DESC, lbl ASC) AS rn FROM n{k}) WHERE rn = 1) b "
-            f"ON q{k}.id = b.id)"
-        )
-    return (
-        ",\n".join(parts)
-        + f"\nSELECT id, lbl AS community FROM q{LP_FIXPOINT_UNROLL}"
-    )
-
-
 def kg_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GLOBAL clustering coefficient (transitivity) in exact integer
     ppm: C = 3·triangles / wedges, with 3·triangles read off the
@@ -591,140 +175,17 @@ def kg_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-AA_MAX_DEG = 1024
-
-
-def _ln_ppm_table() -> list[tuple[int, int]]:
-    """(deg, ln(deg)·1e6 truncated) for deg 2..AA_MAX_DEG — generated
-    ONCE in Python and embedded literally in BOTH engines, so
-    Adamic-Adar's 1/log weight is engine-parity by construction (the
-    usual objection to AA — libm last-ulp divergence — vanishes when
-    neither engine calls libm). deg 1 never appears: a degree-1 node
-    cannot be a common neighbor."""
-    import math
-
-    return [(d, int(math.log(d) * 1_000_000)) for d in range(2, AA_MAX_DEG + 1)]
-
-
-def kg_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adamic-Adar link prediction in exact integers:
-    AA(x,y) = Σ_{via ∈ N(x)∩N(y)} 1/ln(deg(via)), here as
-    Σ 1e12 div ln_ppm(deg) — the hub-down-weighting score
-    kg_resource_allocation rationalizes; r4 ships the real thing by
-    making the log a shared 1023-row integer table (broadcast join in
-    Spark, literal VALUES in DuckDB) instead of a runtime libm call.
-    Same wedge-join shape and SCALE.md ceiling as common-neighbors/RA.
-    Vias with degree > AA_MAX_DEG are excluded IN BOTH ENGINES (inner
-    join against the table): a 10⁶-degree hub's AA term is ≤ 1/ln(1024)
-    ≈ 0.14 and carries ~no link signal — the same principled hub
-    cutoff as kg_common_neighbors_capped."""
-    und = _und_cooc(spark, sf_dir)
-    deg = _cooc_degrees(spark, sf_dir).select(
-        F.col("id").alias("via"), F.col("deg").alias("via_deg")
-    )
-    ln_tab = F.broadcast(
-        local_frame(spark, _ln_ppm_table(), "via_deg long, ln_ppm long")
-    )
-    a = und.select(F.col("subject").alias("x"), F.col("object").alias("via"))
-    b = und.select(F.col("subject").alias("y"), F.col("object").alias("via"))
-    return (
-        a.join(b, "via")
-        .filter(F.col("x") < F.col("y"))
-        .join(deg, "via")
-        .join(ln_tab, "via_deg")
-        .groupBy("x", "y")
-        .agg(
-            F.expr("CAST(sum(1000000000000L div ln_ppm) AS LONG)").alias(
-                "aa_ppm"
-            ),
-            F.countDistinct("via").alias("n_common"),
-        )
-        .filter(F.col("n_common") >= 2)
-    )
-
-
-def _aa_sql() -> str:
-    vals = ", ".join(f"({d}, {p})" for d, p in _ln_ppm_table())
-    return f"""und AS (
-  SELECT subject, object FROM cooc_edges
-  UNION ALL
-  SELECT object AS subject, subject AS object FROM cooc_edges
-),
-deg AS (
-  SELECT object AS via, count(DISTINCT subject) AS via_deg
-  FROM und GROUP BY object
-),
-ln_tab AS (SELECT * FROM (VALUES {vals}) t(via_deg, ln_ppm))
-SELECT a.subject AS x, b.subject AS y,
-       CAST(sum(1000000000000 // l.ln_ppm) AS BIGINT) AS aa_ppm,
-       count(DISTINCT a.object) AS n_common
-FROM und a
-JOIN und b ON a.object = b.object
-JOIN deg d ON a.object = d.via
-JOIN ln_tab l ON d.via_deg = l.via_deg
-WHERE a.subject < b.subject
-GROUP BY a.subject, b.subject
-HAVING count(DISTINCT a.object) >= 2"""
-
-
-CC_ROUNDS = 3
-
-
-def kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-round hash-min connected components over the
-    co-occurrence graph: after k rounds each node's label is the
-    minimum entity id within its k-hop ball — the distributed CC
-    primitive (one join + one min groupBy per round, the BFS persist
-    discipline). Fixed CC_ROUNDS keeps the result deterministic and
-    oracle-expressible (unrolled CTEs); production convergence loops
-    until a round changes no label, with the same per-round plan. Note
-    the north-star merge deliberately AVOIDS CC for canonicalization
-    (prefix-priority dedup instead) — this is the analytics-side
-    component labeling, not the merge path."""
-    return artifact(
-        spark, sf_dir, "components",
-        lambda: _components_build(spark, sf_dir),
-    )
-
-
-def _components_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # per-round localCheckpoint, not persist (r7): persist keeps the
-    # analyzed plan nested round over round and Catalyst re-analysis
-    # dominated the bounded loop at bench scale (the same measured
-    # effect as the dedup cluster rounds); eager localCheckpoint
-    # materializes AND flattens — the fixpoint twin's discipline.
-    und = _und_cooc(spark, sf_dir)
-    lbl = (
-        und.select(F.col("subject").alias("id"))
-        .distinct()
-        .withColumn("lbl", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(CC_ROUNDS):
-        nbr = (
-            und.join(lbl, und.object == lbl.id)
-            .select(und.subject.alias("id"), "lbl")
-        )
-        lbl = (
-            lbl.unionByName(nbr)
-            .groupBy("id")
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-    return lbl.select("id", F.col("lbl").alias("component"))
-
-
 CC_FIXPOINT_MAX_ROUNDS = 64  # safety cap ≫ any co-occurrence diameter
 
 
 def kg_components_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Convergence-loop twin of kg_components: the SAME per-round plan
-    (one join + one min groupBy, per-round persist/materialize/release)
-    iterated UNTIL NO LABEL CHANGES rather than a fixed round count —
-    the true connected components at any diameter, with a driver-side
-    changed-row count (one extra copartitioned join + count per round,
-    the standard distributed-fixpoint termination test) and a safety
-    cap. Oracle-expressible without unrolling: hash-min CC's fixpoint
+    """Hash-min connected components over the co-occurrence graph:
+    one join + one min groupBy per round, iterated UNTIL NO LABEL
+    CHANGES rather than a fixed round count — the true connected
+    components at any diameter, with a driver-side changed-row count
+    (one extra copartitioned join + count per round, the standard
+    distributed-fixpoint termination test) and a safety cap.
+    Oracle-expressible without unrolling: hash-min CC's fixpoint
     is min-reachable-id, which DuckDB computes as a recursive-CTE
     transitive closure — so this query keeps a full value-hash gate,
     unlike sketches."""
@@ -737,7 +198,7 @@ def kg_components_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def components_fixpoint_frame(und: DataFrame) -> DataFrame:
     """(subject, object) undirected-edge frame → (id, component) at
     fixpoint. Frame-parametrized so the convergence pytest can drive a
-    path graph LONGER than kg_components' fixed CC_ROUNDS."""
+    long path graph and the holdout forest can reuse it."""
     und = und.persist()  # loop-invariant: joined every round
     # Per-round LINEAGE TRUNCATION, not just persist: a persisted frame
     # still nests the previous round's analyzed plan, and an
@@ -745,43 +206,48 @@ def components_fixpoint_frame(und: DataFrame) -> DataFrame:
     # (observed on an 11-round path graph). localCheckpoint(eager)
     # materializes AND cuts the plan to a leaf — the unbounded-loop
     # discipline; a cluster deployment would use reliable checkpoint()
-    # to a DFS dir for executor-loss tolerance.
-    lbl = (
-        und.select(F.col("subject").alias("id"))
-        .distinct()
-        .withColumn("lbl", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(CC_FIXPOINT_MAX_ROUNDS):
-        nbr = (
-            und.join(lbl, und.object == lbl.id)
-            .select(und.subject.alias("id"), "lbl")
-        )
-        new = (
-            lbl.unionByName(nbr)
-            .groupBy("id")
-            .agg(F.min("lbl").alias("lbl"))
+    # to a DFS dir for executor-loss tolerance. Each round's checkpoint
+    # is released once the next one is materialized, so only the
+    # returned labeling stays pinned.
+    try:
+        lbl = (
+            und.select(F.col("subject").alias("id"))
+            .distinct()
+            .withColumn("lbl", F.col("id"))
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new.join(lbl.withColumnRenamed("lbl", "old"), "id")
-            .filter(F.col("lbl") != F.col("old"))
-            .count()
-        )
-        lbl = new
-        if changed == 0:
-            break
-    else:
-        # Never return a non-converged labeling: the oracle computes
-        # the true transitive-closure fixpoint, so a cap-exhausted
-        # partial result would diverge SILENTLY. Same discipline as
-        # kcore_fixpoint_frame.
-        raise RuntimeError(
-            f"hash-min components did not converge within "
-            f"{CC_FIXPOINT_MAX_ROUNDS} rounds — graph diameter "
-            f"exceeds the cap; raise CC_FIXPOINT_MAX_ROUNDS"
-        )
-    und.unpersist()
+        for _ in range(CC_FIXPOINT_MAX_ROUNDS):
+            nbr = (
+                und.join(lbl, und.object == lbl.id)
+                .select(und.subject.alias("id"), "lbl")
+            )
+            new = (
+                lbl.unionByName(nbr)
+                .groupBy("id")
+                .agg(F.min("lbl").alias("lbl"))
+                .localCheckpoint(eager=True)
+            )
+            changed = (
+                new.join(lbl.withColumnRenamed("lbl", "old"), "id")
+                .filter(F.col("lbl") != F.col("old"))
+                .count()
+            )
+            _release(lbl)
+            lbl = new
+            if changed == 0:
+                break
+        else:
+            # Never return a non-converged labeling: the oracle computes
+            # the true transitive-closure fixpoint, so a cap-exhausted
+            # partial result would diverge SILENTLY.
+            _release(lbl)
+            raise RuntimeError(
+                f"hash-min components did not converge within "
+                f"{CC_FIXPOINT_MAX_ROUNDS} rounds — graph diameter "
+                f"exceeds the cap; raise CC_FIXPOINT_MAX_ROUNDS"
+            )
+    finally:
+        und.unpersist()
     return lbl.select("id", F.col("lbl").alias("component"))
 
 
@@ -804,186 +270,6 @@ reach AS (
   FROM und JOIN reach ON und.object = reach.id
 )
 SELECT id, min(r) AS component FROM reach GROUP BY id"""
-
-
-def _components_sql() -> str:
-    parts = [
-        """und AS (
-  SELECT subject, object FROM cooc_edges
-  UNION ALL
-  SELECT object AS subject, subject AS object FROM cooc_edges
-)""",
-        "l0 AS (SELECT DISTINCT subject AS id, subject AS lbl FROM und)",
-    ]
-    for k in range(CC_ROUNDS):
-        parts.append(
-            f"l{k + 1} AS (SELECT id, min(lbl) AS lbl FROM ("
-            f"SELECT id, lbl FROM l{k} "
-            f"UNION ALL "
-            f"SELECT und.subject AS id, l{k}.lbl AS lbl "
-            f"FROM und JOIN l{k} ON und.object = l{k}.id"
-            f") GROUP BY id)"
-        )
-    return (
-        ",\n".join(parts)
-        + f"\nSELECT id, lbl AS component FROM l{CC_ROUNDS}"
-    )
-
-
-KCORE_K = 2
-KCORE_ROUNDS = 3
-
-
-def kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-round k-core peeling (k=KCORE_K): repeatedly drop nodes
-    of degree < k and the edges they carry — the densest-subgraph
-    primitive next to components and triangles (peeling removes the
-    noise fringe a co-occurrence graph accumulates). KCORE_ROUNDS
-    fixed rounds keep it deterministic and oracle-expressible
-    (unrolled CTEs); production iterates to fixpoint with the same
-    per-round plan. Each round is one degree groupBy + two semi-joins
-    (edges to surviving endpoints) with the BFS/pagerank persist
-    discipline; output is the surviving nodes with their final
-    residual degree."""
-    return artifact(
-        spark, sf_dir, "kcore",
-        lambda: _kcore_build(spark, sf_dir),
-    )
-
-
-def _kcore_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # round 0 reads the shared cached adjacency (never unpersisted here
-    # — it is the session-scoped artifact other queries share)
-    e = _und_cooc(spark, sf_dir)
-    for _ in range(KCORE_ROUNDS):
-        keep = (
-            e.groupBy(F.col("subject").alias("id"))
-            .agg(F.count("*").alias("deg"))
-            .filter(F.col("deg") >= KCORE_K)
-            .select("id")
-        )
-        e = (
-            e.join(keep.withColumnRenamed("id", "subject"), "subject",
-                   "left_semi")
-            .join(keep.withColumnRenamed("id", "object"), "object",
-                  "left_semi")
-            .select("subject", "object")
-            .localCheckpoint(eager=True)  # see _components_build (r7)
-        )
-    return e.groupBy(F.col("subject").alias("id")).agg(
-        F.count("*").alias("deg")
-    )
-
-
-KCORE_FIXPOINT_UNROLL = 16
-
-
-def kg_kcore_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Convergence-loop twin of kg_kcore: peel degree-<k nodes until a
-    round removes nothing — the true k-core at any peel depth. Same
-    per-round plan (degree groupBy + two semi-joins), per-round
-    localCheckpoint lineage truncation (the components_fixpoint OOM
-    lesson), edge-count-based termination. Oracle contract is EXACT,
-    not best-effort: peeling is monotone and idempotent at fixpoint,
-    so an oracle unrolled to KCORE_FIXPOINT_UNROLL rounds equals the
-    fixpoint whenever convergence takes ≤ that many rounds — and the
-    Spark side RAISES if it ever needs more, so the two can never
-    silently diverge (the synthetic worst case, a path peeling from
-    both ends, is exercised in tests)."""
-    return artifact(
-        spark, sf_dir, "kcore_fixpoint",
-        lambda: kcore_fixpoint_frame(_und_cooc(spark, sf_dir), KCORE_K),
-    )
-
-
-def kcore_fixpoint_frame(und: DataFrame, k: int) -> DataFrame:
-    e = und.localCheckpoint(eager=True)
-    n_edges = e.count()
-    for _ in range(KCORE_FIXPOINT_UNROLL):
-        if n_edges == 0:
-            break
-        keep = (
-            e.groupBy(F.col("subject").alias("id"))
-            .agg(F.count("*").alias("deg"))
-            .filter(F.col("deg") >= k)
-            .select("id")
-        )
-        e = (
-            e.join(keep.withColumnRenamed("id", "subject"), "subject",
-                   "left_semi")
-            .join(keep.withColumnRenamed("id", "object"), "object",
-                  "left_semi")
-            .select("subject", "object")
-            .localCheckpoint(eager=True)
-        )
-        n_now = e.count()
-        if n_now == n_edges:
-            break
-        n_edges = n_now
-    else:
-        raise RuntimeError(
-            f"k-core peeling did not converge within "
-            f"{KCORE_FIXPOINT_UNROLL} rounds — raise "
-            f"KCORE_FIXPOINT_UNROLL (and the oracle unroll with it)"
-        )
-    return e.groupBy(F.col("subject").alias("id")).agg(
-        F.count("*").alias("deg")
-    )
-
-
-def _kcore_fixpoint_sql() -> str:
-    parts = [
-        """c0 AS (
-  SELECT subject, object FROM cooc_edges
-  UNION ALL
-  SELECT object AS subject, subject AS object FROM cooc_edges
-)"""
-    ]
-    # AS MATERIALIZED is load-bearing: each c_{r+1} references c_r
-    # three times (FROM + two IN subqueries via k_r), so DuckDB's
-    # default CTE inlining would expand the 16-round chain to 3^16
-    # plan copies — the same lineage-nesting blowup the Spark side
-    # solves with localCheckpoint (it died as "too many open files")
-    for r in range(KCORE_FIXPOINT_UNROLL):
-        parts.append(
-            f"k{r} AS MATERIALIZED (SELECT subject AS id FROM c{r} "
-            f"GROUP BY subject HAVING count(*) >= {KCORE_K})"
-        )
-        parts.append(
-            f"c{r + 1} AS MATERIALIZED (SELECT subject, object FROM c{r} "
-            f"WHERE subject IN (SELECT id FROM k{r}) "
-            f"AND object IN (SELECT id FROM k{r}))"
-        )
-    return (
-        ",\n".join(parts)
-        + f"\nSELECT subject AS id, count(*) AS deg "
-        f"FROM c{KCORE_FIXPOINT_UNROLL} GROUP BY subject"
-    )
-
-
-def _kcore_sql() -> str:
-    parts = [
-        """c0 AS (
-  SELECT subject, object FROM cooc_edges
-  UNION ALL
-  SELECT object AS subject, subject AS object FROM cooc_edges
-)"""
-    ]
-    for r in range(KCORE_ROUNDS):
-        parts.append(
-            f"k{r} AS (SELECT subject AS id FROM c{r} "
-            f"GROUP BY subject HAVING count(*) >= {KCORE_K})"
-        )
-        parts.append(
-            f"c{r + 1} AS (SELECT subject, object FROM c{r} "
-            f"WHERE subject IN (SELECT id FROM k{r}) "
-            f"AND object IN (SELECT id FROM k{r}))"
-        )
-    return (
-        ",\n".join(parts)
-        + f"\nSELECT subject AS id, count(*) AS deg FROM c{KCORE_ROUNDS} "
-        f"GROUP BY subject"
-    )
 
 
 def kg_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1091,7 +377,7 @@ def kg_cooc_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     them by association strength). lift = P(a,b) / (P(a)·P(b)) over
     document space, emitted as exact integer ppm
     (n_ab · N · 10⁶ div (df_a · df_b)) so the score is
-    engine-reproducible — the same no-libm discipline as jaccard_ppm
+    engine-reproducible — the same no-libm discipline as pagerank
     and txt_bigram_lm (PMI is log(lift); the log is left to the
     consumer, monotone in this score).
 
@@ -1194,34 +480,6 @@ def kg_assoc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         both.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= ASSOC_TOPK)
         .select("entity", "partner", "n_docs", "lift_ppm", "rk")
-    )
-
-
-def kg_degree_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree-assortativity SUFFICIENT STATISTICS in exact integers:
-    over all directed edge slots (u→v) of the undirected co-occurrence
-    graph, the sums m, Σdu, Σdv, Σdu·dv, Σdu², Σdv² — everything
-    Pearson's r needs, emitted as one exact row. The correlation
-    itself is a downstream float division (engine-dependent rounding),
-    so the engine emits the moments and leaves the last division to
-    the consumer — the same exactness discipline as jaccard_ppm and
-    pagerank. One degree aggregation + one edge join + a single-row
-    total aggregation (partial-agg collapsed map-side)."""
-    und = _und_cooc(spark, sf_dir)
-    deg = _cooc_degrees(spark, sf_dir)
-    du = deg.select(F.col("id").alias("subject"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("id").alias("object"), F.col("deg").alias("dv"))
-    return (
-        und.join(du, "subject")
-        .join(dv, "object")
-        .agg(
-            F.count("*").alias("m"),
-            F.sum("du").cast("long").alias("sum_du"),
-            F.sum("dv").cast("long").alias("sum_dv"),
-            F.sum(F.col("du") * F.col("dv")).cast("long").alias("sum_dudv"),
-            F.sum(F.col("du") * F.col("du")).cast("long").alias("sum_du2"),
-            F.sum(F.col("dv") * F.col("dv")).cast("long").alias("sum_dv2"),
-        )
     )
 
 
@@ -1487,7 +745,9 @@ def _hub_distances_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     diverge. Each round is one join on the frontier key + one min
     groupBy; unreached nodes are absent (no infinity sentinel)."""
     und = _und_cooc(spark, sf_dir)
-    # per-round localCheckpoint: see _components_build (r7)
+    # per-round localCheckpoint, not persist (r7): a persisted round
+    # still nests every earlier round's analyzed plan, and Catalyst
+    # re-analysis dominated the loop; the checkpoint flattens it
     dist = (
         und.select(F.col("subject").alias("id"))
         .distinct()
@@ -1565,7 +825,9 @@ def _weighted_distances_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             "w",
         )
     )
-    # per-round localCheckpoint: see _components_build (r7)
+    # per-round localCheckpoint, not persist (r7): a persisted round
+    # still nests every earlier round's analyzed plan, and Catalyst
+    # re-analysis dominated the loop; the checkpoint flattens it
     dist = (
         und.select(F.col("subject").alias("id"))
         .distinct()
@@ -1617,8 +879,7 @@ def _weighted_bfs_sql() -> str:
 
 def kg_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-entity triangle participation over the co-occurrence graph —
-    the clustering-structure metric next to degree (A5) and common
-    neighbors (J12 extension).
+    the clustering-structure metric next to degree (A5).
 
     Edges are oriented lower-degree → higher-degree endpoint (ties by
     id) before enumeration — the standard degree-ordering refinement.
@@ -1667,9 +928,7 @@ def triangles_frame(
     in wedge order (a = wedge center, so a/b/c is NOT id-sorted under
     degree ordering; consumers id-sort the member pairs they need).
     This is triangle_counts_frame's plan minus the final corner
-    explode, factored out so edge-level consumers (support, truss)
-    reuse the enumeration without forcing the per-node aggregate.
-    degree_ordered=True is the production orientation (O(m^1.5) wedge
+    explode. degree_ordered=True is the production orientation (O(m^1.5) wedge
     bound); False orients by id alone — same triangle set, but a
     low-id hub turns the wedge intermediate quadratic (the bench's
     planted-hub slice measures the gap)."""
@@ -1714,117 +973,6 @@ def triangles_frame(
         o.select(F.col("src").alias("b"), F.col("dst").alias("c")),
         ["b", "c"],
     ).select("a", "b", "c")
-
-
-def _edge_support_frame(e: DataFrame) -> DataFrame:
-    """(x, y, support) for an id-ordered undirected edge frame ``e``
-    (subject < object, one row per edge): the number of triangles each
-    edge closes, 0-support edges included. Triangles enumerate degree-
-    oriented (hub-safe on a power-law web graph); the three member
-    pairs id-sort back with least/greatest — pure column algebra —
-    then a partial-agg count joins LEFT onto the edge list so
-    triangle-free edges surface with support 0 instead of vanishing."""
-    deg = (
-        _undirected(e)
-        .groupBy(F.col("subject").alias("id"))
-        .agg(F.count("*").alias("deg"))
-    )
-    tri = triangles_frame(e, deg)
-    tedges = None
-    for u, v in (("a", "b"), ("a", "c"), ("b", "c")):
-        part = tri.select(
-            F.least(F.col(u), F.col(v)).alias("x"),
-            F.greatest(F.col(u), F.col(v)).alias("y"),
-        )
-        tedges = part if tedges is None else tedges.unionAll(part)
-    sup = tedges.groupBy("x", "y").agg(F.count("*").alias("support"))
-    return (
-        e.join(
-            sup,
-            (e["subject"] == sup["x"]) & (e["object"] == sup["y"]),
-            "left",
-        )
-        .select(
-            F.col("subject").alias("x"),
-            F.col("object").alias("y"),
-            F.coalesce(F.col("support"), F.lit(0).cast("long")).alias(
-                "support"
-            ),
-        )
-    )
-
-
-def kg_edge_support(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-EDGE triangle support over the co-occurrence graph — the
-    edge-level sibling of kg_triangle_counts (per-node) and the
-    single-pass building block of the k-truss. Support is the standard
-    cohesion signal for edge denoising in KG construction: a
-    correlated_with edge in zero triangles is an isolated co-mention
-    (likely noise), one embedded in many is community-supported. Scale
-    shape: one degree aggregate + the O(m^1.5) degree-oriented wedge
-    join + a partial-agg pair count + one left join keyed on the edge
-    pair — no collects, no cartesians, skew bounded by the degree
-    orientation exactly as in kg_triangle_counts."""
-    _, edges = get_kg(spark, sf_dir)
-    e = edges.filter(
-        F.col("predicate") == "biolink:correlated_with"
-    ).select("subject", "object")
-    return _edge_support_frame(e)
-
-
-KTRUSS_K = 4
-KTRUSS_FIXPOINT_UNROLL = 12
-
-
-def kg_ktruss_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-TRUSS decomposition at k=KTRUSS_K: iteratively delete every
-    edge in fewer than k−2 triangles until none remains to delete —
-    the edge-level analog of kg_kcore_fixpoint and the denser-than-
-    core cohesion standard (every k-truss is a subgraph of the
-    (k−1)-core, not vice versa). Each round recomputes degree-oriented
-    triangle support on the surviving edges, peels, and truncates
-    lineage with localCheckpoint (the components_fixpoint OOM lesson).
-    Oracle contract is EXACT, mirroring kcore: peeling is monotone, an
-    oracle unrolled to KTRUSS_FIXPOINT_UNROLL rounds equals the
-    fixpoint whenever convergence takes ≤ that many rounds, and the
-    Spark side RAISES if it ever needs more — the two can never
-    silently diverge (the adversarial case, a triangle strip that
-    unravels one triangle per round, is exercised in tests)."""
-    def build():
-        _, edges = get_kg(spark, sf_dir)
-        e = edges.filter(
-            F.col("predicate") == "biolink:correlated_with"
-        ).select("subject", "object")
-        return ktruss_fixpoint_frame(e, KTRUSS_K)
-
-    return artifact(spark, sf_dir, "ktruss_fixpoint", build)
-
-
-def ktruss_fixpoint_frame(e: DataFrame, k: int) -> DataFrame:
-    e = e.localCheckpoint(eager=True)
-    n_edges = e.count()
-    for _ in range(KTRUSS_FIXPOINT_UNROLL):
-        if n_edges == 0:
-            break
-        kept = (
-            _edge_support_frame(e)
-            .filter(F.col("support") >= k - 2)
-            .select(
-                F.col("x").alias("subject"), F.col("y").alias("object")
-            )
-            .localCheckpoint(eager=True)
-        )
-        n_now = kept.count()
-        if n_now == n_edges:
-            break
-        e, n_edges = kept, n_now
-    else:
-        raise RuntimeError(
-            f"k-truss peeling did not converge within "
-            f"{KTRUSS_FIXPOINT_UNROLL} rounds — raise "
-            f"KTRUSS_FIXPOINT_UNROLL (and the oracle unroll with it)"
-        )
-    return _edge_support_frame(e)
 
 
 def kg_schema_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1990,49 +1138,6 @@ def incremental_merge_frame(idx: DataFrame, delta: DataFrame) -> DataFrame:
         )
     )
     return pair_roll.unionByName(term_roll).unionByName(mention_roll)
-
-
-def _edge_support_sql_round(src: str, tri: str, sup: str) -> str:
-    """One triangle-support round over id-ordered edge CTE ``src`` —
-    shared by the single-pass and unrolled-truss oracles. MATERIALIZED
-    for the same reason as the kcore oracle: each round references the
-    previous one several times and DuckDB's default CTE inlining would
-    exponentiate the chain."""
-    return (
-        f"{tri} AS MATERIALIZED (\n"
-        f"  SELECT ab.subject AS a, ab.object AS b, bc.object AS c\n"
-        f"  FROM {src} ab\n"
-        f"  JOIN {src} bc ON ab.object = bc.subject\n"
-        f"  JOIN {src} ac ON ac.subject = ab.subject AND ac.object = bc.object\n"
-        f"),\n"
-        f"{sup} AS MATERIALIZED (\n"
-        f"  SELECT x, y, count(*) AS n FROM (\n"
-        f"    SELECT a AS x, b AS y FROM {tri}\n"
-        f"    UNION ALL SELECT a, c FROM {tri}\n"
-        f"    UNION ALL SELECT b, c FROM {tri}) GROUP BY x, y\n"
-        f")"
-    )
-
-
-def _ktruss_fixpoint_sql() -> str:
-    parts = ["e0 AS MATERIALIZED (SELECT subject, object FROM cooc_edges)"]
-    for r in range(KTRUSS_FIXPOINT_UNROLL):
-        parts.append(_edge_support_sql_round(f"e{r}", f"t{r}", f"s{r}"))
-        parts.append(
-            f"e{r + 1} AS MATERIALIZED (\n"
-            f"  SELECT e.subject, e.object FROM e{r} e\n"
-            f"  JOIN s{r} s ON e.subject = s.x AND e.object = s.y\n"
-            f"  WHERE s.n >= {KTRUSS_K - 2}\n"
-            f")"
-        )
-    last = KTRUSS_FIXPOINT_UNROLL
-    parts.append(_edge_support_sql_round(f"e{last}", f"t{last}", f"s{last}"))
-    return (
-        ",\n".join(parts)
-        + f"\nSELECT e.subject AS x, e.object AS y, s.n AS support\n"
-        f"FROM e{last} e JOIN s{last} s "
-        f"ON e.subject = s.x AND e.object = s.y"
-    )
 
 
 LINK_MAX_DIST = 2
@@ -2253,13 +1358,14 @@ def _pagerank_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materializes each round AND truncates its plan to a leaf, so
     # round k's Catalyst analysis no longer re-nests every earlier
     # round (the measured growing-round-wall effect) — the same
-    # discipline as the fixpoint loops. Tiny leaf frames; freed by the
-    # context cleaner when the build returns.
+    # discipline as the fixpoint loops. A round's ranks are released
+    # once the next round is materialized, and the degree table once
+    # the loop ends, so only the returned ranks stay pinned.
     deg = und.groupBy(F.col("subject").alias("id")).agg(
         F.count("*").alias("deg")
     ).localCheckpoint(eager=True)
     r = deg.select("id", F.lit(_PPM).cast("long").alias("r"))
-    for _ in range(PR_ITERS):
+    for i in range(PR_ITERS):
         contrib = r.join(deg, "id").select(
             "id", F.expr("r div deg").alias("c")
         )
@@ -2268,12 +1374,15 @@ def _pagerank_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("object").alias("mid"))
             .agg(F.sum("c").alias("s"))
         )
-        r = (
+        prev, r = r, (
             deg.select("id")
             .join(msgs, F.col("id") == F.col("mid"), "left")
             .select("id", F.expr(_rank_update_expr("s")).alias("r"))
             .localCheckpoint(eager=True)
         )
+        if i:  # round 0's ranks are a projection of deg, not a checkpoint
+            _release(prev)
+    _release(deg)
     return r.select("id", F.col("r").alias("rank_ppm"))
 
 
@@ -2411,11 +1520,7 @@ KG_QUERIES = {
     "kg_protein_nodes": kg_protein_nodes,
     "kg_one_hop": kg_one_hop,
     "kg_two_hop": kg_two_hop,
-    "kg_common_neighbors": kg_common_neighbors,
-    "kg_common_neighbors_capped": kg_common_neighbors_capped,
     "web_extract_parity": _web_extract_parity,
-    "kg_jaccard_link_scores": kg_jaccard_link_scores,
-    "kg_jaccard_minhash_est": kg_jaccard_minhash_est,
     "kg_degree_histogram": kg_degree_histogram,
     "kg_druggable_two_hop": kg_druggable_two_hop,
     "kg_provided_by_counts": kg_provided_by_counts,
@@ -2432,22 +1537,12 @@ KG_QUERIES = {
     "kg_pagerank_personalized": kg_pagerank_personalized,
     "kg_linked_mentions_scored": kg_linked_mentions_scored,
     "kg_triangle_counts": kg_triangle_counts,
-    "kg_edge_support": kg_edge_support,
-    "kg_ktruss_fixpoint": kg_ktruss_fixpoint,
     "kg_schema_validation": kg_schema_validation,
     "kg_incremental_merge": kg_incremental_merge,
     "kg_clustering_coefficient": kg_clustering_coefficient,
     "kg_hub_distances": kg_hub_distances,
     "kg_weighted_distances": kg_weighted_distances,
-    "kg_resource_allocation": kg_resource_allocation,
-    "kg_adamic_adar": kg_adamic_adar,
-    "kg_label_propagation": kg_label_propagation,
-    "kg_label_propagation_fixpoint": kg_label_propagation_fixpoint,
-    "kg_components": kg_components,
     "kg_components_fixpoint": kg_components_fixpoint,
-    "kg_kcore_fixpoint": kg_kcore_fixpoint,
-    "kg_kcore": kg_kcore,
-    "kg_degree_moments": kg_degree_moments,
 }
 
 
@@ -2552,71 +1647,11 @@ deg AS (
 )
 SELECT degree, count(*) AS n_entities FROM deg GROUP BY degree
 """,
-    "kg_common_neighbors": f"""
-WITH {_CTE},
-und AS (
-  SELECT subject, object FROM cooc_edges
-  UNION ALL
-  SELECT object AS subject, subject AS object FROM cooc_edges
-)
-SELECT a.subject AS x, b.subject AS y, count(DISTINCT a.object) AS n_common
-FROM und a JOIN und b ON a.object = b.object
-WHERE a.subject < b.subject
-GROUP BY a.subject, b.subject
-HAVING count(DISTINCT a.object) >= 2
-""",
     # the kernel inverts the deterministic html wrapping exactly on the
     # printable-ASCII corpus, so the oracle is the raw text — any
     # extraction drift breaks the hash
     "web_extract_parity": """
 SELECT doc_id, text FROM documents
-""",
-    "kg_common_neighbors_capped": f"""
-WITH {_CTE},
-und AS (
-  SELECT subject, object FROM cooc_edges
-  UNION ALL
-  SELECT object AS subject, subject AS object FROM cooc_edges
-),
-low AS (
-  SELECT subject AS via FROM und
-  GROUP BY subject HAVING count(DISTINCT object) <= {VIA_DEGREE_CAP}
-)
-SELECT a.subject AS x, b.subject AS y, count(DISTINCT a.object) AS n_common
-FROM und a
-JOIN low l ON a.object = l.via
-JOIN und b ON a.object = b.object
-WHERE a.subject < b.subject
-GROUP BY a.subject, b.subject
-HAVING count(DISTINCT a.object) >= 2
-""",
-    "kg_jaccard_link_scores": f"""
-WITH {_CTE},
-und AS (
-  SELECT subject, object FROM cooc_edges
-  UNION ALL
-  SELECT object AS subject, subject AS object FROM cooc_edges
-),
-deg AS (
-  SELECT subject AS id, count(DISTINCT object) AS deg FROM und GROUP BY subject
-),
-common AS (
-  SELECT a.subject AS x, b.subject AS y, count(DISTINCT a.object) AS n_common
-  FROM und a JOIN und b ON a.object = b.object
-  WHERE a.subject < b.subject
-  GROUP BY a.subject, b.subject
-  HAVING count(DISTINCT a.object) >= 2
-)
-SELECT c.x, c.y, c.n_common,
-  CAST(c.n_common * 1000000 // (dx.deg + dy.deg - c.n_common) AS BIGINT)
-    AS jaccard_ppm
-FROM common c
-JOIN deg dx ON c.x = dx.id
-JOIN deg dy ON c.y = dy.id
-""",
-    "kg_jaccard_minhash_est": f"""
-WITH {_CTE},
-{_jaccard_minhash_sql()}
 """,
     "kg_druggable_two_hop": f"""
 WITH {_CTE},
@@ -2796,17 +1831,6 @@ members AS (
 )
 SELECT id, count(*) AS n_triangles FROM members GROUP BY id
 """,
-    "kg_edge_support": f"""
-WITH {_CTE},
-{_edge_support_sql_round('cooc_edges', 'tri', 'sup')}
-SELECT e.subject AS x, e.object AS y, coalesce(s.n, 0) AS support
-FROM cooc_edges e
-LEFT JOIN sup s ON e.subject = s.x AND e.object = s.y
-""",
-    "kg_ktruss_fixpoint": f"""
-WITH {_CTE},
-{_ktruss_fixpoint_sql()}
-""",
     "kg_schema_validation": f"""
 WITH {_CTE},
 typed AS (
@@ -2893,74 +1917,8 @@ WITH {_CTE},
 WITH {_CTE},
 {_weighted_bfs_sql()}
 """,
-    "kg_resource_allocation": f"""
-WITH {_CTE},
-und AS (
-  SELECT subject, object FROM cooc_edges
-  UNION ALL
-  SELECT object AS subject, subject AS object FROM cooc_edges
-),
-deg AS (
-  SELECT object AS via, count(DISTINCT subject) AS via_deg
-  FROM und GROUP BY object
-)
-SELECT a.subject AS x, b.subject AS y,
-       CAST(sum(1000000 // d.via_deg) AS BIGINT) AS ra_ppm,
-       count(DISTINCT a.object) AS n_common
-FROM und a
-JOIN und b ON a.object = b.object
-JOIN deg d ON a.object = d.via
-WHERE a.subject < b.subject
-GROUP BY a.subject, b.subject
-HAVING count(DISTINCT a.object) >= 2
-""",
-    "kg_adamic_adar": f"""
-WITH {_CTE},
-{_aa_sql()}
-""",
-    "kg_label_propagation": f"""
-WITH {_CTE},
-{_lp_sql()}
-""",
-    "kg_label_propagation_fixpoint": f"""
-WITH {_CTE},
-{_lp_fixpoint_sql()}
-""",
-    "kg_components": f"""
-WITH {_CTE},
-{_components_sql()}
-""",
     "kg_components_fixpoint": f"""
 WITH RECURSIVE {_CTE},
 {_components_fixpoint_sql()}
-""",
-    "kg_kcore": f"""
-WITH {_CTE},
-{_kcore_sql()}
-""",
-    "kg_kcore_fixpoint": f"""
-WITH {_CTE},
-{_kcore_fixpoint_sql()}
-""",
-    "kg_degree_moments": f"""
-WITH {_CTE},
-und AS (
-  SELECT subject, object FROM cooc_edges
-  UNION ALL
-  SELECT object AS subject, subject AS object FROM cooc_edges
-),
-deg AS (
-  SELECT subject AS id, count(DISTINCT object) AS deg
-  FROM und GROUP BY subject
-)
-SELECT count(*) AS m,
-       CAST(sum(a.deg) AS BIGINT) AS sum_du,
-       CAST(sum(b.deg) AS BIGINT) AS sum_dv,
-       CAST(sum(a.deg * b.deg) AS BIGINT) AS sum_dudv,
-       CAST(sum(a.deg * a.deg) AS BIGINT) AS sum_du2,
-       CAST(sum(b.deg * b.deg) AS BIGINT) AS sum_dv2
-FROM und
-JOIN deg a ON und.subject = a.id
-JOIN deg b ON und.object = b.id
 """,
 }

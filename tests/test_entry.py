@@ -53,3 +53,38 @@ def test_only_local_frame_calls_create_dataframe():
     outside = [c for c in calls
                if c[0] != helper[0] or not helper[1] <= c[1] <= helper[2]]
     assert outside == [], outside
+
+
+def test_query_module_helpers_are_used():
+    """Every ``_``-prefixed top-level function and UPPER_CASE constant of
+    the query modules is read somewhere in the package or the driver
+    entry (an AST ``Name``/``Attribute`` load outside its own
+    definition), so a helper orphaned by a query cut fails here."""
+    root = Path(kg_covid_19_spark.__file__).parent
+    files = sorted(root.rglob("*.py")) + [root.parent / "__spark_entry__.py"]
+    loads = []  # (path, line, name)
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                loads.append((path, node.lineno, node.id))
+            elif (isinstance(node, ast.Attribute)
+                    and isinstance(node.ctx, ast.Load)):
+                loads.append((path, node.lineno, node.attr))
+    unused = []
+    for rel in ("plans/queries.py", "plans/merged.py"):
+        path = root / rel
+        for node in ast.parse(path.read_text(), rel).body:
+            if isinstance(node, ast.FunctionDef):
+                names = [node.name] if node.name.startswith("_") else []
+            elif isinstance(node, ast.Assign):
+                names = [t.id for t in node.targets
+                         if isinstance(t, ast.Name)
+                         and t.id.lstrip("_").isupper()]
+            else:
+                continue
+            for name in names:
+                if not any(n == name and not (
+                        p == path and node.lineno <= line <= node.end_lineno)
+                        for p, line, n in loads):
+                    unused.append(f"{rel}:{node.lineno} {name}")
+    assert unused == [], unused

@@ -168,22 +168,6 @@ def test_top_tokens_approx_misra_gries_undercount_bracket(spark):
     assert got["hh"] >= n_hh - n_total // (cap + 1), got["hh"]
 
 
-def test_aa_ln_table_is_exact_and_monotone():
-    """The shared Adamic-Adar log table: single generation point for
-    both engines — spot-pin known values (truncation, not rounding)
-    and monotonicity; any change here would flip oracle hashes."""
-    from kg_covid_19_spark.plans.queries import AA_MAX_DEG, _ln_ppm_table
-
-    tab = _ln_ppm_table()
-    assert len(tab) == AA_MAX_DEG - 1
-    d = dict(tab)
-    assert d[2] == 693147       # ln 2 = 0.693147180…
-    assert d[10] == 2302585     # ln 10 = 2.302585092…
-    assert d[1024] == 6931471   # 10·ln 2
-    vals = [p for _, p in tab]
-    assert vals == sorted(vals)
-
-
 def test_bigram_lm_scores_hand_computed_micro_corpus(spark):
     """Hand-verified LM arithmetic plus the two semantic claims:
     duplicated documents have zero corpus-unique bigrams (n_singleton

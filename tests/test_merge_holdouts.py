@@ -352,7 +352,9 @@ def test_forest_split_keeps_train_graph_connected(spark):
 def test_spanning_forest_is_exact_tree_per_component(spark):
     """On a handcrafted two-component multigraph the forest must have
     exactly |V| - |components| edges, include no cycle, and pick the
-    min-hash parallel edge deterministically."""
+    min-hash parallel edge deterministically. The per-round checkpoints
+    of the components and BFS loops are released, so the returned
+    forest is the only RDD the call leaves persisted."""
     from pyspark.sql import functions as F
 
     from kg_covid_19_spark.operators.holdouts import spanning_forest_hashes
@@ -369,7 +371,13 @@ def test_spanning_forest_is_exact_tree_per_component(spark):
     ).withColumn(
         "h", F.md5(F.concat_ws("|", "subject", "predicate", "object"))
     )
-    forest = {r["h"] for r in spanning_forest_hashes(e).collect()}
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    forest_df = spanning_forest_hashes(e)
+    assert len(persisted() - before) == 1
+    forest = {r["h"] for r in forest_df.collect()}
     assert len(forest) == 6 - 2  # |V|=6, two components
     # parallel n1-n2 edges: exactly the min-hash one may be picked
     h_p = e.filter(

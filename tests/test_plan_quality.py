@@ -389,3 +389,30 @@ def test_dictionary_frames_are_local_relations(spark):
         leaves = build(spark)._jdf.queryExecution().analyzed().collectLeaves()
         names = {leaves.apply(i).nodeName() for i in range(leaves.size())}
         assert names == {"LocalRelation"}, (build.__name__, names)
+
+
+def test_gazetteer_nodes_are_pre_reduced(spark):
+    """The canonical gazetteer is min-resolved on the driver: its
+    optimized plan is a bare ``LocalRelation`` with no Aggregate, and its
+    rows equal the Spark ``groupBy(curie)`` min-resolution over the
+    normalized gazetteer (two curies collapse two surfaces each)."""
+    from kg_covid_19_spark.dictionaries import normalized_gazetteer
+    from kg_covid_19_spark.plans.pipeline import gazetteer_nodes
+    from kg_covid_19_spark.sources.corpus import local_frame
+
+    df = gazetteer_nodes(spark)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Aggregate" not in plan, plan
+    want = (
+        local_frame(
+            spark,
+            normalized_gazetteer(),
+            "term string, curie string, name string, category string",
+        )
+        .groupBy("curie")
+        .agg(F.min("name").alias("name"), F.min("category").alias("category"))
+    )
+    assert df.columns == want.columns
+    got = sorted(tuple(r) for r in df.collect())
+    assert got == sorted(tuple(r) for r in want.collect())
+    assert len(got) == len({r[0] for r in got}) < len(normalized_gazetteer())

@@ -160,18 +160,20 @@ def test_blocked_linking_equals_nested_loop_reference(spark):
     assert ("spike", "X:1", 0) in blocked
 
 
+def _persisted_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def test_components_fixpoint_converges_past_bounded_rounds(spark):
-    """On a path graph whose diameter (11) exceeds kg_components' fixed
-    CC_ROUNDS (3), the convergence loop must still collapse every node
-    to the global min label — and stop on its own (changed == 0), not
-    at the safety cap."""
-    from kg_covid_19_spark.plans.queries import (
-        CC_ROUNDS,
-        components_fixpoint_frame,
-    )
+    """On a path graph of diameter 11, far past any small fixed round
+    count, the convergence loop must still collapse every node to the
+    global min label — and stop on its own (changed == 0), not at the
+    safety cap. Each round's checkpoint is released once the next one
+    is materialized, so the returned labeling is the only RDD the call
+    leaves persisted."""
+    from kg_covid_19_spark.plans.queries import components_fixpoint_frame
 
     n = 12
-    assert n - 1 > CC_ROUNDS
     path_edges = spark.range(n - 1).select(
         F.concat(F.lit("v"), F.format_string("%02d", F.col("id")))
         .alias("subject"),
@@ -183,80 +185,18 @@ def test_components_fixpoint_converges_past_bounded_rounds(spark):
             F.col("object").alias("subject"), F.col("subject").alias("object")
         )
     )
-    got = {
-        r["id"]: r["component"]
-        for r in components_fixpoint_frame(und).collect()
-    }
+    before = _persisted_rdd_ids(spark)
+    comp = components_fixpoint_frame(und)
+    assert len(_persisted_rdd_ids(spark) - before) == 1
+    got = {r["id"]: r["component"] for r in comp.collect()}
     assert got == {f"v{i:02d}": "v00" for i in range(n)}
-
-
-def test_kcore_fixpoint_peels_past_bounded_rounds(spark):
-    """A 10-path peels one node from each end per round at k=2 — full
-    dissolution needs 5 rounds, past kg_kcore's fixed KCORE_ROUNDS (3).
-    The fixpoint twin must dissolve it completely, and must converge on
-    its own (no RuntimeError) well inside the oracle unroll."""
-    from kg_covid_19_spark.plans.queries import (
-        KCORE_ROUNDS,
-        kcore_fixpoint_frame,
-    )
-
-    n = 10
-    assert (n - 1) // 2 + 1 > KCORE_ROUNDS
-    path = spark.range(n - 1).select(
-        F.concat(F.lit("p"), F.col("id").cast("string")).alias("subject"),
-        F.concat(F.lit("p"), (F.col("id") + 1).cast("string")).alias("object"),
-    )
-    und = path.unionAll(
-        path.select(
-            F.col("object").alias("subject"), F.col("subject").alias("object")
-        )
-    )
-    assert kcore_fixpoint_frame(und, 2).count() == 0  # fully dissolved
-    # and a triangle (true 2-core) survives with degree 2 everywhere
-    tri = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a")], "subject string, object string"
-    )
-    und_tri = tri.unionAll(
-        tri.select(
-            F.col("object").alias("subject"), F.col("subject").alias("object")
-        )
-    )
-    got = {r["id"]: r["deg"] for r in kcore_fixpoint_frame(und_tri, 2).collect()}
-    assert got == {"a": 2, "b": 2, "c": 2}
-
-
-def test_label_propagation_finds_barbell_communities(spark):
-    """Two 5-cliques bridged by a single edge: deterministic LP must
-    label each clique with its own minimum id (count-DESC/label-ASC
-    tie-break) — the community structure the oracle parity alone
-    doesn't demonstrate."""
-    from kg_covid_19_spark.plans.queries import label_propagation_frame
-
-    def clique(prefix, n):
-        return [
-            (f"{prefix}{i}", f"{prefix}{j}")
-            for i in range(n) for j in range(n) if i < j
-        ]
-
-    edges = clique("a", 5) + clique("b", 5) + [("a0", "b0")]
-    e = spark.createDataFrame(edges, "subject string, object string")
-    und = e.unionAll(
-        e.select(F.col("object").alias("subject"),
-                 F.col("subject").alias("object"))
-    )
-    got = {
-        r["id"]: r["community"]
-        for r in label_propagation_frame(und, 3).collect()
-    }
-    assert {got[f"a{i}"] for i in range(5)} == {"a0"}
-    assert {got[f"b{i}"] for i in range(5)} == {"b0"}
 
 
 def test_components_fixpoint_raises_at_cap(spark, monkeypatch):
     """Cap exhaustion must RAISE, never return a partial labeling
     (ADVICE r4): the oracle computes the true transitive-closure
-    fixpoint, so a silently non-converged result would diverge. Same
-    discipline kcore_fixpoint_frame already had."""
+    fixpoint, so a silently non-converged result would diverge. The
+    raise leaves no checkpoint or edge persist behind."""
     import pytest
 
     from kg_covid_19_spark.plans import queries
@@ -275,8 +215,23 @@ def test_components_fixpoint_raises_at_cap(spark, monkeypatch):
             F.col("subject").alias("object"),
         )
     )
+    before = _persisted_rdd_ids(spark)
     with pytest.raises(RuntimeError, match="did not converge"):
         queries.components_fixpoint_frame(und)
+    assert _persisted_rdd_ids(spark) - before == set()
+
+
+def test_pagerank_pins_only_its_result(spark):
+    """The degree table and every superseded round of ranks are
+    released: one pagerank build over the cached adjacency leaves
+    exactly one new persisted RDD, the returned ranks."""
+    from kg_covid_19_spark.plans import queries
+
+    queries._und_cooc(spark, SF_DIR)  # the shared input, built first
+    before = _persisted_rdd_ids(spark)
+    ranks = queries._pagerank_build(spark, SF_DIR)
+    assert len(_persisted_rdd_ids(spark) - before) == 1
+    assert ranks.count() > 0
 
 
 def test_range_join_floor_buckets_handle_negative_timestamps(spark):
@@ -310,112 +265,6 @@ def test_range_join_floor_buckets_handle_negative_timestamps(spark):
     }
     assert got == {k: ref.get(k, 0) for k in got}
     assert got["c1"] == 3  # the negative-side pairs are really exercised
-
-
-def test_label_propagation_fixpoint_communities_and_convergence(spark):
-    """Monotone-LP fixpoint: (a) keeps barbell community structure like
-    the bounded twin; (b) converges on its own on a pendant-pair graph
-    where PLAIN semi-sync LP 2-cycles forever (the oscillation the
-    monotone guard designs out); (c) collapses a long path to hash-min
-    CC (the degree-<=2 degeneration the docstring states)."""
-    from kg_covid_19_spark.plans.queries import (
-        label_propagation_fixpoint_frame,
-    )
-
-    def und_of(edges):
-        e = spark.createDataFrame(edges, "subject string, object string")
-        return e.unionAll(
-            e.select(F.col("object").alias("subject"),
-                     F.col("subject").alias("object"))
-        )
-
-    def clique(prefix, n):
-        return [
-            (f"{prefix}{i}", f"{prefix}{j}")
-            for i in range(n) for j in range(n) if i < j
-        ]
-
-    # (a) barbell: two 5-cliques + bridge
-    got = {
-        r["id"]: r["community"]
-        for r in label_propagation_fixpoint_frame(
-            und_of(clique("a", 5) + clique("b", 5) + [("a0", "b0")])
-        ).collect()
-    }
-    assert {got[f"a{i}"] for i in range(5)} == {"a0"}
-    # monotone rule lets the bridge endpoint keep the lower community's
-    # label; the rest of the b-clique must still agree on one community
-    assert {got[f"b{i}"] for i in range(1, 5)} == {"b0"}
-
-    # (b) pendant pair: plain LP swaps u<->v forever; monotone converges
-    got = {
-        r["id"]: r["community"]
-        for r in label_propagation_fixpoint_frame(
-            und_of([("u", "v")])
-        ).collect()
-    }
-    assert got == {"u": "u", "v": "u"}
-
-    # (c) 9-path -> single community at the min label
-    path = [(f"p{i}", f"p{i+1}") for i in range(8)]
-    got = {
-        r["id"]: r["community"]
-        for r in label_propagation_fixpoint_frame(und_of(path)).collect()
-    }
-    assert set(got.values()) == {"p0"}
-
-
-def test_label_propagation_fixpoint_raises_at_cap(spark, monkeypatch):
-    """Cap exhaustion raises (kcore discipline) instead of silently
-    returning a non-fixpoint labeling the over-unrolled oracle would
-    diverge from."""
-    import pytest
-
-    from kg_covid_19_spark.plans import queries
-
-    monkeypatch.setattr(queries, "LP_FIXPOINT_UNROLL", 1)
-    path = [(f"q{i}", f"q{i+1}") for i in range(6)]
-    e = spark.createDataFrame(path, "subject string, object string")
-    und = e.unionAll(
-        e.select(F.col("object").alias("subject"),
-                 F.col("subject").alias("object"))
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        queries.label_propagation_fixpoint_frame(und)
-
-
-def test_jaccard_minhash_estimates_track_exact(spark):
-    """The neighbor-set minhash sketch must genuinely estimate the
-    exact Jaccard (not merely hash-match its own construction): on the
-    pairs both queries emit, mean |est − exact| stays within the
-    8-component sampling error, every high-similarity pair is found by
-    the band join, and estimates never stray past 3 components."""
-    from kg_covid_19_spark.plans.queries import (
-        kg_jaccard_link_scores,
-        kg_jaccard_minhash_est,
-    )
-
-    est = {
-        (r["x"], r["y"]): r["jaccard_est_ppm"]
-        for r in kg_jaccard_minhash_est(spark, SF_DIR).collect()
-    }
-    exact = {
-        (r["x"], r["y"]): r["jaccard_ppm"]
-        for r in kg_jaccard_link_scores(spark, SF_DIR).collect()
-    }
-    both = set(est) & set(exact)
-    assert len(both) >= 20  # non-vacuous overlap at sf0.01
-    errs = [abs(est[p] - exact[p]) for p in both]
-    assert sum(errs) / len(errs) <= 200_000   # ~1.6 components mean
-    assert max(errs) <= 375_000               # ≤3 components anywhere
-    # recall of truly similar pairs: an exact-J ≥ 0.5 pair misses a
-    # 2-row band with prob (1−J²)⁴ ≈ 0.32 at the boundary, so demand
-    # ≥0.9 over the set (deterministic on this fixed corpus — md5
-    # makes every "random" outcome reproducible), not perfection
-    hi = {p for p, j in exact.items() if j >= 500_000}
-    assert hi
-    recall = len(hi & set(est)) / len(hi)
-    assert recall >= 0.9, (recall, hi - set(est))
 
 
 def test_personalized_pagerank_confines_restart_to_seeds(spark):
@@ -466,74 +315,3 @@ def test_clustering_coefficient_consistent_with_parts(spark):
     assert row["n_wedges"] == wedges
     assert row["gcc_ppm"] == t3 * 1_000_000 // wedges
     assert 0 < row["gcc_ppm"] <= 1_000_000
-
-
-def _id_ordered_edges(spark, pairs):
-    return spark.createDataFrame(
-        sorted({(min(a, b), max(a, b)) for a, b in pairs}),
-        "subject string, object string",
-    )
-
-
-def test_edge_support_planted_bowtie(spark):
-    """Bowtie (two triangles sharing edge b-c) plus a pendant edge:
-    the shared edge carries support 2, each wing edge 1, and the
-    pendant surfaces with support 0 instead of vanishing — the
-    0-support rows are the denoising signal kg_edge_support exists
-    for."""
-    from kg_covid_19_spark.plans.queries import _edge_support_frame
-
-    e = _id_ordered_edges(
-        spark,
-        [("a", "b"), ("a", "c"), ("b", "c"), ("b", "d"), ("c", "d"),
-         ("c", "e")],
-    )
-    got = {(r["x"], r["y"]): r["support"] for r in _edge_support_frame(e).collect()}
-    assert got == {
-        ("a", "b"): 1, ("a", "c"): 1, ("b", "c"): 2,
-        ("b", "d"): 1, ("c", "d"): 1, ("c", "e"): 0,
-    }
-
-
-def test_ktruss_strip_unravels_and_k4_survives(spark):
-    """4-truss (support ≥ 2): a triangle strip's outer edges sit in one
-    triangle each, so peeling cascades until nothing is left — while a
-    K4, where every edge closes exactly two triangles, survives intact.
-    This is the structure-vs-noise separation the truss adds over the
-    k-core (the strip IS a 2-core: degree alone never peels it)."""
-    from kg_covid_19_spark.plans.queries import ktruss_fixpoint_frame
-
-    strip = _id_ordered_edges(
-        spark,
-        [("v0", "v1"), ("v0", "v2"), ("v1", "v2"), ("v1", "v3"),
-         ("v2", "v3"), ("v2", "v4"), ("v3", "v4"), ("v3", "v5"),
-         ("v4", "v5")],
-    )
-    assert ktruss_fixpoint_frame(strip, 4).count() == 0
-    k4 = _id_ordered_edges(
-        spark,
-        [(a, b) for a in "abcd" for b in "abcd" if a < b],
-    )
-    got = {(r["x"], r["y"]): r["support"]
-           for r in ktruss_fixpoint_frame(k4, 4).collect()}
-    assert got == {(a, b): 2 for a in "abcd" for b in "abcd" if a < b}
-
-
-def test_ktruss_raises_past_unroll(spark, monkeypatch):
-    """Cap exhaustion must RAISE, never return a partial peel — the
-    oracle computes the true fixpoint via its full unroll, so a
-    silently non-converged Spark result would diverge (same contract
-    as kcore_fixpoint / components_fixpoint)."""
-    import pytest
-
-    from kg_covid_19_spark.plans import queries
-
-    monkeypatch.setattr(queries, "KTRUSS_FIXPOINT_UNROLL", 1)
-    strip = _id_ordered_edges(
-        spark,
-        [("v0", "v1"), ("v0", "v2"), ("v1", "v2"), ("v1", "v3"),
-         ("v2", "v3"), ("v2", "v4"), ("v3", "v4"), ("v3", "v5"),
-         ("v4", "v5")],
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        queries.ktruss_fixpoint_frame(strip, 4)
