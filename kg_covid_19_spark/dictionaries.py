@@ -127,6 +127,19 @@ def normalized_gazetteer() -> list[tuple[str, str, str, str]]:
     return out
 
 
+def canonical_gazetteer() -> list[tuple[str, str, str]]:
+    """Canonical (curie, name, category) rows, sorted by curie: the
+    normalized gazetteer min-resolved per canonical CURIE (the
+    connected-component-free prefix/lexicographic dedup of the north
+    rule). Python ``str`` order is code-point order, the same order
+    Spark's and DuckDB's ``min`` give UTF-8 strings (``gaz_nodes``)."""
+    best: dict[str, tuple[str, str]] = {}
+    for _term, curie, name, cat in normalized_gazetteer():
+        n, c = best.get(curie, (name, cat))
+        best[curie] = (min(n, name), min(c, cat))
+    return [(curie, n, c) for curie, (n, c) in sorted(best.items())]
+
+
 def collapse_uniprot(curie: str) -> str:
     """Strip isoform suffix ``-N`` iff prefix is uniprotkb: (case-insens.)
 
@@ -201,6 +214,15 @@ cooc_edges AS (
 ),
 edges AS (SELECT * FROM mention_edges UNION ALL SELECT * FROM cooc_edges)
 """.strip()
+
+
+def guess_category(curie: str) -> str:
+    """guess_bl_category on the driver: the category of the first
+    PREFIX_CATEGORY entry whose prefix equals the text before the first
+    ':', default biolink:NamedThing."""
+    prefix = curie.split(":", 1)[0]
+    return next((c for p, c in PREFIX_CATEGORY if p == prefix),
+                "biolink:NamedThing")
 
 
 def guess_category_case_sql(col: str) -> str:

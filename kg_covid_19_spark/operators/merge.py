@@ -13,6 +13,13 @@ their key — then writes the merged artifact and graph stats
 * edge dedup on (subject, predicate, object, relation) — north_rule key,
 * graph stats: category × provided_by counts (A8).
 
+``merge_overlap`` is the same merge for one large source that is unique
+on its key and a small source known on the driver (the documents graph
+and the ontology): only the large rows whose key may occur in the small
+source are grouped, every other row passes through without a shuffle.
+``merge_nodes``/``merge_edges`` stay the merge of many large sources
+(``load_and_merge``).
+
 Skew: node fusion groups on entity id — at web scale a handful of ids
 (taxa, common diseases) carry orders of magnitude more rows than the
 median. ``salted_node_fusion`` performs the canonical two-phase aggregate:
@@ -26,6 +33,8 @@ aggregation does NOT shrink the hot key.
 
 from __future__ import annotations
 
+import operator
+from collections.abc import Callable, Sequence
 from functools import reduce
 
 from pyspark.sql import DataFrame
@@ -86,14 +95,58 @@ def salted_node_fusion(frames: list[DataFrame], n_salts: int = 16) -> DataFrame:
     )
 
 
+EDGE_KEY = ("subject", "predicate", "object", "relation")
+
+
 def merge_edges(frames: list[DataFrame]) -> DataFrame:
     """Edge dedup on the north_rule key (subject, predicate, object,
     relation) with provenance accumulation."""
     return (
         union_sources(frames)
-        .groupBy("subject", "predicate", "object", "relation")
+        .groupBy(*EDGE_KEY)
         .agg(_accum_provenance())
     )
+
+
+def merge_overlap(
+    large: DataFrame,
+    small: DataFrame,
+    small_rows: Sequence[Sequence],
+    key: Sequence[str],
+    fuse: Callable[[list[DataFrame]], DataFrame],
+) -> tuple[DataFrame, DataFrame]:
+    """``fuse([large, small])`` split into (pass-through, fused) halves
+    whose union has the same rows, for a large source merged with a
+    small one whose rows (``small_rows``, in ``small.columns`` order)
+    are known on the driver.
+
+    A ``large`` row goes to the fused half when a key column is null or
+    every key column's value occurs in that column of ``small_rows`` (a
+    superset of the small side's keys). The test is a literal ``isin``
+    on the key alone, so no key's rows are split between the halves and
+    the pass-through half is a filter + projection of ``large``: no
+    join, no broadcast, no exchange. Only the fused half, at most the
+    small side plus the large rows that share its keys, is grouped.
+
+    The pass-through rows equal ``fuse``'s output only when both hold:
+
+    * ``large`` is unique on ``key`` (nulls equal), so a pass-through
+      row is alone in its group;
+    * ``large``'s ``provided_by`` is non-null, since fusing one row
+      turns a null provenance into ''.
+
+    Null keys go to the fused half, where they group as ``fuse`` groups
+    them."""
+    idx = [small.columns.index(c) for c in key]
+    hit = reduce(operator.or_, [F.col(c).isNull() for c in key]) | reduce(
+        operator.and_,
+        [
+            F.col(c).isin(sorted({r[i] for r in small_rows} - {None}))
+            for c, i in zip(key, idx)
+        ],
+    )
+    fused = fuse([large.filter(hit), small])
+    return large.filter(~hit).select(*fused.columns), fused
 
 
 def remap_node_identifier(

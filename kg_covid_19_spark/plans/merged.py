@@ -1,8 +1,13 @@
 """Merged-graph query layer: the merge stage wired end-to-end.
 
-documents source (plans/pipeline.build_kg) + ontology source
-(sources/ontology) → merge (operators/merge) → merged nodes/edges/stats,
-each with a DuckDB oracle over dictionaries.merged_cte_sql.
+documents source (plans/pipeline.get_kg) + ontology source
+(sources/ontology) → merge (operators/merge.merge_overlap) → merged
+nodes/edges/stats, each with a DuckDB oracle over
+dictionaries.merged_cte_sql.
+
+The merged graph is not a second persisted copy: it is the pinned KG
+frames, filtered to the rows whose key the ontology does not have, plus
+one driver-side frame per side holding the fused overlap.
 """
 
 from __future__ import annotations
@@ -11,19 +16,47 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..dictionaries import merged_cte_sql
-from ..operators.merge import graph_stats, merge_edges, merge_nodes, salted_node_fusion
-from ..sources.corpus import artifact
-from ..sources.ontology import ontology_edges, ontology_nodes
+from ..operators.merge import (
+    EDGE_KEY,
+    graph_stats,
+    merge_edges,
+    merge_nodes,
+    merge_overlap,
+    salted_node_fusion,
+)
+from ..sources.corpus import artifact, local_frame
+from ..sources.ontology import (
+    ontology_edge_rows,
+    ontology_edges,
+    ontology_node_rows,
+    ontology_nodes,
+)
 from .pipeline import get_kg
 
+
 def get_merged(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(nodes, edges) of the documents graph merged with the ontology.
+
+    ``merge_overlap``'s preconditions hold for the documents side: one
+    publication node per document, distinct term curies and edges
+    deduped on their key, all with ``provided_by`` 'documents'. Its
+    fused half (at most the ontology plus the document rows sharing its
+    keys) is collected once per build and kept as a one-partition
+    ``LocalRelation``, so executing the merged frames runs no shuffle
+    and the build pins nothing beyond ``get_kg``'s frames."""
     def build():
         doc_nodes, doc_edges = get_kg(spark, sf_dir)
-        nodes = merge_nodes([doc_nodes, ontology_nodes(spark)]).persist()
-        edges = merge_edges([doc_edges, ontology_edges(spark)]).persist()
-        nodes.count()
-        edges.count()
-        return nodes, edges
+        merged = []
+        for doc, onto, rows, key, fuse in (
+            (doc_nodes, ontology_nodes(spark), ontology_node_rows(), ["id"],
+             merge_nodes),
+            (doc_edges, ontology_edges(spark), ontology_edge_rows(), EDGE_KEY,
+             merge_edges),
+        ):
+            passed, fused = merge_overlap(doc, onto, rows, key, fuse)
+            fused = local_frame(spark, fused.collect(), fused.schema)
+            merged.append(passed.unionByName(fused.coalesce(1)))
+        return tuple(merged)
 
     return artifact(spark, sf_dir, "merged", build)
 

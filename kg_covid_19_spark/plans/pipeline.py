@@ -33,7 +33,7 @@ from ..dictionaries import (
     MENTION_RELATION,
     PROVIDED_BY,
     PUB_CATEGORY,
-    normalized_gazetteer,
+    canonical_gazetteer,
 )
 from ..functions.text import extracted_text
 from ..operators.mentions import make_curie_udf
@@ -120,22 +120,14 @@ def web_extract_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def gazetteer_nodes(spark: SparkSession) -> DataFrame:
-    """Canonical (curie, name, category) — one row per canonical CURIE,
-    min-resolved over gazetteer entries that collapse onto it (the
-    connected-component-free prefix/lexicographic dedup of the north rule).
+    """Canonical (curie, name, category) — one row per canonical CURIE
+    (``dictionaries.canonical_gazetteer``).
 
-    The min is taken here on the driver, so the frame is a plain
+    The min is taken on the driver, so the frame is a plain
     ``LocalRelation`` and every plan that joins it carries no exchange
-    or aggregate for it. Python ``str`` order is code-point order, the
-    same order Spark's ``min`` gives UTF-8 strings."""
-    best: dict[str, tuple[str, str]] = {}
-    for _term, curie, name, cat in normalized_gazetteer():
-        n, c = best.get(curie, (name, cat))
-        best[curie] = (min(n, name), min(c, cat))
+    or aggregate for it."""
     return local_frame(
-        spark,
-        [(curie, n, c) for curie, (n, c) in sorted(best.items())],
-        "curie string, name string, category string",
+        spark, canonical_gazetteer(), "curie string, name string, category string"
     )
 
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..dictionaries import kg_cte_sql, normalized_gazetteer
 from ..sources.corpus import _release, artifact, local_frame, read_table
@@ -198,8 +199,15 @@ def kg_components_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def components_fixpoint_frame(und: DataFrame) -> DataFrame:
     """(subject, object) undirected-edge frame → (id, component) at
     fixpoint. Frame-parametrized so the convergence pytest can drive a
-    long path graph and the holdout forest can reuse it."""
-    und = und.persist()  # loop-invariant: joined every round
+    long path graph and the holdout forest can reuse it.
+
+    ``und`` is joined every round, so it is persisted for the loop
+    unless it is cached already; only a persist made here is undone
+    (``kg_components_fixpoint`` passes the shared ``und_cooc``
+    artifact, which other queries keep reading)."""
+    owned = und.storageLevel == StorageLevel.NONE
+    if owned:
+        und = und.persist()
     # Per-round LINEAGE TRUNCATION, not just persist: a persisted frame
     # still nests the previous round's analyzed plan, and an
     # unknown-depth loop grows that nest until Catalyst itself OOMs
@@ -247,7 +255,8 @@ def components_fixpoint_frame(und: DataFrame) -> DataFrame:
                 f"exceeds the cap; raise CC_FIXPOINT_MAX_ROUNDS"
             )
     finally:
-        und.unpersist()
+        if owned:
+            und.unpersist()
     return lbl.select("id", F.col("lbl").alias("component"))
 
 

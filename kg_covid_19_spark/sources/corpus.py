@@ -83,8 +83,10 @@ def artifact(spark: SparkSession, sf_dir: str, name: Hashable,
     """The session artifact ``name`` derived from the tables under
     ``sf_dir``: returned from the registry while its inputs are
     unchanged, else ``build()`` — which returns the value already
-    materialized (persisted and counted, or local-checkpointed) — is
-    run and its result kept.
+    materialized (persisted and counted, or local-checkpointed), or a
+    plan over other artifacts' materialized frames and driver constants
+    (``merged``: the pinned ``kg`` frames plus the fused ontology
+    overlap) — is run and its result kept.
 
     Keying and release. An entry is keyed by (application, catalog,
     sf_dir, name) and holds the fingerprint of its inputs: in path mode

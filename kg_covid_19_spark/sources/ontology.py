@@ -10,48 +10,57 @@ synthesized as a small DataFrame and broadcast"), so this source emits:
   transform_utils.py:185-202),
 * one biolink:same_as edge per SSSOM mapping, with a deterministic
   content-hash edge id replacing the reference's uuid1 (SURVEY.md C14).
+
+The rows are built on the driver (the source is a constant), so each
+frame is one ``LocalRelation`` and ``plans/merged.get_merged`` knows the
+ontology's keys without a Spark job. They equal what
+``functions.curie.guess_bl_category`` and ``content_edge_id`` compute
+over the same constants.
 """
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..dictionaries import (
     ONTO_PROVIDED_BY,
     SAME_AS_PREDICATE,
     SAME_AS_RELATION,
     SSSOM_MAP,
+    canonical_gazetteer,
+    guess_category,
 )
-from ..functions.curie import content_edge_id, guess_bl_category
-from ..plans.pipeline import gazetteer_nodes
 from .corpus import local_frame
+
+NODE_SCHEMA = "id string, name string, category string, provided_by string"
+EDGE_SCHEMA = (
+    "subject string, predicate string, object string, relation string, "
+    "provided_by string, edge_id string"
+)
+
+
+def ontology_node_rows() -> list[tuple]:
+    entity = [(c, n, cat, ONTO_PROVIDED_BY) for c, n, cat in canonical_gazetteer()]
+    xref = [
+        (s, None, guess_category(s), ONTO_PROVIDED_BY)
+        for s in sorted({s for s, _ in SSSOM_MAP})
+    ]
+    return entity + xref
+
+
+def ontology_edge_rows() -> list[tuple]:
+    return [
+        (s, SAME_AS_PREDICATE, o, SAME_AS_RELATION, ONTO_PROVIDED_BY,
+         hashlib.sha256(f"{s}|{o}".encode()).hexdigest())
+        for s, o in SSSOM_MAP
+    ]
 
 
 def ontology_nodes(spark: SparkSession) -> DataFrame:
-    entity = gazetteer_nodes(spark).select(
-        F.col("curie").alias("id"),
-        "name",
-        "category",
-        F.lit(ONTO_PROVIDED_BY).alias("provided_by"),
-    )
-    sssom = local_frame(spark, SSSOM_MAP, "subject_id string, object_id string")
-    xref = sssom.select(F.col("subject_id").alias("id")).distinct().select(
-        "id",
-        F.lit(None).cast("string").alias("name"),
-        guess_bl_category(F.col("id")).alias("category"),
-        F.lit(ONTO_PROVIDED_BY).alias("provided_by"),
-    )
-    return entity.unionByName(xref)
+    return local_frame(spark, ontology_node_rows(), NODE_SCHEMA)
 
 
 def ontology_edges(spark: SparkSession) -> DataFrame:
-    sssom = local_frame(spark, SSSOM_MAP, "subject_id string, object_id string")
-    return sssom.select(
-        F.col("subject_id").alias("subject"),
-        F.lit(SAME_AS_PREDICATE).alias("predicate"),
-        F.col("object_id").alias("object"),
-        F.lit(SAME_AS_RELATION).alias("relation"),
-        F.lit(ONTO_PROVIDED_BY).alias("provided_by"),
-        content_edge_id(F.col("subject_id"), F.col("object_id")).alias("edge_id"),
-    )
+    return local_frame(spark, ontology_edge_rows(), EDGE_SCHEMA)

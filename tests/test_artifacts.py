@@ -9,6 +9,7 @@ import threading
 
 import duckdb
 import pyarrow.parquet as pq
+from pyspark.storagelevel import StorageLevel
 
 from kg_covid_19_spark.plans import pipeline
 from kg_covid_19_spark.plans.queries import KG_ORACLES, kg_mention_counts
@@ -113,3 +114,52 @@ def test_invalidate_releases_bigram_stream(spark):
     invalidate_session_caches(spark)
     assert cache.isEmpty()
     assert set(persistent().keySet()) <= before
+
+
+def _is_cached(df) -> bool:
+    return df.storageLevel != StorageLevel.NONE
+
+
+def test_components_fixpoint_keeps_und_cooc_cached(spark, tmp_path):
+    """kg_components_fixpoint's loop reads the shared und_cooc artifact;
+    the two-hop queries, PageRank and the degree table read it too, so
+    the call must leave it cached."""
+    from kg_covid_19_spark.plans import queries
+
+    _split_corpus(tmp_path, 1)()
+    sf = str(tmp_path)
+    und = queries._und_cooc(spark, sf)
+    assert _is_cached(und)
+    queries.kg_components_fixpoint(spark, sf).collect()
+    assert queries._und_cooc(spark, sf) is und
+    assert _is_cached(und)
+
+
+# the perfbench serve mix: the 7 reference queries and the 5 others
+SERVE_MIX = (
+    "kg_category_counts", "kg_protein_nodes", "kg_one_hop", "kg_two_hop",
+    "kg_druggable_two_hop", "kg_provided_by_counts", "kg_drug_mentions",
+    "kg_mention_counts", "kg_pagerank", "kg_components_fixpoint",
+    "kg_triangle_counts", "kg_graph_stats",
+)
+
+
+def test_invalidate_after_serve_mix_leaves_nothing_persisted(spark, tmp_path):
+    """The graph, the merged graph and one pass of the serve mix pin
+    only registry values: invalidation leaves no persisted RDD of
+    theirs behind (local checkpoints included)."""
+    from kg_covid_19_spark.plans.merged import MERGED_QUERIES, get_merged
+    from kg_covid_19_spark.plans.queries import KG_QUERIES
+
+    _split_corpus(tmp_path, 1)()
+    sf = str(tmp_path)
+    invalidate_session_caches(spark)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keySet())
+    pipeline.get_kg(spark, sf)
+    get_merged(spark, sf)
+    for name in SERVE_MIX:
+        (KG_QUERIES.get(name) or MERGED_QUERIES[name])(spark, sf).collect()
+    assert set(persistent().keySet()) - before
+    invalidate_session_caches(spark)
+    assert set(persistent().keySet()) - before == set()

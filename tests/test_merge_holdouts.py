@@ -418,3 +418,160 @@ def test_ego_export_hops_are_disjoint_and_edge_backed(spark):
         assert any(n in nbrs.get(m, set()) for (ss, m) in h1 if ss == s), (
             s, n,
         )
+
+
+NODE_DDL = "id string, name string, category string, provided_by string"
+EDGE_DDL = (
+    "subject string, predicate string, object string, relation string, "
+    "provided_by string"
+)
+
+
+def _rows(df) -> list[tuple]:
+    return sorted((tuple(r) for r in df.collect()),
+                  key=lambda r: tuple((v is None, v or "") for v in r))
+
+
+def test_merge_overlap_equals_merge_over_union(spark):
+    """merge_overlap's two halves union to exactly merge_nodes /
+    merge_edges over both sources, on planted frames with document keys
+    that collide with the small side, small keys the documents lack,
+    duplicate keys within the small side, a null key, null names and a
+    row whose key columns each occur in the small side but not together.
+    The null key and the colliding keys land in the fused half."""
+    from kg_covid_19_spark.operators.merge import (
+        EDGE_KEY,
+        merge_edges,
+        merge_overlap,
+    )
+
+    doc_nodes = spark.createDataFrame([
+        ("A", "a", "c1", "documents"),      # collides with the small side
+        ("B", None, "c2", "documents"),     # pass-through, null name
+        ("C", "c", "c3", "documents"),      # pass-through
+        (None, "n", "c4", "documents"),     # null key
+    ], NODE_DDL)
+    onto_rows = [
+        ("A", None, "c0", "ontology"),
+        ("A", "z", "c9", "ontology"),       # duplicate key, small side
+        ("D", "d", "c5", "ontology"),       # absent from the documents
+    ]
+    onto_nodes = spark.createDataFrame(onto_rows, NODE_DDL)
+    passed, fused = merge_overlap(doc_nodes, onto_nodes, onto_rows, ["id"],
+                                  merge_nodes)
+    assert _rows(passed.unionByName(fused)) == _rows(
+        merge_nodes([doc_nodes, onto_nodes]))
+    assert {r.id for r in passed.collect()} == {"B", "C"}
+    assert ("A", "a", "c0", "documents|ontology") in _rows(fused)
+    assert (None, "n", "c4", "documents") in _rows(fused)
+
+    doc_edges = spark.createDataFrame([
+        ("A", "p", "B", "r", "documents"),  # collides
+        ("A", "p", "D", "r", "documents"),  # each column hits, key does not
+        ("A", "q", "B", "r", "documents"),  # pass-through
+        ("A", "p", None, "r", "documents"), # null key
+    ], EDGE_DDL)
+    onto_edge_rows = [
+        ("A", "p", "B", "r", "ontology", "h1"),
+        ("A", "p", "B", "r", "ontology", "h2"),  # duplicate key
+        ("C", "p", "D", "r", "ontology", "h3"),  # absent from the documents
+    ]
+    onto_edges = spark.createDataFrame(onto_edge_rows,
+                                       EDGE_DDL + ", edge_id string")
+    passed, fused = merge_overlap(doc_edges, onto_edges, onto_edge_rows,
+                                  EDGE_KEY, merge_edges)
+    assert _rows(passed.unionByName(fused)) == _rows(
+        merge_edges([doc_edges, onto_edges]))
+    assert _rows(passed) == [("A", "q", "B", "r", "documents")]
+    assert ("A", "p", "B", "r", "documents|ontology") in _rows(fused)
+    assert ("A", "p", None, "r", "documents") in _rows(fused)
+
+
+def test_driver_built_ontology_matches_spark_expressions(spark):
+    """The ontology rows built in Python equal what the Spark
+    expressions guess_bl_category / content_edge_id give over the SSSOM
+    map and the canonical gazetteer, and the driver-side category guess
+    agrees with guess_bl_category on every dictionary CURIE and on
+    prefix edge cases."""
+    from kg_covid_19_spark.dictionaries import (
+        GAZETTEER,
+        ONTO_PROVIDED_BY,
+        PREFIX_CATEGORY,
+        SAME_AS_PREDICATE,
+        SAME_AS_RELATION,
+        SSSOM_MAP,
+        guess_category,
+    )
+    from kg_covid_19_spark.functions.curie import (
+        content_edge_id,
+        guess_bl_category,
+    )
+    from kg_covid_19_spark.plans.pipeline import gazetteer_nodes
+    from kg_covid_19_spark.sources.ontology import (
+        ontology_edges,
+        ontology_nodes,
+    )
+
+    sssom = spark.createDataFrame(SSSOM_MAP, "subject_id string, object_id string")
+    onto = F.lit(ONTO_PROVIDED_BY).alias("provided_by")
+    want_nodes = gazetteer_nodes(spark).select(
+        F.col("curie").alias("id"), "name", "category", onto
+    ).unionByName(
+        sssom.select(F.col("subject_id").alias("id")).distinct().select(
+            "id", F.lit(None).cast("string").alias("name"),
+            guess_bl_category(F.col("id")).alias("category"), onto,
+        )
+    )
+    assert _rows(ontology_nodes(spark)) == _rows(want_nodes)
+    want_edges = sssom.select(
+        F.col("subject_id").alias("subject"),
+        F.lit(SAME_AS_PREDICATE).alias("predicate"),
+        F.col("object_id").alias("object"),
+        F.lit(SAME_AS_RELATION).alias("relation"), onto,
+        content_edge_id(F.col("subject_id"), F.col("object_id")).alias("edge_id"),
+    )
+    assert _rows(ontology_edges(spark)) == _rows(want_edges)
+
+    curies = sorted(
+        {c for _, c, _, _ in GAZETTEER} | {c for pair in SSSOM_MAP for c in pair}
+        | {p + ":x" for p, _ in PREFIX_CATEGORY}
+        | {"nocolon", "", ":x", "GO:a:b", "go:lower", "UniProtKB"}
+    )
+    got = spark.createDataFrame([(c,) for c in curies], "c string").select(
+        "c", guess_bl_category(F.col("c")).alias("cat")
+    ).collect()
+    assert {r.c: r.cat for r in got} == {c: guess_category(c) for c in curies}
+
+
+def _exchanges_outside_cache(plan) -> list[str]:
+    """Exchange node names of an executed physical plan, not descending
+    into cached relations (whose build plans ran once, at persist)."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _exchanges_outside_cache(plan.executedPlan())
+    if name.endswith("QueryStage") and name != "TableCacheQueryStage":
+        kids = [plan.plan()]
+    else:
+        kids = [plan.children().apply(i) for i in range(plan.children().size())]
+    own = [name] if "Exchange" in name else []
+    return own + [x for k in kids for x in _exchanges_outside_cache(k)]
+
+
+def test_merged_graph_is_a_plan_over_the_pinned_graph(spark):
+    """The merged frames read the pinned KG without a shuffle and pin no
+    copy of their own: executing them runs no Exchange outside the
+    cached KG, and building them adds no persisted RDD."""
+    from kg_covid_19_spark.plans.pipeline import get_kg
+    from kg_covid_19_spark.sources.corpus import invalidate_session_caches
+
+    invalidate_session_caches(spark)
+    get_kg(spark, SF_DIR)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keySet())
+    nodes, edges = get_merged(spark, SF_DIR)
+    assert set(persistent().keySet()) == before
+    for df in (nodes, edges):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan()
+        assert _exchanges_outside_cache(plan) == [], plan.toString()
+        assert "InMemoryTableScan" in plan.toString()

@@ -2,7 +2,8 @@
 byte-identical output at any parallelism).
 
 Runs the FULL KG build in two fresh Spark JVMs — local[8] and
-local[32] — and compares sha256 over the sorted node and edge rows.
+local[32] — and compares sha256 over the sorted node and edge rows of
+``build_kg`` and of the merged graph (``get_merged``).
 Stronger than the in-session repartition tests (tests/test_mentions.py,
 tests/test_reference_parity.py): a fresh JVM also re-derives broadcast
 dictionaries, Arrow batching boundaries, and shuffle partitioning from
@@ -25,12 +26,14 @@ CHILD = r"""
 import hashlib, json, sys
 sys.path.insert(0, {repo!r})
 from kg_covid_19_spark.session import get_spark
+from kg_covid_19_spark.plans.merged import get_merged
 from kg_covid_19_spark.plans.pipeline import build_kg
 
 cores = {cores}
 spark = get_spark(app_name=f"determinism-{{cores}}",
                   master=f"local[{{cores}}]", shuffle_partitions=cores)
 nodes, edges = build_kg(spark, {sf_dir!r})
+merged_nodes, merged_edges = get_merged(spark, {sf_dir!r})
 
 def digest(df):
     h = hashlib.sha256()
@@ -41,7 +44,9 @@ def digest(df):
     return h.hexdigest()
 
 print(json.dumps({{"cores": cores, "nodes": digest(nodes),
-                   "edges": digest(edges)}}))
+                   "edges": digest(edges),
+                   "merged_nodes": digest(merged_nodes),
+                   "merged_edges": digest(merged_edges)}}))
 spark.stop()
 """
 
@@ -58,7 +63,8 @@ def run(cores: int, sf_dir: str) -> dict:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     a, b = run(8, sf_dir), run(32, sf_dir)
-    match = a["nodes"] == b["nodes"] and a["edges"] == b["edges"]
+    match = all(a[k] == b[k] for k in
+                ("nodes", "edges", "merged_nodes", "merged_edges"))
     print(json.dumps({"sf_dir": sf_dir, "local8": a, "local32": b,
                       "match": match}))
     sys.exit(0 if match else 1)
