@@ -9,14 +9,15 @@ Shuffle budget at 100 TB (the thing that decides whether this survives a
 * mention detection, mention edges, pair generation: **zero shuffles** —
   narrow map chain; per-doc dedup happens inside the kernel (row-local
   state) and co-occurrence pairs are expanded from the per-row mention
-  array, never via a groupBy/self-join on doc_id.
+  array (:func:`cooc_pairs`), never via a groupBy/self-join on doc_id.
 * term nodes: groupBy over ≤|dictionary| distinct keys — partial
   aggregation collapses each task's output to ≤|dictionary| rows before
   the exchange, so the shuffle is KB-sized regardless of corpus size.
-* co-occurrence dedup: `dropDuplicates` over the pair key — the distinct
-  universe is |dictionary|², not corpus-sized, so map-side partial
-  aggregation absorbs the hot keys (every doc mentions NCBITaxon:9606-style
-  terms) before any network transfer. AQE skew handling covers the rest.
+* co-occurrence edges: the keys of the pair-support count (a groupBy over
+  the pair key) — the distinct universe is |dictionary|², not
+  corpus-sized, so map-side partial aggregation absorbs the hot keys
+  (every doc mentions NCBITaxon:9606-style terms) before any network
+  transfer. AQE skew handling covers the rest.
 """
 
 from __future__ import annotations
@@ -88,6 +89,39 @@ def doc_mentions(spark: SparkSession, sf_dir: str,
     )
 
 
+def cooc_pairs(frame: DataFrame) -> DataFrame:
+    """(subject, object) rows, subject < object, for every pair of one
+    row's ``curies`` (a per-document deduped mention array) — the ONE
+    row-local pair expansion. Zero shuffle: the scale-safe alternative
+    to a mentions self-join on doc_id, which at 100 TB shuffles the
+    whole corpus on a corpus-sized key.
+
+    Two generators and a filter, so the expansion stays in whole-stage
+    codegen (a nested transform/flatten/filter lambda does not).
+    ``explode_outer`` rather than ``explode``: an inner explode makes
+    Catalyst infer a ``size(curies) > 0`` filter that it pushes below a
+    projection computing ``curies`` with the mention UDF, which then
+    runs twice (see :func:`doc_mentions`); the null rows of the outer
+    form fail ``subject < object``."""
+    return (
+        frame.select(F.explode_outer("curies").alias("subject"), "curies")
+        .select("subject", F.explode_outer("curies").alias("object"))
+        .filter(F.col("subject") < F.col("object"))
+    )
+
+
+def pair_counts(frame: DataFrame) -> DataFrame:
+    """(subject, object, n_docs): :func:`cooc_pairs` + a bounded groupBy
+    over ≤|dictionary|² keys — the one definition of pair-support
+    counting, shared by the full and incremental queries so their
+    'incremental == full' contract cannot drift."""
+    return (
+        cooc_pairs(frame)
+        .groupBy("subject", "object")
+        .agg(F.count("*").alias("n_docs"))
+    )
+
+
 def web_extract_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The html→text kernel exercised END-TO-END against the oracle
     (north rule: "byte-identical text extraction per url"): wrap each
@@ -140,38 +174,28 @@ def build_kg(spark: SparkSession, sf_dir: str,
     biolink:mentions doc→term edges (scibite_cord.py:220-232), pair-deduped
     biolink:correlated_with term-term edges (scibite_cord.py:290-340), all
     deduped on the KGX keys (id) / (subject,predicate,object,relation).
+
+    Every frame is a projection of the cached mention set
+    (:func:`get_mention_set`), so the mention kernel ran once, before
+    this call, and no pair is expanded here:
+
+    * publication nodes: the mention rows with ``pos = 0`` or a null
+      ``pos`` — exactly one per document;
+    * mention edges: the mention rows with a non-null ``curie``;
+    * term nodes: the distinct curies joined to the gazetteer;
+    * co-occurrence edges: the keys of the pair-support counts.
     """
     doc_curie = F.concat(F.lit(DOC_PREFIX), F.col("doc_id").cast("string"))
+    rows, pairs = get_mention_set(spark, sf_dir, langs)
 
-    # The mention kernel feeds THREE branches (term nodes, mention edges,
-    # co-occurrence pairs); without a shared materialization each branch
-    # re-evaluates the UDF over the whole corpus. The compact (doc_id,
-    # curies) projection — ids + a few CURIEs per doc, orders of
-    # magnitude smaller than the text — is the SHARED session artifact
-    # get_mention_arrays owns (r7: build_kg, get_mentions and the pair
-    # queries each used to materialize their own copy, i.e. THREE full
-    # corpus passes through the mention kernel per session; now the
-    # kernel runs exactly once). MEMORY_AND_DISK inside
-    # get_mention_arrays: at 100 TB the projection spills rather than
-    # recomputes. (On a cluster this is the natural intermediate
-    # Iceberg table between extraction and graph materialization.)
-    mid = get_mention_arrays(spark, sf_dir, langs)
-
-    # publication nodes need only doc_id — read it off the persisted
-    # projection (column-pruned, no UDF, no second corpus scan).
-    pub_nodes = mid.select(
+    pub_nodes = rows.filter(F.col("pos").isNull() | (F.col("pos") == 0)).select(
         doc_curie.alias("id"),
         F.concat(F.lit("Document "), F.col("doc_id").cast("string")).alias("name"),
         F.lit(PUB_CATEGORY).alias("category"),
         F.lit(PROVIDED_BY).alias("provided_by"),
     )
 
-    # explode_outer + filter: see doc_mentions — avoids UDF re-evaluation
-    # via the explode-inferred size() pre-filter.
-    mentions = (
-        mid.select("doc_id", F.explode_outer("curies").alias("curie"))
-        .filter(F.col("curie").isNotNull())
-    )
+    mentions = rows.filter(F.col("curie").isNotNull())
 
     # term nodes: distinct mentioned curies (KB-sized groupBy) ⋈ broadcast
     # canonical dictionary.
@@ -193,23 +217,12 @@ def build_kg(spark: SparkSession, sf_dir: str,
         F.lit(PROVIDED_BY).alias("provided_by"),
     )
 
-    # co-occurrence pairs expanded row-locally from the sorted mention array
-    # (i < j ⇒ s < o), then deduped on the edge key.
-    pairs = (
-        mid.select(F.explode_outer(pair_expand(F.col("curies"))).alias("p"))
-        .filter(F.col("p").isNotNull())
-        .select(F.col("p.s").alias("subject"), F.col("p.o").alias("object"))
-    )
-
-    cooc_edges = (
-        pairs.dropDuplicates(["subject", "object"])
-        .select(
-            "subject",
-            F.lit(COOC_PREDICATE).alias("predicate"),
-            "object",
-            F.lit(COOC_RELATION).alias("relation"),
-            F.lit(PROVIDED_BY).alias("provided_by"),
-        )
+    cooc_edges = pairs.select(
+        "subject",
+        F.lit(COOC_PREDICATE).alias("predicate"),
+        "object",
+        F.lit(COOC_RELATION).alias("relation"),
+        F.lit(PROVIDED_BY).alias("provided_by"),
     )
 
     edges = mention_edges.unionByName(cooc_edges)
@@ -226,36 +239,18 @@ def build_kg(spark: SparkSession, sf_dir: str,
 # ---------------------------------------------------------------------------
 
 
-def pair_expand(curies) -> "F.Column":  # type: ignore[name-defined]
-    """Row-local ordered-pair expansion of a sorted mention array:
-    array<string> → array<struct<s,o>> with s < o. Zero shuffle — the
-    scale-safe alternative to a mentions self-join on doc_id (which at
-    100 TB shuffles the whole corpus on a corpus-sized key)."""
-    return F.filter(
-        F.flatten(
-            F.transform(
-                curies,
-                lambda a: F.transform(
-                    curies, lambda b: F.struct(a.alias("s"), b.alias("o"))
-                ),
-            )
-        ),
-        lambda p: p["s"] < p["o"],
-    )
-
-
 def _artifact_partitions(spark: SparkSession, sf_dir: str) -> int:
     """Partition count for the persisted graph artifacts, derived from
     input size (guide §2: scale-adaptive, never a local constant): one
-    partition per ~8 MB of corpus, floored at 2. The KGX frames are
-    narrow projections off the cached mention arrays, so their union
-    branches inherited the ingest's 32 partitions each — ~65 near-empty
-    partitions at bench scale, and every one of the ~30 downstream graph
-    queries paid a task per partition per scan (measured: the merge
+    partition per ~8 MB of corpus, floored at 2. The KGX frames and the
+    mention rows are narrow projections off the mention kernel's output,
+    so they inherit the ingest's width — ~65 near-empty partitions at
+    bench scale for the KGX union, and every one of the ~30 downstream
+    graph queries paid a task per partition per scan (measured: the merge
     stage alone re-scanned them 4×). coalesce() to this count is a
     no-op at 100 TB (count ≥ existing partitions) and collapses only
     cache-read + projection work locally — the mention kernel's own
-    parallelism is untouched (its artifact stays at ingest width)."""
+    parallelism is untouched (it runs before the coalesce)."""
     _, nbytes = _scan_layout(spark, sf_dir)
     return max(2, nbytes // (8 << 20))
 
@@ -276,53 +271,72 @@ def get_kg(spark: SparkSession, sf_dir: str,
     return artifact(spark, sf_dir, ("kg", langs), build)
 
 
-def get_mentions(spark: SparkSession, sf_dir: str,
-                 langs: tuple[str, ...] | None = None) -> DataFrame:
-    def build():
-        # derived from the shared mention-array artifact (r7) — a
-        # row-local explode of the cached projection, NOT a second
-        # corpus pass through the mention kernel
-        m = (
-            get_mention_arrays(spark, sf_dir, langs)
-            .select("doc_id", F.explode_outer("curies").alias("curie"))
-            .filter(F.col("curie").isNotNull())
-            .coalesce(_artifact_partitions(spark, sf_dir))
-            .persist()
-        )
-        m.count()
-        return m
+def get_mention_set(spark: SparkSession, sf_dir: str,
+                    langs: tuple[str, ...] | None = None
+                    ) -> tuple[DataFrame, DataFrame]:
+    """The cached mention set: (mention rows, pair counts).
 
-    return artifact(spark, sf_dir, ("mentions", langs), build)
+    * mention rows ``(doc_id, pos, curie)`` — each document's sorted,
+      deduped mention set, one row per mention (``posexplode_outer``);
+      a document with no mention keeps one row with a null ``pos`` and
+      ``curie``.
+    * pair counts ``(subject, object, n_docs)`` — :func:`pair_counts`
+      over the same documents.
 
+    One pass of the mention kernel feeds both: its ``(doc_id, curies)``
+    output is persisted for the length of the build, the two frames are
+    persisted and counted from it, and it is released. Both hold only
+    scalar columns, which Spark's columnar cache encodes and compresses;
+    an ``array<string>`` column it stores uncompressed, at several times
+    the bytes. They are plain persists, so a lost block is recomputed
+    from lineage.
 
-def get_mention_arrays(spark: SparkSession, sf_dir: str,
-                       langs: tuple[str, ...] | None = None) -> DataFrame:
-    """Materialized (doc_id, curies:array<string>) projection — the compact
-    per-document mention set that row-local pair expansion reads from."""
+    Every mention reader projects this value: the graph (:func:`build_kg`),
+    :func:`get_mentions`, the pair-support queries and, regrouped,
+    :func:`get_mention_arrays`."""
     def build():
         pm = (
             pages_with_mentions(spark, sf_dir, langs)
             .select("doc_id", "curies")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        pm.count()  # mention kernel runs at full ingest width
-        # compact the artifact AFTER materialization (r7): the cached
-        # frame kept the 32-partition ingest width and every consumer
-        # scan paid a task per near-empty partition (the incremental
-        # family alone scans it 4×/query). The coalesce target derives
-        # from input size (no-op at scale); eager localCheckpoint makes
-        # the compact copy a leaf so dropping the wide original can
-        # never re-trigger the kernel at the narrow width. The divisor
-        # is 16× finer than the node/edge artifacts' because consumers
-        # run the interpreted pair-expansion HOF over each row (~100
-        # steps/doc) — at 8 MB/partition the sf1 expansion serialized
-        # onto 2 tasks and the incremental family tripled (measured).
-        _, nbytes = _scan_layout(spark, sf_dir)
-        compact = (
-            pm.coalesce(max(2, nbytes // (512 << 10)))
-            .localCheckpoint(eager=True)
+        pairs = pair_counts(pm).persist()
+        rows = (
+            pm.select("doc_id", F.posexplode_outer("curies").alias("pos", "curie"))
+            .coalesce(_artifact_partitions(spark, sf_dir))
+            .persist()
         )
+        # pairs first: its map stage reads ``pm`` at the ingest width, so
+        # the kernel runs there once and fills ``pm``; the coalesced rows
+        # then read ``pm`` from the cache
+        pairs.count()
+        rows.count()
         pm.unpersist()
-        return compact
+        return rows, pairs
 
-    return artifact(spark, sf_dir, ("mention_arrays", langs), build)
+    return artifact(spark, sf_dir, ("mention_set", langs), build)
+
+
+def get_mentions(spark: SparkSession, sf_dir: str,
+                 langs: tuple[str, ...] | None = None) -> DataFrame:
+    """(doc_id, curie) mention pairs — the mention rows of
+    :func:`get_mention_set` that carry a curie.
+
+    Distinct on (doc_id, curie) by construction: the kernel dedups each
+    document's mentions (see :func:`doc_mentions`), so a count per curie
+    is its document frequency without a distinct."""
+    rows, _ = get_mention_set(spark, sf_dir, langs)
+    return rows.filter(F.col("curie").isNotNull()).select("doc_id", "curie")
+
+
+def get_mention_arrays(spark: SparkSession, sf_dir: str,
+                       langs: tuple[str, ...] | None = None) -> DataFrame:
+    """(doc_id, curies:array<string>) — each document's sorted mention
+    set, regrouped from the mention rows of :func:`get_mention_set` (a
+    document with no mention gets ``[]``). A plan, not a cache: only
+    readers that need whole per-document sets (the incremental queries)
+    pay its groupBy. The call builds the mention set if it is missing."""
+    rows, _ = get_mention_set(spark, sf_dir, langs)
+    return rows.groupBy("doc_id").agg(
+        F.sort_array(F.collect_list("curie")).alias("curies")
+    )

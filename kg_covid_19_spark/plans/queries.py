@@ -27,10 +27,12 @@ from pyspark.storagelevel import StorageLevel
 from ..dictionaries import kg_cte_sql, normalized_gazetteer
 from ..sources.corpus import _release, artifact, local_frame, read_table
 from .pipeline import (
+    cooc_pairs,
     get_kg,
     get_mention_arrays,
+    get_mention_set,
     get_mentions,
-    pair_expand,
+    pair_counts,
     web_extract_parity as _web_extract_parity,
 )
 
@@ -336,42 +338,26 @@ def kg_drug_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def kg_mention_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-entity document frequency — the A3/A5 degree-count analog."""
+    """Per-entity document frequency — the A3/A5 degree-count analog.
+    The mention rows are distinct on (doc_id, curie) (see
+    ``get_mentions``), so a row count is the document count."""
     m = get_mentions(spark, sf_dir)
-    return m.groupBy("curie").agg(F.countDistinct("doc_id").alias("n_docs"))
-
-
-def _pair_counts(pm: DataFrame) -> DataFrame:
-    """Row-local pair expansion + bounded groupBy — the ONE definition
-    of pair-support counting, shared by the full and incremental
-    queries so their 'incremental == full' contract cannot drift."""
-    return (
-        pm.select(F.explode(pair_expand(F.col("curies"))).alias("p"))
-        .groupBy(
-            F.col("p.s").alias("subject"), F.col("p.o").alias("object")
-        )
-        .agg(F.count("*").alias("n_docs"))
-    )
+    return m.groupBy("curie").agg(F.count("*").alias("n_docs"))
 
 
 def _cooc_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (subject, object, n_docs) pair-support table, session-cached
-    (r7): co-occurrence counts, lift, the walk adjacency and the
-    weighted BFS all start from this ≤|dictionary|²-row frame, and each
-    re-ran the corpus-wide pair expansion + groupBy without it."""
-    def build():
-        pc = _pair_counts(get_mention_arrays(spark, sf_dir)).persist()
-        pc.count()
-        return pc
-
-    return artifact(spark, sf_dir, "cooc_pair_counts", build)
+    """The (subject, object, n_docs) pair-support table: the cached pair
+    counts of the mention set (``get_mention_set``). Co-occurrence
+    counts, lift, the walk adjacency and the weighted BFS all start
+    from this ≤|dictionary|²-row frame."""
+    return get_mention_set(spark, sf_dir)[1]
 
 
 def kg_cooccurrence_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pair co-occurrence support counts (A2 with counts kept).
 
     Pairs are expanded row-locally from each document's sorted mention
-    array (plans/pipeline.pair_expand) — NOT via a mentions self-join on
+    array (plans/pipeline.cooc_pairs) — NOT via a mentions self-join on
     doc_id, which at 100 TB would shuffle the whole corpus on a
     corpus-sized key. The only shuffle is the final groupBy over
     ≤|dictionary|² pair keys, collapsed map-side by partial aggregation."""
@@ -508,8 +494,8 @@ def kg_cooc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion is the row-local (no doc_id self-join) plan of the full
     query."""
     pm = get_mention_arrays(spark, sf_dir)
-    base = _pair_counts(pm.filter(F.col("doc_id") % DELTA_MOD != 0))
-    delta = _pair_counts(pm.filter(F.col("doc_id") % DELTA_MOD == 0))
+    base = pair_counts(pm.filter(F.col("doc_id") % DELTA_MOD != 0))
+    delta = pair_counts(pm.filter(F.col("doc_id") % DELTA_MOD == 0))
     return (
         base.unionByName(delta)
         .groupBy("subject", "object")
@@ -535,8 +521,8 @@ def kg_lift_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_delta = F.col("doc_id") % DELTA_MOD == 0
 
     pairs = (
-        _pair_counts(pm.filter(~is_delta))
-        .unionByName(_pair_counts(pm.filter(is_delta)))
+        pair_counts(pm.filter(~is_delta))
+        .unionByName(pair_counts(pm.filter(is_delta)))
         .groupBy("subject", "object")
         .agg(F.sum("n_docs").cast("long").alias("n_docs"))
     )
@@ -900,12 +886,11 @@ def kg_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     wedge-generating side. Each triangle {a,b,c} with a<b<c in
     (degree, id) order is produced exactly once as a→b, a→c wedge
     closed by b→c. The triangle set is orientation-invariant, so the
-    DuckDB oracle (plain a<b<c id-ordering) is unchanged."""
-    _, edges = get_kg(spark, sf_dir)
-    e = (
-        edges.filter(F.col("predicate") == "biolink:correlated_with")
-        .select("subject", "object")
-    )
+    DuckDB oracle (plain a<b<c id-ordering) is unchanged.
+
+    The edges are the pinned undirected co-occurrence frame, one
+    direction kept, rather than a filter over every KG edge."""
+    e = _und_cooc(spark, sf_dir).filter(F.col("subject") < F.col("object"))
     deg = _cooc_degrees(spark, sf_dir)  # shared persisted (id, deg)
     return triangle_counts_frame(e, deg, degree_ordered=True)
 
@@ -1080,7 +1065,7 @@ def kg_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins never see corpus-sized inputs regardless of crawl size;
     mention edges are new by construction (fresh doc subjects) and are
     counted without any join. The per-doc pair expansion is row-local
-    (pair_expand) off the persisted mention arrays — zero extra corpus
+    (cooc_pairs) off the regrouped mention arrays — zero extra corpus
     scans beyond the shared materialization every kg_* query reuses."""
     arrays = get_mention_arrays(spark, sf_dir)
     is_delta = (F.col("doc_id") % 10) == MERGE_DELTA_MOD
@@ -1095,16 +1080,7 @@ def incremental_merge_frame(idx: DataFrame, delta: DataFrame) -> DataFrame:
     status ∈ {new, known}."""
 
     def dpairs(df: DataFrame) -> DataFrame:
-        return (
-            df.select(
-                F.explode_outer(pair_expand(F.col("curies"))).alias("p")
-            )
-            .filter(F.col("p").isNotNull())
-            .select(
-                F.col("p.s").alias("subject"), F.col("p.o").alias("object")
-            )
-            .distinct()
-        )
+        return cooc_pairs(df).distinct()
 
     def dterms(df: DataFrame) -> DataFrame:
         return (

@@ -108,12 +108,14 @@ def artifact(spark: SparkSession, sf_dir: str, name: Hashable,
     tools/scaling.py does), or its timings of the artifact-backed
     queries measure a dict lookup.
 
-    Durability: builds that ``localCheckpoint`` (the mention arrays and
-    the iterative graph loops) cut lineage to executor-local blocks. A
-    lost executor, or one removed by dynamic allocation, makes such an
-    artifact unrecoverable until it is rebuilt; a cluster that runs
-    with dynamic allocation should use a reliable ``checkpoint()`` or
-    replicated ``persist`` there instead."""
+    Durability: a persisted artifact (the graph, the mention set) keeps
+    its lineage, so a lost block is recomputed. Builds that
+    ``localCheckpoint`` (the iterative graph loops) cut lineage to
+    executor-local blocks. A lost executor, or one removed by dynamic
+    allocation, makes such an artifact unrecoverable until it is
+    rebuilt; a cluster that runs with dynamic allocation should use a
+    reliable ``checkpoint()`` or replicated ``persist`` there
+    instead."""
     source = table_source_key(spark, sf_dir)
     fp = None if source[1] else _documents_files(sf_dir)
     key = (*source, name)
@@ -198,24 +200,44 @@ def local_frame(spark: SparkSession, rows: Sequence[Sequence],
 
 
 def _scan_layout(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
-    """(estimated scan splits, total file bytes) for the documents table.
+    """(scan splits, total file bytes) for the documents table.
 
-    r7: splits are estimated from file sizes with the scan-packing
-    formula (maxPartitionBytes + openCostInBytes per file, guide §6)
-    instead of a .rdd conversion — the conversion costs ~1 s of driver
-    time and it landed inside the timed KG build. The sizes come from
-    the listing the artifact fingerprint uses; a source with no files
-    under ``sf_dir`` (a catalog table) uses the planner's size estimate
-    as one file."""
+    The split count is the one Spark plans for the scan, computed from
+    the file sizes instead of a .rdd conversion (which costs ~1 s of
+    driver time and landed inside the timed KG build). It mirrors
+    ``FilePartition.maxSplitBytes``: the split size is
+    ``maxPartitionBytes`` capped down to the bytes per core (total
+    bytes, each file charged ``openCostInBytes``, over
+    ``files.minPartitionNum`` or the default parallelism) but not below
+    the open cost. Each file is cut into pieces of that size and the
+    pieces are packed largest first, a new split starting whenever the
+    next piece would overflow the current one. The sizes come from the
+    listing the artifact fingerprint uses; a source with no files under
+    ``sf_dir`` (a catalog table) uses the planner's size estimate as one
+    file."""
     sizes = [size for _, size, _ in _documents_files(sf_dir)]
     if not sizes:
         plan = read_table(spark, sf_dir, "documents")._jdf.queryExecution()
         sizes = [int(str(plan.optimizedPlan().stats().sizeInBytes()))]
     conf = spark._jsparkSession.sessionState().conf()
-    max_bytes = conf.filesMaxPartitionBytes()
     open_cost = conf.filesOpenCostInBytes()
-    total = sum(s + open_cost for s in sizes)
-    return max(1, -(-total // max_bytes)), sum(sizes)
+    cores = int(
+        spark.conf.get("spark.sql.files.minPartitionNum", None)
+        or spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or spark.sparkContext.defaultParallelism
+    )
+    per_core = sum(s + open_cost for s in sizes) // cores
+    split = min(conf.filesMaxPartitionBytes(), max(open_cost, per_core))
+    pieces = sorted(
+        (min(split, s - off) for s in sizes for off in range(0, s, split)),
+        reverse=True,
+    )
+    splits, filled = 0, 0
+    for piece in pieces:
+        if not splits or filled + piece > split:
+            splits, filled = splits + 1, 0
+        filled += piece + open_cost
+    return splits, sum(sizes)
 
 
 def _scan_partitions(spark: SparkSession, sf_dir: str) -> int:

@@ -194,20 +194,13 @@ def stream_dedup_hashes_watermarked(
 
 def _pair_count_plan(docs: DataFrame) -> DataFrame:
     """(streaming or batch) documents → pair-support counts via the
-    SAME row-local pair_expand kernel as the batch
-    kg_cooccurrence_counts (plans/pipeline.pair_expand + the
-    _pair_counts shape) — stream/batch parity is structural."""
-    from ..plans.pipeline import pair_expand
+    SAME row-local expansion and count as the batch
+    kg_cooccurrence_counts (plans/pipeline.pair_counts) — stream/batch
+    parity is structural."""
+    from ..plans.pipeline import pair_counts
 
     detect = make_curie_udf()
-    return (
-        # materialize the mention array BEFORE pair_expand: a Python UDF
-        # cannot appear inside higher-order-function lambdas
-        docs.select(detect(F.col("text")).alias("curies"))
-        .select(F.explode(pair_expand(F.col("curies"))).alias("p"))
-        .groupBy(F.col("p.s").alias("subject"), F.col("p.o").alias("object"))
-        .agg(F.count("*").alias("n_docs"))
-    )
+    return pair_counts(docs.select(detect(F.col("text")).alias("curies")))
 
 
 def stream_cooc_counts(

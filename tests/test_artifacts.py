@@ -67,7 +67,7 @@ def test_invalidate_frees_mention_array_checkpoint(spark, tmp_path):
     invalidate_session_caches(spark)
     before = _cached_rdds(spark)
     pipeline.get_mention_arrays(spark, str(tmp_path))
-    assert _cached_rdds(spark) - before  # the checkpoint holds blocks
+    assert _cached_rdds(spark) - before  # the mention set's caches hold blocks
     invalidate_session_caches(spark)
     assert _cached_rdds(spark) <= before
 

@@ -17,8 +17,11 @@ from kg_covid_19_spark.sources.corpus import (
     _scan_layout,
     invalidate_session_caches,
     local_frame,
+    read_table,
 )
 from kg_covid_19_spark.sources.provider import TableProvider
+
+from conftest import SF_DIR
 
 
 def _write_part(sf_dir, n: int) -> int:
@@ -42,7 +45,9 @@ def test_scan_layout_reads_byte_size_conf(spark, tmp_path):
     finally:
         spark.conf.set(key, saved)
     assert nbytes == size
-    assert splits == 1
+    # each small file is charged the 4 MB open cost, so neither shares
+    # a split: Spark plans two
+    assert splits == 2
 
 
 def test_scan_layout_counts_only_files_spark_reads(spark, tmp_path):
@@ -94,6 +99,36 @@ def test_scan_layout_of_catalog_table_has_bytes(spark, tmp_path):
     finally:
         spark.conf.unset(CATALOG_CONF)
         spark.sql("DROP TABLE IF EXISTS spark_catalog.default.documents")
+
+
+def test_scan_layout_predicts_planned_splits(spark, tmp_path):
+    """On multi-file corpora the estimate is the split count Spark plans
+    for the scan: the bytes-per-core cap on the split size, files cut
+    into split-sized pieces and the pieces packed largest first."""
+    table = pq.read_table(f"{SF_DIR}/documents.parquet")
+    layouts = {"one": (500,), "uneven": (400, 60, 30, 10), "even": (125,) * 4}
+    confs = ((None, None), ("64k", "16k"), ("256k", "4k"))
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    saved = [spark.conf.get(k) for k in keys]
+    try:
+        for name, counts in layouts.items():
+            root = tmp_path / name / "documents.parquet"
+            root.mkdir(parents=True)
+            start = 0
+            for i, n in enumerate(counts):
+                pq.write_table(table.slice(start, n), root / f"part-{i:05d}.parquet")
+                start += n
+            for conf in confs:
+                for k, v, old in zip(keys, conf, saved):
+                    spark.conf.set(k, v or old)
+                want = read_table(
+                    spark, str(tmp_path / name), "documents"
+                ).rdd.getNumPartitions()
+                got = _scan_layout(spark, str(tmp_path / name))[0]
+                assert got == want, (name, conf, got, want)
+    finally:
+        for k, v in zip(keys, saved):
+            spark.conf.set(k, v)
 
 
 def _leaf_names(df) -> set[str]:

@@ -213,7 +213,7 @@ def test_incremental_merge_totals_consistent(spark):
     of the delta-side frames (the rollup partitions, never drops)."""
     from pyspark.sql import functions as F
 
-    from kg_covid_19_spark.plans.pipeline import get_mention_arrays, pair_expand
+    from kg_covid_19_spark.plans.pipeline import cooc_pairs, get_mention_arrays
     from kg_covid_19_spark.plans.queries import (
         MERGE_DELTA_MOD,
         kg_incremental_merge,
@@ -225,10 +225,7 @@ def test_incremental_merge_totals_consistent(spark):
     delta = get_mention_arrays(spark, SF_DIR).filter(
         (F.col("doc_id") % 10) == MERGE_DELTA_MOD
     )
-    n_pairs = (
-        delta.select(F.explode(pair_expand(F.col("curies"))).alias("p"))
-        .select("p.s", "p.o").distinct().count()
-    )
+    n_pairs = cooc_pairs(delta).distinct().count()
     n_terms = (
         delta.select(F.explode("curies").alias("c")).select("c")
         .distinct().count()

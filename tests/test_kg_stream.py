@@ -195,7 +195,7 @@ def test_stream_dedup_watermarked_bounds_state_and_drops_within_window(
 
 def test_stream_cooc_counts_match_batch(spark, tmp_path):
     """The complete-mode streaming aggregate must equal the batch pair
-    counts over the same files (shared pair_expand kernel), and the
+    counts over the same files (shared pair_counts kernel), and the
     n_docs support values must be real multi-document counts."""
     from kg_covid_19_spark.streaming.kg_stream import (
         _pair_count_plan,

@@ -20,9 +20,8 @@ def _executed_plan(df) -> str:
 
 
 def test_mention_chain_single_udf_min_exchanges(spark):
-    # explicit langs → distinct logical plan, so the session-cached
-    # mentions frame (get_mentions persists an identical-plan DF) can't
-    # shadow this test with an InMemoryTableScan
+    # explicit langs → distinct logical plan, so a session-cached
+    # mention frame can't shadow this test with an InMemoryTableScan
     plan = _executed_plan(
         doc_mentions(spark, SF_DIR, langs=("en", "de", "fr", "es", "xx"))
     )
@@ -43,16 +42,11 @@ def test_cooccurrence_counts_no_docid_join(spark):
     corpus-sized shuffle at 100x). Distinct langs arg cache-busts the
     session-persisted mention frames."""
     from kg_covid_19_spark.plans.pipeline import (
-        pages_with_mentions, pair_expand,
+        pages_with_mentions, pair_counts,
     )
 
     pm = pages_with_mentions(spark, SF_DIR, langs=("en", "de", "fr", "es", "xx"))
-    q = (
-        pm.select(F.explode_outer(pair_expand(F.col("curies"))).alias("p"))
-        .filter(F.col("p").isNotNull())
-        .groupBy(F.col("p.s").alias("subject"), F.col("p.o").alias("object"))
-        .agg(F.count("*").alias("n_docs"))
-    )
+    q = pair_counts(pm)
     plan = _executed_plan(q)
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
