@@ -13,7 +13,7 @@ SURVEY.md) as an idiomatic Spark DataFrame pipeline:
       scibite_cord.py:220-340)
     → entity linking / CURIE normalization (broadcast SSSOM-style left join
       + coalesce; utils/normalize_utils.py:7-46)
-    → canonicalization (salted groupBy node fusion, prefix-priority;
+    → canonicalization (groupBy node fusion, prefix-priority;
       merge_utils/merge_kg.py:22-34)
     → KGX node/edge DataFrames typed against the Biolink model.
 

@@ -8,9 +8,9 @@ identical across runs, engines, parallelism levels, and resumed
 checkpoints. 15 hex digits = 60 bits: fits a signed int64 on both
 engines and leaves mod-n bias below 2^-40 for any practical n.
 
-Consumers: operators/holdouts.py (negative-draw stream) and
-plans/queries.py (random-walk steps). Changing this expression
-changes every one of them in lockstep — that is the point.
+Consumer: operators/holdouts.py (the negative-draw stream, in both
+engines). Changing this expression changes the Spark plan and its
+DuckDB oracle in lockstep — that is the point.
 """
 
 from __future__ import annotations
@@ -19,9 +19,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def hash_mod(tag: str, value: Column, n: int | Column) -> Column:
-    """Uniform [0, n) gate from md5('<tag>|value'); ``n`` may be a
-    per-row Column (e.g. a node degree for walk-step selection)."""
+def hash_mod(tag: str, value: Column, n: int) -> Column:
+    """Uniform [0, n) gate from md5('<tag>|value')."""
     return (
         F.conv(
             F.substring(

@@ -19,16 +19,6 @@ and the ontology): only the large rows whose key may occur in the small
 source are grouped, every other row passes through without a shuffle.
 ``merge_nodes``/``merge_edges`` stay the merge of many large sources
 (``load_and_merge``).
-
-Skew: node fusion groups on entity id — at web scale a handful of ids
-(taxa, common diseases) carry orders of magnitude more rows than the
-median. ``salted_node_fusion`` performs the canonical two-phase aggregate:
-partial per (id, salt) then final per id, bounding any single reducer's
-input to ~1/n_salts of the hot key. For the algebraic aggregates used here
-Spark's map-side partial aggregation already achieves the same effect, so
-the salted path is off by default and exists for the property-fusion
-aggregates (collect_list of per-source property maps) where partial
-aggregation does NOT shrink the hot key.
 """
 
 from __future__ import annotations
@@ -68,30 +58,6 @@ def merge_nodes(frames: list[DataFrame]) -> DataFrame:
             F.min("category").alias("category"),
             _accum_provenance(),
         )
-    )
-
-
-def salted_node_fusion(frames: list[DataFrame], n_salts: int = 16) -> DataFrame:
-    """Two-phase (salted) node fusion for skew-heavy property aggregation.
-
-    Phase 1 groups on (id, salt) — the hot id's rows spread over n_salts
-    reducers; phase 2 merges the ≤n_salts partials per id. Results are
-    identical to merge_nodes (min/union are commutative+associative).
-    """
-    u = union_sources(frames).withColumn(
-        "_salt", F.pmod(F.xxhash64("name", "category", "provided_by"), F.lit(n_salts))
-    )
-    partial = u.groupBy("id", "_salt").agg(
-        F.min("name").alias("name"),
-        F.min("category").alias("category"),
-        F.collect_set("provided_by").alias("pbs"),
-    )
-    return partial.groupBy("id").agg(
-        F.min("name").alias("name"),
-        F.min("category").alias("category"),
-        F.concat_ws(
-            "|", F.array_sort(F.array_distinct(F.flatten(F.collect_list("pbs"))))
-        ).alias("provided_by"),
     )
 
 

@@ -20,7 +20,7 @@ Mapping (SURVEY.md §2.3 J11-J13, §2.4 A7):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -89,12 +89,12 @@ def _und_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both directions of the co-occurrence edge list, hash-partitioned
     on ``subject`` and persisted once per input (a session artifact).
 
-    r7: every iterative graph query (pagerank, BFS, components, the
-    hop joins) re-derived this frame from the persisted KGX edge
-    union EACH ROUND — at 32 shuffle partitions per branch that was
-    ~130 scan tasks per round and the dominant cost of the whole
-    family at bench scale (measured: 110 stages / 8855 tasks for one
-    3-round BFS). One keyed exchange here
+    r7: every iterative graph query (pagerank, components, the hop
+    joins) re-derived this frame from the persisted KGX edge union
+    EACH ROUND — at 32 shuffle partitions per branch that was ~130
+    scan tasks per round and the dominant cost of the whole family at
+    bench scale (measured: 110 stages / 8855 tasks for one 3-round
+    traversal). One keyed exchange here
     (partition count = spark.sql.shuffle.partitions, the cluster knob,
     then AQE-coalesced by size) and every round reads a compact cached
     frame whose hashpartitioning(subject) the per-round joins and
@@ -120,10 +120,9 @@ def _und_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cooc_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, deg) of the undirected co-occurrence graph, persisted once
-    per input (a session artifact) — triangles, the clustering
-    coefficient and the degree histogram each need this table, and
-    without the cache every one re-runs the union + aggregation
-    (triangles three times over, once per self-join arm).
+    per input (a session artifact). ``kg_triangle_counts`` is its only
+    reader; it joins the table twice (once per edge endpoint), and
+    without the cache each join re-runs the union + aggregation.
     The frame is |V| ≤ |dictionary| rows — broadcast-sized here,
     bounded by the entity vocabulary at any scale. On the distinct-pair
     edge set, countDistinct(object) == count(*) incident edges; the
@@ -151,30 +150,6 @@ def kg_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("far") != HUB)
         .select("mid", "far")
         .distinct()
-    )
-
-
-def kg_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GLOBAL clustering coefficient (transitivity) in exact integer
-    ppm: C = 3·triangles / wedges, with 3·triangles read off the
-    degree-oriented triangle frame (Σ per-node participations — each
-    triangle is counted at its three corners) and wedges = Σ C(deg, 2)
-    from one dictionary-bounded degree aggregate. deg·(deg−1) is
-    always even, so the `div 2` is exact and both engines agree; the
-    output is ONE scalar row — the canonical graph-cohesion readout
-    next to kg_graph_stats. Scale shape: inherits the O(m^1.5)
-    triangle bound; the wedge sum is a partial-agg scalar."""
-    tri = kg_triangle_counts(spark, sf_dir)
-    deg = _cooc_degrees(spark, sf_dir)
-    t3 = tri.agg(F.sum("n_triangles").alias("t3"))
-    w = deg.agg(F.expr("sum(deg * (deg - 1) div 2)").alias("w"))
-    return t3.crossJoin(w).select(
-        F.col("t3").cast("long").alias("triangle_participations"),
-        F.col("w").cast("long").alias("n_wedges"),
-        F.expr(
-            "CAST(CASE WHEN w > 0 THEN t3 * 1000000L div w "
-            "ELSE 0L END AS LONG)"
-        ).alias("gcc_ppm"),
     )
 
 
@@ -283,17 +258,6 @@ reach AS (
 SELECT id, min(r) AS component FROM reach GROUP BY id"""
 
 
-def kg_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree distribution of the co-occurrence graph (A5/A8 extension):
-    how many entities have each undirected degree. Two dictionary-
-    bounded aggregations (the first served by the shared degree
-    cache) — the histogram never exceeds |V| rows."""
-    degrees = _cooc_degrees(spark, sf_dir).select(
-        "id", F.col("deg").alias("degree")
-    )
-    return degrees.groupBy("degree").agg(F.count("*").alias("n_entities"))
-
-
 def kg_druggable_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """query-05: the 2-hop restricted to drug endpoints (the reference's
     druggable-genome TDL='Tclin' constraint becomes category='biolink:Drug')."""
@@ -347,9 +311,8 @@ def kg_mention_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cooc_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (subject, object, n_docs) pair-support table: the cached pair
-    counts of the mention set (``get_mention_set``). Co-occurrence
-    counts, lift, the walk adjacency and the weighted BFS all start
-    from this ≤|dictionary|²-row frame."""
+    counts of the mention set (``get_mention_set``), a
+    ≤|dictionary|²-row frame."""
     return get_mention_set(spark, sf_dir)[1]
 
 
@@ -362,120 +325,6 @@ def kg_cooccurrence_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized key. The only shuffle is the final groupBy over
     ≤|dictionary|² pair keys, collapsed map-side by partial aggregation."""
     return _cooc_pair_counts(spark, sf_dir)
-
-
-def kg_cooc_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Association lift per co-occurrence pair — the edge-weighting
-    step that separates signal pairs from chance pairs before a
-    co-occurrence edge enters the KG (reference analog: the SciBite
-    co-occurrence edges ship raw counts; production curation ranks
-    them by association strength). lift = P(a,b) / (P(a)·P(b)) over
-    document space, emitted as exact integer ppm
-    (n_ab · N · 10⁶ div (df_a · df_b)) so the score is
-    engine-reproducible — the same no-libm discipline as pagerank
-    and txt_bigram_lm (PMI is log(lift); the log is left to the
-    consumer, monotone in this score).
-
-    100 TB shape: pair supports come from the row-local pair
-    expansion (no corpus self-join); per-entity document frequencies
-    are a dictionary-bounded aggregate, broadcast to the pair frame;
-    N is a 1-row broadcast crossJoin (the sanctioned kind). At
-    extreme document counts (N > ~3·10⁹ with dictionary-scale
-    supports) the int64 product needs the DECIMAL(38,0) widening
-    pagerank already uses.
-
-    r7: kg_assoc_topk used to reference this frame through BOTH arms of
-    an endpoint union, re-executing the dfreq/n_total aggregations and
-    the three joins twice; it now expands both directions row-locally
-    (explode of two structs), so the lift plan executes once per
-    consumer and needs no persist."""
-    return _cooc_lift_build(spark, sf_dir)
-
-
-def _cooc_lift_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _cooc_pair_counts(spark, sf_dir)
-    m = get_mentions(spark, sf_dir)
-    dfreq = m.groupBy("curie").agg(F.countDistinct("doc_id").alias("df"))
-    n_total = m.agg(F.countDistinct("doc_id").alias("n_total"))
-    return (
-        pairs.join(
-            F.broadcast(
-                dfreq.select(
-                    F.col("curie").alias("subject"), F.col("df").alias("df_s")
-                )
-            ),
-            "subject",
-        )
-        .join(
-            F.broadcast(
-                dfreq.select(
-                    F.col("curie").alias("object"), F.col("df").alias("df_o")
-                )
-            ),
-            "object",
-        )
-        .crossJoin(F.broadcast(n_total))
-        .select(
-            "subject",
-            "object",
-            "n_docs",
-            "df_s",
-            "df_o",
-            F.expr(
-                "n_docs * n_total * 1000000L div (df_s * df_o)"
-            ).alias("lift_ppm"),
-        )
-    )
-
-
-ASSOC_TOPK = 3
-
-
-def kg_assoc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Association-graph sparsification: keep each entity's top-K
-    strongest co-occurrence partners by lift — the kNN-graph rule a
-    production KG applies before densely-mentioned entities drown the
-    edge table (a threshold rule goes vacuous as N grows and lift
-    concentrates at 1.0; top-K is scale-invariant by construction).
-    Each undirected pair is evaluated from BOTH endpoints, so an edge
-    survives if either side elects it. Deterministic total order:
-    (lift_ppm desc, n_docs desc, partner asc).
-
-    100 TB shape: the window partitions the PAIR frame by entity —
-    key space ≤ |dictionary|, rows ≤ |dictionary|², both bounded;
-    the corpus never enters the window. Hot entities (the planted
-    hub) hold at most |dictionary|−1 rows per partition."""
-    lift = kg_cooc_lift(spark, sf_dir)
-    # both directions via a row-local explode of two structs (r7): the
-    # former two-arm union referenced the lift plan twice, re-running
-    # its aggregations and joins per arm — this form evaluates lift
-    # once, with the identical row multiset
-    both = lift.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("subject").alias("entity"),
-                    F.col("object").alias("partner"),
-                    F.col("n_docs").alias("n_docs"),
-                    F.col("lift_ppm").alias("lift_ppm"),
-                ),
-                F.struct(
-                    F.col("object").alias("entity"),
-                    F.col("subject").alias("partner"),
-                    F.col("n_docs").alias("n_docs"),
-                    F.col("lift_ppm").alias("lift_ppm"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.entity", "e.partner", "e.n_docs", "e.lift_ppm")
-    w = Window.partitionBy("entity").orderBy(
-        F.desc("lift_ppm"), F.desc("n_docs"), F.asc("partner")
-    )
-    return (
-        both.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= ASSOC_TOPK)
-        .select("entity", "partner", "n_docs", "lift_ppm", "rk")
-    )
 
 
 DELTA_MOD = 10  # doc_id % DELTA_MOD == 0 plays the freshly-arrived slice
@@ -509,9 +358,12 @@ def kg_lift_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size are each maintained as key-wise SUM merges of BASE-
     and DELTA-slice aggregates (every input to lift is a commutative
     monoid over disjoint doc slices), then lift_ppm is recomputed
-    from the maintained sufficient statistics. The DuckDB oracle is
-    the plain full-corpus kg_cooc_lift — incremental == full is the
-    contract, hash-checked. This is the refresh a daily crawl runs:
+    from the maintained sufficient statistics, as
+    n_docs · N · 10⁶ div (df_s · df_o) in exact integer ppm. The
+    document frequencies are broadcast to the pair frame and N is a
+    1-row broadcast crossJoin. The DuckDB oracle computes lift over
+    the full corpus — incremental == full is the contract,
+    hash-checked. This is the refresh a daily crawl runs:
     O(delta) new aggregation work + a dictionary-bounded merge;
     the division is the only non-additive step and it happens LAST,
     on the merged statistics (re-deriving scores from maintained
@@ -577,301 +429,6 @@ def kg_lift_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-WALK_STEPS = 3   # transitions per walk (walk visits WALK_STEPS+1 nodes)
-WALKS_PER_NODE = 2
-
-
-def kg_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic node2vec-style walk corpus over the co-occurrence
-    graph — the training-data export for graph-embedding models, made
-    reproducible by replacing the RNG with the engine's shared hash
-    gate (functions/hashing.py): at each step the next neighbor is
-    adjacency index md5('walk|start|walk_id|step|cur') mod deg(cur),
-    over a canonically ordered adjacency (row_number by neighbor id).
-    A pure function of the graph — identical across runs, engines,
-    parallelism levels — so the walk corpus itself is hash-checked
-    against the DuckDB oracle, not just row-counted.
-
-    100 TB shape: each unrolled step is one equi-join of the walk
-    frontier (|nodes|·WALKS_PER_NODE rows) against the adjacency on
-    the current node — frontier-sized shuffles, never edge-squared;
-    the adjacency with its (idx, deg) annotation is built once by a
-    single window over the edge list and would be a persisted/bucketed
-    artifact keyed by node in production, exactly like the incremental
-    dedup index.
-
-    r7: the finished walk corpus is itself session-cached — it is the
-    bounded (|nodes|·WALKS_PER_NODE·(WALK_STEPS+1))-row export that
-    kg_walk_skipgrams immediately self-joins; without the cache the
-    skip-gram query re-executed the whole unrolled step chain twice
-    (once per join arm)."""
-    return artifact(
-        spark, sf_dir, "walk_corpus", lambda: _walks_build(spark, sf_dir)
-    )
-
-
-def _walks_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.hashing import hash_mod
-
-    # the annotated adjacency is referenced once per unrolled step;
-    # without pinning it, the corpus-scale pair expansion upstream
-    # re-executes WALK_STEPS+1 times (no ReusedExchange across the
-    # step joins) — persist the dictionary-bounded frame once, as a
-    # session artifact like the other iterative queries' results
-    def build_adjacency():
-        und = _cooc_undirected(spark, sf_dir)
-        w = Window.partitionBy("u").orderBy("v")
-        a = und.select(
-            "u",
-            "v",
-            (F.row_number().over(w) - 1).alias("idx"),
-            F.count("*").over(Window.partitionBy("u")).alias("deg"),
-        ).persist()
-        a.count()
-        return a
-
-    adj = artifact(spark, sf_dir, "walk_adjacency", build_adjacency)
-    starts = adj.select("u").distinct()
-    frontier = starts.crossJoin(
-        spark.range(WALKS_PER_NODE).select(
-            F.col("id").cast("int").alias("walk_id")
-        )
-    ).select(F.col("u").alias("start"), "walk_id")
-    out = frontier.select(
-        "start", "walk_id", F.lit(0).alias("step"),
-        F.col("start").alias("node"),
-    )
-    cur = frontier.withColumn("cur", F.col("start"))
-    for s in range(1, WALK_STEPS + 1):
-        key = F.concat_ws(
-            "|", "start", F.col("walk_id").cast("string"),
-            F.lit(str(s)), "cur",
-        )
-        a = adj.alias(f"a{s}")
-        cur = (
-            cur.join(
-                a,
-                (F.col(f"a{s}.u") == F.col("cur"))
-                & (
-                    F.col(f"a{s}.idx")
-                    == hash_mod("walk", key, F.col(f"a{s}.deg"))
-                ),
-            )
-            .select("start", "walk_id", F.col(f"a{s}.v").alias("cur"))
-            # checkpoint each step (r7): step s is read by BOTH the
-            # s+1 frontier join and the output union — without the
-            # cut, step s's join chain re-executed once per later
-            # step (triangular recompute) and the union's analysis
-            # re-nested every step's plan
-            .localCheckpoint(eager=True)
-        )
-        out = out.unionByName(
-            cur.select(
-                "start", "walk_id", F.lit(s).alias("step"),
-                F.col("cur").alias("node"),
-            )
-        )
-    out = out.persist()
-    out.count()
-    return out
-
-
-SKIPGRAM_WINDOW = 2
-
-
-def kg_walk_skipgrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skip-gram training pairs from the deterministic walk corpus —
-    the final export an embedding trainer actually consumes: within
-    each walk, every ordered (center, context) node pair at step
-    distance 1..SKIPGRAM_WINDOW, aggregated to pair counts. Because
-    the walks are RNG-free, the full training-pair distribution is
-    engine-reproducible and hash-checked, not sampled.
-
-    100 TB shape: the self-join keys on (start, walk_id) — each group
-    is one walk of WALK_STEPS+1 rows, so the join fans out a bounded
-    (WALK_STEPS+1)·2·SKIPGRAM_WINDOW pairs per walk; the final count
-    groupBy is over the ≤|dict|² pair key space, partial-combined
-    map-side."""
-    w = kg_random_walks(spark, sf_dir)
-    a, b = w.alias("a"), w.alias("b")
-    dist = F.abs(F.col("a.step") - F.col("b.step"))
-    return (
-        a.join(
-            b,
-            (F.col("a.start") == F.col("b.start"))
-            & (F.col("a.walk_id") == F.col("b.walk_id"))
-            & (dist >= 1)
-            & (dist <= SKIPGRAM_WINDOW),
-        )
-        .groupBy(
-            F.col("a.node").alias("center"), F.col("b.node").alias("context")
-        )
-        .agg(F.count("*").alias("n"))
-    )
-
-
-def _cooc_undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both directions of the distinct co-occurrence pair set."""
-    pairs = _cooc_pair_counts(spark, sf_dir).select(
-        "subject", "object"
-    )
-    return pairs.select(
-        F.col("subject").alias("u"), F.col("object").alias("v")
-    ).unionByName(
-        pairs.select(F.col("object").alias("u"), F.col("subject").alias("v"))
-    )
-
-
-BFS_ROUNDS = 3
-
-def kg_hub_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session artifact — see _hub_distances_build."""
-    return artifact(
-        spark, sf_dir, "hub_distances",
-        lambda: _hub_distances_build(spark, sf_dir),
-    )
-
-
-def _hub_distances_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BFS shortest-path lengths from the hub over the co-occurrence
-    graph, bounded to BFS_ROUNDS hops — the iterative-traversal
-    counterpart of kg_pagerank (same per-round persist discipline, same
-    unrolled-CTE oracle). Integer distances only: nothing float to
-    diverge. Each round is one join on the frontier key + one min
-    groupBy; unreached nodes are absent (no infinity sentinel)."""
-    und = _und_cooc(spark, sf_dir)
-    # per-round localCheckpoint, not persist (r7): a persisted round
-    # still nests every earlier round's analyzed plan, and Catalyst
-    # re-analysis dominated the loop; the checkpoint flattens it
-    dist = (
-        und.select(F.col("subject").alias("id"))
-        .distinct()
-        .filter(F.col("id") == HUB)
-        .select("id", F.lit(0).cast("int").alias("dist"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(BFS_ROUNDS):
-        reached = (
-            und.join(dist, und.subject == dist.id)
-            .select(
-                F.col("object").alias("id"),
-                (F.col("dist") + 1).alias("dist"),
-            )
-        )
-        dist = (
-            dist.unionByName(reached)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-    return dist
-
-
-def _bfs_sql() -> str:
-    parts = [
-        """und AS (
-  SELECT subject, object FROM cooc_edges
-  UNION ALL
-  SELECT object AS subject, subject AS object FROM cooc_edges
-)""",
-        f"d0 AS (SELECT '{HUB}' AS id, 0 AS dist "
-        f"WHERE EXISTS (SELECT 1 FROM und WHERE subject = '{HUB}'))",
-    ]
-    for k in range(BFS_ROUNDS):
-        parts.append(
-            f"d{k + 1} AS (SELECT id, min(dist) AS dist FROM ("
-            f"SELECT id, dist FROM d{k} "
-            f"UNION ALL "
-            f"SELECT und.object AS id, d{k}.dist + 1 AS dist "
-            f"FROM und JOIN d{k} ON und.subject = d{k}.id"
-            f") GROUP BY id)"
-        )
-    return ",\n".join(parts) + f"\nSELECT id, dist FROM d{BFS_ROUNDS}"
-
-
-def kg_weighted_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session artifact — see _weighted_distances_build."""
-    return artifact(
-        spark, sf_dir, "weighted_distances",
-        lambda: _weighted_distances_build(spark, sf_dir),
-    )
-
-
-def _weighted_distances_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-hop WEIGHTED shortest paths from the hub — the min-plus
-    twin of kg_hub_distances. Edge cost is 1_000_000 div n_docs over
-    the co-occurrence support counts (strong associations are cheap to
-    traverse), all-integer so nothing float can diverge between
-    engines; the contract is "minimum total cost using at most
-    BFS_ROUNDS hops", which the unrolled-CTE oracle states exactly.
-
-    Scale shape: identical to the BFS — each round is one join on the
-    frontier key plus one min groupBy, per-round persist/unpersist so
-    lineage stays flat; the weight column rides the same exchange the
-    unweighted edge join already pays (no extra shuffle for weights)."""
-    cc = kg_cooccurrence_counts(spark, sf_dir)
-    w = cc.select(
-        "subject", "object", F.expr("1000000L div n_docs").alias("w")
-    )
-    und = w.unionByName(
-        w.select(
-            F.col("object").alias("subject"),
-            F.col("subject").alias("object"),
-            "w",
-        )
-    )
-    # per-round localCheckpoint, not persist (r7): a persisted round
-    # still nests every earlier round's analyzed plan, and Catalyst
-    # re-analysis dominated the loop; the checkpoint flattens it
-    dist = (
-        und.select(F.col("subject").alias("id"))
-        .distinct()
-        .filter(F.col("id") == HUB)
-        .select("id", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(BFS_ROUNDS):
-        reached = und.join(dist, und.subject == dist.id).select(
-            F.col("object").alias("id"),
-            (F.col("dist") + F.col("w")).alias("dist"),
-        )
-        dist = (
-            dist.unionByName(reached)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-    return dist
-
-
-def _weighted_bfs_sql() -> str:
-    parts = [
-        """wcnt AS (
-  SELECT a.curie AS s, b.curie AS o, count(*) AS n
-  FROM mentions a JOIN mentions b
-    ON a.doc_id = b.doc_id AND a.curie < b.curie
-  GROUP BY a.curie, b.curie
-)""",
-        """wund AS (
-  SELECT s AS subject, o AS object, 1000000 // n AS w FROM wcnt
-  UNION ALL
-  SELECT o AS subject, s AS object, 1000000 // n AS w FROM wcnt
-)""",
-        f"d0 AS (SELECT '{HUB}' AS id, CAST(0 AS BIGINT) AS dist "
-        f"WHERE EXISTS (SELECT 1 FROM wund WHERE subject = '{HUB}'))",
-    ]
-    for k in range(BFS_ROUNDS):
-        parts.append(
-            f"d{k + 1} AS (SELECT id, min(dist) AS dist FROM ("
-            f"SELECT id, dist FROM d{k} "
-            f"UNION ALL "
-            f"SELECT wund.object AS id, d{k}.dist + wund.w AS dist "
-            f"FROM wund JOIN d{k} ON wund.subject = d{k}.id"
-            f") GROUP BY id)"
-        )
-    return ",\n".join(parts) + f"\nSELECT id, dist FROM d{BFS_ROUNDS}"
-
-
 def kg_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-entity triangle participation over the co-occurrence graph —
     the clustering-structure metric next to degree (A5).
@@ -891,7 +448,7 @@ def kg_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     The edges are the pinned undirected co-occurrence frame, one
     direction kept, rather than a filter over every KG edge."""
     e = _und_cooc(spark, sf_dir).filter(F.col("subject") < F.col("object"))
-    deg = _cooc_degrees(spark, sf_dir)  # shared persisted (id, deg)
+    deg = _cooc_degrees(spark, sf_dir)  # persisted (id, deg)
     return triangle_counts_frame(e, deg, degree_ordered=True)
 
 
@@ -902,30 +459,10 @@ def triangle_counts_frame(
     undirected edge (either direction), ``deg`` is (id, deg).
 
     degree_ordered=True is the production orientation (what
-    kg_triangle_counts uses); degree_ordered=False orients by id alone
-    — same output, but the wedge intermediate is Σ out-deg², which a
-    low-id hub turns quadratic. The bench's planted-hub slice times
-    the two side by side so the r3 refactor's win is a measured number
-    at its design point, not prose."""
-    tri = triangles_frame(e, deg, degree_ordered=degree_ordered)
-    return (
-        tri.select(F.explode(F.array("a", "b", "c")).alias("id"))
-        .groupBy("id")
-        .agg(F.count("*").alias("n_triangles"))
-    )
-
-
-def triangles_frame(
-    e: DataFrame, deg: DataFrame, degree_ordered: bool = True
-) -> DataFrame:
-    """Triangle ENUMERATION — one (a, b, c) row per triangle, members
-    in wedge order (a = wedge center, so a/b/c is NOT id-sorted under
-    degree ordering; consumers id-sort the member pairs they need).
-    This is triangle_counts_frame's plan minus the final corner
-    explode. degree_ordered=True is the production orientation (O(m^1.5) wedge
-    bound); False orients by id alone — same triangle set, but a
-    low-id hub turns the wedge intermediate quadratic (the bench's
-    planted-hub slice measures the gap)."""
+    kg_triangle_counts uses, O(m^1.5) wedge bound); degree_ordered=False
+    orients by id alone — same output, but the wedge intermediate is
+    Σ out-deg², which a low-id hub turns quadratic. The planted-hub test
+    checks that both orientations agree."""
     ed = e.join(
         deg.select(F.col("id").alias("subject"), F.col("deg").alias("ds")),
         "subject",
@@ -962,11 +499,16 @@ def triangles_frame(
         F.col("src").alias("a"), F.col("dst").alias("c"),
         F.col(ord_col).alias("deg_c"),
     )
-    wedges = w1.join(w2, "a").filter(later)
-    return wedges.join(
+    # one (a, b, c) row per triangle: the a→b, a→c wedge closed by b→c
+    tri = w1.join(w2, "a").filter(later).join(
         o.select(F.col("src").alias("b"), F.col("dst").alias("c")),
         ["b", "c"],
     ).select("a", "b", "c")
+    return (
+        tri.select(F.explode(F.array("a", "b", "c")).alias("id"))
+        .groupBy("id")
+        .agg(F.count("*").alias("n_triangles"))
+    )
 
 
 def kg_schema_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1371,108 +913,6 @@ def _pagerank_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     return r.select("id", F.col("r").alias("rank_ppm"))
 
 
-PPR_SEED_PREFIXES = ("CHEBI:", "DrugCentral:")  # chemical/drug nodes
-
-
-def kg_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PERSONALIZED PageRank: restart mass confined to a seed set (the
-    chemical/drug nodes) — the drug-centric importance ranking a
-    repurposing consumer of this KG actually asks for, and the standard
-    PPR formulation (teleport to seeds, not uniformly). Same
-    integer-ppm / DECIMAL(38,0) machinery and per-round persist
-    discipline as kg_pagerank, so the result is bit-identical at any
-    parallelism and in the unrolled-CTE oracle; only the base vector
-    differs: seeds restart with PR_BASE_PPM, everything else restarts
-    with 0, and the initial mass sits on the seeds."""
-    return artifact(
-        spark, sf_dir, "pagerank_personalized",
-        lambda: _ppr_build(spark, sf_dir),
-    )
-
-
-def _ppr_update_expr(s_col: str = "s") -> str:
-    damp = (
-        f"CAST(floor((CAST({PR_DAMP_PPM} AS DECIMAL(38,0)) * "
-        f"coalesce({s_col}, 0L)) / {_PPM}) AS BIGINT)"
-    )
-    return (
-        f"CAST((CASE WHEN is_seed THEN {PR_BASE_PPM} ELSE 0L END) + "
-        f"{damp} AS LONG)"
-    )
-
-
-def _ppr_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    und = _und_cooc(spark, sf_dir)
-    seed_pred = None
-    for p in PPR_SEED_PREFIXES:
-        term = F.col("id").startswith(p)
-        seed_pred = term if seed_pred is None else (seed_pred | term)
-    # localCheckpoint discipline: see _pagerank_build (r7)
-    deg = (
-        und.groupBy(F.col("subject").alias("id"))
-        .agg(F.count("*").alias("deg"))
-        .withColumn("is_seed", seed_pred)
-        .localCheckpoint(eager=True)
-    )
-    r = deg.select(
-        "id", "is_seed",
-        F.when(F.col("is_seed"), F.lit(_PPM))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("r"),
-    )
-    for _ in range(PR_ITERS):
-        contrib = r.join(deg.select("id", "deg"), "id").select(
-            "id", F.expr("r div deg").alias("c")
-        )
-        msgs = (
-            und.join(contrib, F.col("subject") == F.col("id"))
-            .groupBy(F.col("object").alias("mid"))
-            .agg(F.sum("c").alias("s"))
-        )
-        r = (
-            deg.select("id", "is_seed")
-            .join(msgs, F.col("id") == F.col("mid"), "left")
-            .select("id", "is_seed", F.expr(_ppr_update_expr("s")).alias("r"))
-            .localCheckpoint(eager=True)
-        )
-    return r.select("id", F.col("r").alias("ppr_ppm"))
-
-
-def _ppr_sql() -> str:
-    like = " OR ".join(f"id LIKE '{p}%'" for p in PPR_SEED_PREFIXES)
-    parts = [
-        """und AS (
-  SELECT subject, object FROM cooc_edges
-  UNION ALL
-  SELECT object AS subject, subject AS object FROM cooc_edges
-)""",
-        "deg AS (SELECT subject AS id, count(*) AS deg FROM und "
-        "GROUP BY subject)",
-        f"sd AS (SELECT id, deg, ({like}) AS is_seed FROM deg)",
-        f"p0 AS (SELECT id, is_seed, CAST(CASE WHEN is_seed THEN {_PPM} "
-        f"ELSE 0 END AS BIGINT) AS r FROM sd)",
-    ]
-    for k in range(PR_ITERS):
-        parts.append(
-            f"pc{k} AS (SELECT p{k}.id, p{k}.r // d.deg AS c "
-            f"FROM p{k} JOIN sd d ON p{k}.id = d.id)"
-        )
-        parts.append(
-            f"pm{k} AS (SELECT und.object AS id, sum(pc{k}.c) AS s "
-            f"FROM und JOIN pc{k} ON und.subject = pc{k}.id "
-            f"GROUP BY und.object)"
-        )
-        parts.append(
-            f"p{k + 1} AS (SELECT d.id, d.is_seed, "
-            f"CAST((CASE WHEN d.is_seed THEN {PR_BASE_PPM} ELSE 0 END) + "
-            f"({PR_DAMP_PPM} * coalesce(pm{k}.s, 0)) // {_PPM} "
-            f"AS BIGINT) AS r "
-            f"FROM sd d LEFT JOIN pm{k} ON d.id = pm{k}.id)"
-        )
-    return ",\n".join(parts) + f"\nSELECT id, r AS ppr_ppm FROM p{PR_ITERS}"
-
-
 def _pagerank_sql() -> str:
     parts = [
         """und AS (
@@ -1506,27 +946,18 @@ KG_QUERIES = {
     "kg_one_hop": kg_one_hop,
     "kg_two_hop": kg_two_hop,
     "web_extract_parity": _web_extract_parity,
-    "kg_degree_histogram": kg_degree_histogram,
     "kg_druggable_two_hop": kg_druggable_two_hop,
     "kg_provided_by_counts": kg_provided_by_counts,
     "kg_drug_mentions": kg_drug_mentions,
     "kg_mention_counts": kg_mention_counts,
     "kg_cooccurrence_counts": kg_cooccurrence_counts,
     "kg_cooc_incremental": kg_cooc_incremental,
-    "kg_cooc_lift": kg_cooc_lift,
-    "kg_assoc_topk": kg_assoc_topk,
     "kg_lift_incremental": kg_lift_incremental,
-    "kg_random_walks": kg_random_walks,
-    "kg_walk_skipgrams": kg_walk_skipgrams,
     "kg_pagerank": kg_pagerank,
-    "kg_pagerank_personalized": kg_pagerank_personalized,
     "kg_linked_mentions_scored": kg_linked_mentions_scored,
     "kg_triangle_counts": kg_triangle_counts,
     "kg_schema_validation": kg_schema_validation,
     "kg_incremental_merge": kg_incremental_merge,
-    "kg_clustering_coefficient": kg_clustering_coefficient,
-    "kg_hub_distances": kg_hub_distances,
-    "kg_weighted_distances": kg_weighted_distances,
     "kg_components_fixpoint": kg_components_fixpoint,
 }
 
@@ -1543,49 +974,6 @@ def _linkdict_sql() -> str:
 
 _CTE = kg_cte_sql()
 
-
-def _walks_sql(as_cte: bool = False) -> str:
-    """Unrolled walk CTEs — one chain per step, each selecting the
-    adjacency row whose canonical index equals the shared hash gate
-    (functions/hashing.hash_mod_sql), the exact SQL twin of the Spark
-    loop in kg_random_walks. With ``as_cte`` the walk union is wrapped
-    as a ``walks`` CTE for consumers (kg_walk_skipgrams)."""
-    from ..functions.hashing import hash_mod_sql
-
-    walk_ids = ", ".join(str(i) for i in range(WALKS_PER_NODE))
-    parts = [
-        """pair AS (
-  SELECT a.curie AS subject, b.curie AS object
-  FROM mentions a JOIN mentions b
-    ON a.doc_id = b.doc_id AND a.curie < b.curie
-  GROUP BY a.curie, b.curie
-)""",
-        "und AS (SELECT subject AS u, object AS v FROM pair "
-        "UNION ALL SELECT object AS u, subject AS v FROM pair)",
-        "adj AS (SELECT u, v, row_number() OVER (PARTITION BY u ORDER BY v)"
-        " - 1 AS idx, count(*) OVER (PARTITION BY u) AS deg FROM und)",
-        f"w0 AS (SELECT u AS start, walk_id FROM (SELECT DISTINCT u FROM adj)"
-        f" CROSS JOIN (SELECT unnest([{walk_ids}]) AS walk_id))",
-    ]
-    prev, prev_cur = "w0", "w.start"
-    for s in range(1, WALK_STEPS + 1):
-        key = f"w.start || '|' || w.walk_id || '|{s}|' || {prev_cur}"
-        parts.append(
-            f"c{s} AS (SELECT w.start, w.walk_id, a.v AS cur "
-            f"FROM {prev} w JOIN adj a ON a.u = {prev_cur} "
-            f"AND a.idx = {hash_mod_sql('walk', key, 'a.deg')})"
-        )
-        prev, prev_cur = f"c{s}", "w.cur"
-    selects = [
-        "SELECT start, walk_id, 0 AS step, start AS node FROM w0"
-    ] + [
-        f"SELECT start, walk_id, {s} AS step, cur AS node FROM c{s}"
-        for s in range(1, WALK_STEPS + 1)
-    ]
-    union = "\nUNION ALL\n".join(selects)
-    if as_cte:
-        return ",\n".join(parts) + f",\nwalks AS (\n{union}\n)"
-    return ",\n".join(parts) + "\n" + union
 
 KG_ORACLES = {
     "kg_category_counts": f"""
@@ -1618,19 +1006,6 @@ und AS (
 SELECT DISTINCT h1.object AS mid, h2.object AS far
 FROM und h1 JOIN und h2 ON h1.object = h2.subject
 WHERE h1.subject = '{HUB}' AND h2.object <> '{HUB}'
-""",
-    "kg_degree_histogram": f"""
-WITH {_CTE},
-und AS (
-  SELECT subject, object FROM cooc_edges
-  UNION ALL
-  SELECT object AS subject, subject AS object FROM cooc_edges
-),
-deg AS (
-  SELECT subject AS id, count(DISTINCT object) AS degree
-  FROM und GROUP BY subject
-)
-SELECT degree, count(*) AS n_entities FROM deg GROUP BY degree
 """,
     # the kernel inverts the deterministic html wrapping exactly on the
     # printable-ASCII corpus, so the oracle is the raw text — any
@@ -1682,19 +1057,6 @@ FROM mentions a JOIN mentions b
   ON a.doc_id = b.doc_id AND a.curie < b.curie
 GROUP BY a.curie, b.curie
 """,
-    "kg_random_walks": f"""
-WITH {_CTE},
-{_walks_sql()}
-""",
-    "kg_walk_skipgrams": f"""
-WITH {_CTE},
-{_walks_sql(as_cte=True)}
-SELECT a.node AS center, b.node AS context, count(*) AS n
-FROM walks a JOIN walks b
-  ON a.start = b.start AND a.walk_id = b.walk_id
-  AND abs(a.step - b.step) BETWEEN 1 AND {SKIPGRAM_WINDOW}
-GROUP BY 1, 2
-""",
     # incremental == full: every sufficient statistic of lift (pair
     # supports, doc frequencies, N) is additive over disjoint doc
     # slices, so the maintained view must hash-equal the full-corpus
@@ -1719,67 +1081,9 @@ JOIN dfreq ds ON p.subject = ds.curie
 JOIN dfreq dobj ON p.object = dobj.curie
 CROSS JOIN tot t
 """,
-    "kg_cooc_lift": f"""
-WITH {_CTE},
-pair AS (
-  SELECT a.curie AS subject, b.curie AS object, count(*) AS n_docs
-  FROM mentions a JOIN mentions b
-    ON a.doc_id = b.doc_id AND a.curie < b.curie
-  GROUP BY a.curie, b.curie
-),
-dfreq AS (
-  SELECT curie, count(DISTINCT doc_id) AS df FROM mentions GROUP BY curie
-),
-tot AS (SELECT count(DISTINCT doc_id) AS n_total FROM mentions)
-SELECT p.subject, p.object, p.n_docs, ds.df AS df_s, dobj.df AS df_o,
-       CAST(p.n_docs * t.n_total * 1000000 // (ds.df * dobj.df) AS BIGINT)
-         AS lift_ppm
-FROM pair p
-JOIN dfreq ds ON p.subject = ds.curie
-JOIN dfreq dobj ON p.object = dobj.curie
-CROSS JOIN tot t
-""",
-    "kg_assoc_topk": f"""
-WITH {_CTE},
-pair AS (
-  SELECT a.curie AS subject, b.curie AS object, count(*) AS n_docs
-  FROM mentions a JOIN mentions b
-    ON a.doc_id = b.doc_id AND a.curie < b.curie
-  GROUP BY a.curie, b.curie
-),
-dfreq AS (
-  SELECT curie, count(DISTINCT doc_id) AS df FROM mentions GROUP BY curie
-),
-tot AS (SELECT count(DISTINCT doc_id) AS n_total FROM mentions),
-lift AS (
-  SELECT p.subject, p.object, p.n_docs,
-         CAST(p.n_docs * t.n_total * 1000000 // (ds.df * dobj.df) AS BIGINT)
-           AS lift_ppm
-  FROM pair p
-  JOIN dfreq ds ON p.subject = ds.curie
-  JOIN dfreq dobj ON p.object = dobj.curie
-  CROSS JOIN tot t
-),
-both_dirs AS (
-  SELECT subject AS entity, object AS partner, n_docs, lift_ppm FROM lift
-  UNION ALL
-  SELECT object AS entity, subject AS partner, n_docs, lift_ppm FROM lift
-)
-SELECT entity, partner, n_docs, lift_ppm, CAST(rk AS INT) AS rk FROM (
-  SELECT entity, partner, n_docs, lift_ppm,
-         row_number() OVER (PARTITION BY entity
-                            ORDER BY lift_ppm DESC, n_docs DESC,
-                                     partner ASC) AS rk
-  FROM both_dirs
-) WHERE rk <= 3
-""",
     "kg_pagerank": f"""
 WITH {_CTE},
 {_pagerank_sql()}
-""",
-    "kg_pagerank_personalized": f"""
-WITH {_CTE},
-{_ppr_sql()}
 """,
     "kg_linked_mentions_scored": f"""
 WITH {_linkdict_sql()},
@@ -1871,36 +1175,6 @@ FROM delta_t d LEFT JOIN idx_t i ON d.curie = i.curie
 GROUP BY 1, 2
 UNION ALL
 SELECT 'mention_edge', 'new', count(*) FROM delta_m
-""",
-    "kg_clustering_coefficient": f"""
-WITH {_CTE},
-tri AS (
-  SELECT ab.subject AS a, ab.object AS b, bc.object AS c
-  FROM cooc_edges ab
-  JOIN cooc_edges bc ON ab.object = bc.subject
-  JOIN cooc_edges ac ON ac.subject = ab.subject AND ac.object = bc.object
-),
-und AS (
-  SELECT subject, object FROM cooc_edges
-  UNION ALL
-  SELECT object AS subject, subject AS object FROM cooc_edges
-),
-deg AS (SELECT subject AS id, count(*) AS deg FROM und GROUP BY subject),
-t AS (SELECT 3 * (SELECT count(*) FROM tri) AS t3),
-w AS (SELECT sum(deg * (deg - 1) // 2) AS w FROM deg)
-SELECT CAST(t3 AS BIGINT) AS triangle_participations,
-       CAST(w AS BIGINT) AS n_wedges,
-       CAST(CASE WHEN w > 0 THEN t3 * 1000000 // w ELSE 0 END AS BIGINT)
-         AS gcc_ppm
-FROM t, w
-""",
-    "kg_hub_distances": f"""
-WITH {_CTE},
-{_bfs_sql()}
-""",
-    "kg_weighted_distances": f"""
-WITH {_CTE},
-{_weighted_bfs_sql()}
 """,
     "kg_components_fixpoint": f"""
 WITH RECURSIVE {_CTE},

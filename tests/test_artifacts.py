@@ -135,19 +135,14 @@ def test_components_fixpoint_keeps_und_cooc_cached(spark, tmp_path):
     assert _is_cached(und)
 
 
-# the perfbench serve mix: the 7 reference queries and the 5 others
-SERVE_MIX = (
-    "kg_category_counts", "kg_protein_nodes", "kg_one_hop", "kg_two_hop",
-    "kg_druggable_two_hop", "kg_provided_by_counts", "kg_drug_mentions",
-    "kg_mention_counts", "kg_pagerank", "kg_components_fixpoint",
-    "kg_triangle_counts", "kg_graph_stats",
-)
-
-
 def test_invalidate_after_serve_mix_leaves_nothing_persisted(spark, tmp_path):
-    """The graph, the merged graph and one pass of the serve mix pin
-    only registry values: invalidation leaves no persisted RDD of
-    theirs behind (local checkpoints included)."""
+    """The graph, the merged graph and one pass of every kept graph
+    query (the KG, merged, holdout and triples registries; the serve
+    mix is a subset of them) pin only registry values: invalidation
+    leaves no persisted RDD of theirs behind (local checkpoints
+    included)."""
+    from kg_covid_19_spark.operators.holdouts import HOLDOUT_QUERIES
+    from kg_covid_19_spark.operators.triples import TRIPLES_QUERIES
     from kg_covid_19_spark.plans.merged import MERGED_QUERIES, get_merged
     from kg_covid_19_spark.plans.queries import KG_QUERIES
 
@@ -158,8 +153,29 @@ def test_invalidate_after_serve_mix_leaves_nothing_persisted(spark, tmp_path):
     before = set(persistent().keySet())
     pipeline.get_kg(spark, sf)
     get_merged(spark, sf)
-    for name in SERVE_MIX:
-        (KG_QUERIES.get(name) or MERGED_QUERIES[name])(spark, sf).collect()
+    for registry in (KG_QUERIES, MERGED_QUERIES, HOLDOUT_QUERIES,
+                     TRIPLES_QUERIES):
+        for query in registry.values():
+            query(spark, sf).collect()
     assert set(persistent().keySet()) - before
+    invalidate_session_caches(spark)
+    assert set(persistent().keySet()) - before == set()
+
+
+def test_holdout_forest_is_one_registry_value(spark, tmp_path):
+    """forest_edge_splits reads the spanning forest from the registry:
+    a second call pins nothing new, and invalidation frees it."""
+    from kg_covid_19_spark.operators.holdouts import forest_edge_splits
+
+    _split_corpus(tmp_path, 1)()
+    sf = str(tmp_path)
+    invalidate_session_caches(spark)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keySet())
+    forest_edge_splits(spark, sf).collect()
+    pinned = set(persistent().keySet())
+    assert pinned - before
+    forest_edge_splits(spark, sf).collect()
+    assert set(persistent().keySet()) == pinned
     invalidate_session_caches(spark)
     assert set(persistent().keySet()) - before == set()

@@ -56,26 +56,35 @@ def test_only_local_frame_calls_create_dataframe():
 
 
 def test_query_module_helpers_are_used():
-    """Every ``_``-prefixed top-level function and UPPER_CASE constant of
-    the query modules is read somewhere in the package or the driver
-    entry (an AST ``Name``/``Attribute`` load outside its own
-    definition), so a helper orphaned by a query cut fails here."""
+    """Every top-level function and UPPER_CASE constant of the query
+    modules and the merge operators is used outside its own definition,
+    so a helper or operator orphaned by a query cut fails here. A use
+    is an AST ``Name``/``Attribute`` load or an ``import`` of the name.
+    A ``_``-prefixed helper or a constant must be used in the package or
+    the driver entry; a public function may also be used only by
+    ``tests/``."""
     root = Path(kg_covid_19_spark.__file__).parent
-    files = sorted(root.rglob("*.py")) + [root.parent / "__spark_entry__.py"]
-    loads = []  # (path, line, name)
-    for path in files:
+    package = sorted(root.rglob("*.py")) + [root.parent / "__spark_entry__.py"]
+    tests = sorted(Path(__file__).parent.rglob("*.py"))
+    uses = []  # (path, line, name, in tests/)
+    for path in package + tests:
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
             if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
-                loads.append((path, node.lineno, node.id))
+                names = [node.id]
             elif (isinstance(node, ast.Attribute)
                     and isinstance(node.ctx, ast.Load)):
-                loads.append((path, node.lineno, node.attr))
+                names = [node.attr]
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                names = [a.name.rsplit(".", 1)[-1] for a in node.names]
+            else:
+                continue
+            uses += [(path, node.lineno, n, path in tests) for n in names]
     unused = []
-    for rel in ("plans/queries.py", "plans/merged.py"):
+    for rel in ("plans/queries.py", "plans/merged.py", "operators/merge.py"):
         path = root / rel
         for node in ast.parse(path.read_text(), rel).body:
             if isinstance(node, ast.FunctionDef):
-                names = [node.name] if node.name.startswith("_") else []
+                names = [node.name]
             elif isinstance(node, ast.Assign):
                 names = [t.id for t in node.targets
                          if isinstance(t, ast.Name)
@@ -83,8 +92,10 @@ def test_query_module_helpers_are_used():
             else:
                 continue
             for name in names:
-                if not any(n == name and not (
+                public = isinstance(node, ast.FunctionDef) and not (
+                    name.startswith("_"))
+                if not any(n == name and (public or not in_tests) and not (
                         p == path and node.lineno <= line <= node.end_lineno)
-                        for p, line, n in loads):
+                        for p, line, n, in_tests in uses):
                     unused.append(f"{rel}:{node.lineno} {name}")
     assert unused == [], unused

@@ -98,39 +98,6 @@ def test_package_kgx_tar_roundtrip(spark, tmp_path):
     assert h(tar_path) == h(tar2)
 
 
-def test_weighted_distances_agree_with_bfs_reachability(spark):
-    """kg_weighted_distances: within the same hop bound, the reachable
-    set is weight-independent (must equal the unweighted BFS's), the
-    hub costs 0, and every other node costs at least one edge's
-    minimum weight and at most BFS_ROUNDS x the maximum weight."""
-    from kg_covid_19_spark.plans.queries import (
-        BFS_ROUNDS,
-        HUB,
-        kg_cooccurrence_counts,
-        kg_hub_distances,
-        kg_weighted_distances,
-    )
-    from conftest import SF_DIR
-    from pyspark.sql import functions as F
-
-    wd = {r.id: r.dist for r in kg_weighted_distances(spark, SF_DIR).collect()}
-    bfs = {r.id: r.dist for r in kg_hub_distances(spark, SF_DIR).collect()}
-    assert set(wd) == set(bfs)
-    assert wd[HUB] == 0
-    w = (
-        kg_cooccurrence_counts(spark, SF_DIR)
-        .select(F.expr("1000000L div n_docs").alias("w"))
-        .agg(F.min("w").alias("lo"), F.max("w").alias("hi"))
-        .collect()[0]
-    )
-    for node, dist in wd.items():
-        if node == HUB:
-            continue
-        assert w.lo <= dist <= BFS_ROUNDS * w.hi, (node, dist)
-        # a k-hop path can never beat fewer hops times the cheapest edge
-        assert dist >= bfs[node] * w.lo
-
-
 def test_schema_validation_flags_planted_violations(spark):
     """Domain/range QA must pass the well-typed edges and flag each
     planted violation class: entity-subject mentions, publication-
@@ -237,19 +204,24 @@ def test_incremental_merge_totals_consistent(spark):
 
 
 def test_cooc_lift_weights_every_pair_exactly(spark, duck):
-    """kg_cooc_lift must weight EXACTLY the co-occurrence pair set
-    (edge weighting may not drop or invent pairs), agree with its
-    DuckDB oracle at test scale, and satisfy its own integer identity
+    """kg_lift_incremental, the lift score maintained from base and
+    delta slices, must weight EXACTLY the co-occurrence pair set (edge
+    weighting may not drop or invent pairs), agree with its DuckDB
+    oracle at test scale, and satisfy its own integer identity
     lift_ppm = n_docs*N*1e6 div (df_s*df_o) row by row — a perfectly
     nested pair (n_docs == df_s == df_o) scores exactly N/df in ppm."""
     from kg_covid_19_spark.plans.queries import (
-        kg_cooc_lift,
         kg_cooccurrence_counts,
+        kg_lift_incremental,
     )
 
-    lift = kg_cooc_lift(spark, SF_DIR)
-    assert lift.count() == kg_cooccurrence_counts(spark, SF_DIR).count()
-    assert_df_matches_oracle(lift, duck, KG_ORACLES["kg_cooc_lift"])
+    lift = kg_lift_incremental(spark, SF_DIR)
+    pairs = kg_cooccurrence_counts(spark, SF_DIR).select("subject", "object")
+    assert {tuple(r) for r in lift.select("subject", "object").collect()} == {
+        tuple(r) for r in pairs.collect()
+    }
+    assert lift.count() == pairs.count()
+    assert_df_matches_oracle(lift, duck, KG_ORACLES["kg_lift_incremental"])
     rows = lift.collect()
     from kg_covid_19_spark.plans.pipeline import get_mentions
 
@@ -260,97 +232,3 @@ def test_cooc_lift_weights_every_pair_exactly(spark, duck):
         )
         if r["n_docs"] == r["df_s"] == r["df_o"]:
             assert r["lift_ppm"] == n * 1_000_000 // r["n_docs"]
-
-
-def test_assoc_topk_sparsifies_per_entity(spark, duck):
-    """Every entity with >= ASSOC_TOPK partners keeps exactly
-    ASSOC_TOPK rows ranked 1..K in a deterministic total order
-    (lift desc, support desc, partner asc); entities with fewer keep
-    them all; oracle parity at test scale."""
-    from kg_covid_19_spark.plans.queries import (
-        ASSOC_TOPK,
-        kg_assoc_topk,
-        kg_cooc_lift,
-    )
-
-    topk = kg_assoc_topk(spark, SF_DIR)
-    assert_df_matches_oracle(topk, duck, KG_ORACLES["kg_assoc_topk"])
-    rows = topk.collect()
-    per = {}
-    for r in rows:
-        per.setdefault(r["entity"], []).append(r)
-    lift = kg_cooc_lift(spark, SF_DIR).collect()
-    n_partners = {}
-    for r in lift:
-        n_partners[r["subject"]] = n_partners.get(r["subject"], 0) + 1
-        n_partners[r["object"]] = n_partners.get(r["object"], 0) + 1
-    for ent, rs in per.items():
-        assert len(rs) == min(ASSOC_TOPK, n_partners[ent])
-        assert sorted(r["rk"] for r in rs) == list(range(1, len(rs) + 1))
-        ordered = sorted(
-            rs, key=lambda r: (-r["lift_ppm"], -r["n_docs"], r["partner"])
-        )
-        assert [r["rk"] for r in ordered] == list(range(1, len(rs) + 1))
-
-
-def test_random_walks_are_valid_graph_walks(spark, duck):
-    """Every emitted transition (step s -> s+1) must be a real edge of
-    the undirected co-occurrence graph; every start node emits
-    WALKS_PER_NODE walks of exactly WALK_STEPS+1 positions; oracle
-    parity pins the hash-gate determinism cross-engine."""
-    from kg_covid_19_spark.plans.queries import (
-        WALK_STEPS,
-        WALKS_PER_NODE,
-        kg_cooccurrence_counts,
-        kg_random_walks,
-    )
-
-    walks = kg_random_walks(spark, SF_DIR)
-    assert_df_matches_oracle(walks, duck, KG_ORACLES["kg_random_walks"])
-    rows = walks.collect()
-    edges = set()
-    for r in kg_cooccurrence_counts(spark, SF_DIR).collect():
-        edges.add((r["subject"], r["object"]))
-        edges.add((r["object"], r["subject"]))
-    seq = {}
-    for r in rows:
-        seq.setdefault((r["start"], r["walk_id"]), {})[r["step"]] = r["node"]
-    starts = {s for s, _ in seq}
-    assert all(
-        len({(s, w) for s, w in seq if s == st}) == WALKS_PER_NODE
-        for st in starts
-    )
-    for (st, w), pos in seq.items():
-        assert sorted(pos) == list(range(WALK_STEPS + 1))
-        assert pos[0] == st
-        for s in range(WALK_STEPS):
-            assert (pos[s], pos[s + 1]) in edges, (st, w, s, pos)
-
-
-def test_walk_skipgrams_symmetric_and_bounded(spark, duck):
-    """Skip-gram pairs are symmetric by construction (|s-t| symmetric:
-    n(center,context) == n(context,center)), total pair slots equal
-    the exact window combinatorics of WALKS (each walk of L=WALK_STEPS+1
-    positions yields 2*sum over d=1..W of (L-d) ordered pairs), and
-    the oracle hash pins the distribution."""
-    from kg_covid_19_spark.plans.queries import (
-        SKIPGRAM_WINDOW,
-        WALK_STEPS,
-        WALKS_PER_NODE,
-        kg_random_walks,
-        kg_walk_skipgrams,
-    )
-
-    sg = kg_walk_skipgrams(spark, SF_DIR)
-    assert_df_matches_oracle(sg, duck, KG_ORACLES["kg_walk_skipgrams"])
-    rows = sg.collect()
-    counts = {(r["center"], r["context"]): r["n"] for r in rows}
-    for (c, x), n in counts.items():
-        assert counts[(x, c)] == n
-    n_walks = (
-        kg_random_walks(spark, SF_DIR)
-        .filter("step = 0").count()
-    )
-    L = WALK_STEPS + 1
-    slots_per_walk = 2 * sum(L - d for d in range(1, SKIPGRAM_WINDOW + 1))
-    assert sum(counts.values()) == n_walks * slots_per_walk

@@ -9,28 +9,11 @@ from kg_covid_19_spark.operators.holdouts import (
     edge_splits,
     holdout_negative_edges,
 )
-from kg_covid_19_spark.operators.merge import merge_nodes, salted_node_fusion
+from kg_covid_19_spark.operators.merge import merge_nodes
 from kg_covid_19_spark.plans.merged import get_merged
 from kg_covid_19_spark.sources.kgx import read_kgx, write_kgx
 
 from conftest import SF_DIR
-
-
-def test_salted_fusion_equals_plain(spark):
-    frames = [
-        spark.createDataFrame(
-            [("A", "a", "c1", "s1"), ("A", None, "c1", "s2"), ("B", "b", "c2", "s1")],
-            "id string, name string, category string, provided_by string",
-        ),
-        spark.createDataFrame(
-            [("A", "z", "c0", "s3")],
-            "id string, name string, category string, provided_by string",
-        ),
-    ]
-    plain = {tuple(r) for r in merge_nodes(frames).collect()}
-    salted = {tuple(r) for r in salted_node_fusion(frames).collect()}
-    assert plain == salted
-    assert ("A", "a", "c0", "s1|s2|s3") in plain
 
 
 def test_merged_no_duplicate_ids_or_edge_keys(spark):
@@ -389,35 +372,6 @@ def test_spanning_forest_is_exact_tree_per_component(spark):
     # component 2's only edge is forced
     h_m = e.filter(F.col("subject") == "m1").collect()[0]["h"]
     assert h_m in forest
-
-
-def test_ego_export_hops_are_disjoint_and_edge_backed(spark):
-    """(seed, node) sets at hop 1 and hop 2 are disjoint; every hop-1
-    row is a real incident edge of the seed; every hop-2 node reaches
-    the seed through some hop-1 node; no row carries the seed itself;
-    both hops are non-empty on the merged graph (publications make
-    hop 2 real — the dense cooc graph alone would leave it vacuous)."""
-    from kg_covid_19_spark.plans.merged import get_merged, kg_ego_export
-
-    rows = kg_ego_export(spark, SF_DIR).collect()
-    h1 = {(r["seed"], r["node"]) for r in rows if r["hop"] == 1}
-    h2 = {(r["seed"], r["node"]) for r in rows if r["hop"] == 2}
-    assert h1 and h2
-    assert not (h1 & h2)
-    assert all(s != n for s, n in h1 | h2)
-    _, edges = get_merged(spark, SF_DIR)
-    und = set()
-    for r in edges.select("subject", "object").collect():
-        und.add((r["subject"], r["object"]))
-        und.add((r["object"], r["subject"]))
-    assert all(p in und for p in h1)
-    nbrs = {}
-    for u, v in und:
-        nbrs.setdefault(u, set()).add(v)
-    for s, n in h2:
-        assert any(n in nbrs.get(m, set()) for (ss, m) in h1 if ss == s), (
-            s, n,
-        )
 
 
 NODE_DDL = "id string, name string, category string, provided_by string"

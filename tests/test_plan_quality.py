@@ -77,18 +77,6 @@ def test_druggable_two_hop_broadcasts_drug_dim(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_salted_fusion_is_two_phase(spark):
-    """The salted node fusion must show two aggregation exchanges — the
-    salt-local partial phase and the final id phase — so a refactor
-    can't silently collapse it back into one skew-prone groupBy."""
-    from kg_covid_19_spark.plans.merged import kg_merged_nodes_salted
-
-    plan = _executed_plan(kg_merged_nodes_salted(spark, SF_DIR))
-    n_agg_exchanges = len(re.findall(r"Exchange hashpartitioning", plan))
-    assert n_agg_exchanges >= 2, plan
-    assert "salt" in plan, plan  # the salt column reaches the physical plan
-
-
 def test_global_rank_has_no_single_partition_window(spark):
     """_global_rank (fullscale negatives) must never plan a bare
     row_number over an unpartitioned window: its local ranks are keyed
@@ -335,37 +323,18 @@ def test_dump_overlap_rollup_adds_no_new_corpus_shuffle(spark):
 
 
 def test_cooc_lift_dims_broadcast_cross_is_single_row(spark):
-    """kg_cooc_lift's document-frequency lookups must be broadcast
-    hash joins (dictionary-bounded build sides) and the only
+    """kg_lift_incremental's document-frequency lookups must be
+    broadcast hash joins (dictionary-bounded build sides) and the only
     nested-loop join must be the sanctioned 1-row N crossJoin — a
     SortMergeJoin would shuffle the pair frame on entity keys, the
-    exact plan the broadcast design avoids. r7: pinned on the builder
-    (kg_cooc_lift delegates to it; the query is uncached — assoc_topk
-    now expands endpoint directions row-locally instead of re-reading
-    the lift plan through a two-arm union)."""
-    from kg_covid_19_spark.plans.queries import _cooc_lift_build
+    exact plan the broadcast design avoids."""
+    from kg_covid_19_spark.plans.queries import kg_lift_incremental
 
-    plan = _executed_plan(_cooc_lift_build(spark, SF_DIR))
+    plan = _executed_plan(kg_lift_incremental(spark, SF_DIR))
     assert plan.count("BroadcastHashJoin") >= 2, plan
     assert "SortMergeJoin" not in plan, plan
     assert plan.count("BroadcastNestedLoopJoin") == 1, plan
     assert "CartesianProduct" not in plan, plan
-
-
-def test_random_walks_read_pinned_adjacency(spark):
-    """kg_random_walks must read the persisted adjacency in every
-    unrolled step (InMemoryTableScan present; one scan per step plus
-    the starts scan) — losing the pin silently re-executes the
-    corpus-scale pair expansion WALK_STEPS+1 times."""
-    from kg_covid_19_spark.plans.queries import (
-        WALK_STEPS,
-        kg_random_walks,
-    )
-
-    plan = _executed_plan(kg_random_walks(spark, SF_DIR))
-    n_mem = plan.count("InMemoryTableScan")
-    assert n_mem >= WALK_STEPS + 1, plan
-    assert "CartesianProduct" not in plan
 
 
 def test_dictionary_frames_are_local_relations(spark):

@@ -265,53 +265,3 @@ def test_range_join_floor_buckets_handle_negative_timestamps(spark):
     }
     assert got == {k: ref.get(k, 0) for k in got}
     assert got["c1"] == 3  # the negative-side pairs are really exercised
-
-
-def test_personalized_pagerank_confines_restart_to_seeds(spark):
-    """PPR invariants vs the uniform twin on the same graph: identical
-    node set, every seed keeps at least its restart mass, total mass
-    strictly below uniform PageRank's (restart only happens on seeds),
-    and at least one non-seed node exists with mass from propagation
-    alone."""
-    from kg_covid_19_spark.plans.queries import (
-        PPR_SEED_PREFIXES,
-        PR_BASE_PPM,
-        kg_pagerank,
-        kg_pagerank_personalized,
-    )
-
-    pr = {r["id"]: r["rank_ppm"] for r in kg_pagerank(spark, SF_DIR).collect()}
-    ppr = {
-        r["id"]: r["ppr_ppm"]
-        for r in kg_pagerank_personalized(spark, SF_DIR).collect()
-    }
-    assert set(pr) == set(ppr)
-    seeds = {i for i in ppr if i.startswith(PPR_SEED_PREFIXES)}
-    assert seeds and seeds != set(ppr)
-    assert all(ppr[i] >= PR_BASE_PPM for i in seeds)
-    assert sum(ppr.values()) < sum(pr.values())
-    assert any(ppr[i] > 0 for i in set(ppr) - seeds)
-
-
-def test_clustering_coefficient_consistent_with_parts(spark):
-    """gcc_ppm must equal the integer formula over its own published
-    ingredients (triangle participations and the wedge sum from the
-    degree histogram) and sit in (0, 1e6] on the cooc graph."""
-    from kg_covid_19_spark.plans.queries import (
-        kg_clustering_coefficient,
-        kg_degree_histogram,
-        kg_triangle_counts,
-    )
-
-    row = kg_clustering_coefficient(spark, SF_DIR).collect()[0]
-    t3 = sum(
-        r["n_triangles"] for r in kg_triangle_counts(spark, SF_DIR).collect()
-    )
-    wedges = sum(
-        r["n_entities"] * (r["degree"] * (r["degree"] - 1) // 2)
-        for r in kg_degree_histogram(spark, SF_DIR).collect()
-    )
-    assert row["triangle_participations"] == t3
-    assert row["n_wedges"] == wedges
-    assert row["gcc_ppm"] == t3 * 1_000_000 // wedges
-    assert 0 < row["gcc_ppm"] <= 1_000_000
