@@ -19,7 +19,6 @@ from kg_covid_19_spark.plans.merged import MERGED_ORACLES, MERGED_QUERIES
 from kg_covid_19_spark.plans.queries import KG_ORACLES, KG_QUERIES
 from kg_covid_19_spark.operators.dedup import DEDUP_ORACLES, DEDUP_QUERIES
 from kg_covid_19_spark.functions.textstats import TEXTSTATS_ORACLES, TEXTSTATS_QUERIES
-from kg_covid_19_spark.operators.multimodal import MULTIMODAL_ORACLES, MULTIMODAL_QUERIES
 from kg_covid_19_spark.operators.holdouts import HOLDOUT_ORACLES, HOLDOUT_QUERIES
 from kg_covid_19_spark.streaming.events import EVENTS_ORACLES, EVENTS_QUERIES
 from kg_covid_19_spark.operators.triples import TRIPLES_ORACLES, TRIPLES_QUERIES
@@ -36,7 +35,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out.update(MERGED_QUERIES)
     out.update(DEDUP_QUERIES)
     out.update(TEXTSTATS_QUERIES)
-    out.update(MULTIMODAL_QUERIES)
     out.update(HOLDOUT_QUERIES)
     out.update(EVENTS_QUERIES)
     out.update(TRIPLES_QUERIES)
@@ -59,7 +57,6 @@ def oracle_sql() -> dict[str, str]:
     out.update(MERGED_ORACLES)
     out.update(DEDUP_ORACLES)
     out.update(TEXTSTATS_ORACLES)
-    out.update(MULTIMODAL_ORACLES)
     out.update(HOLDOUT_ORACLES)
     out.update(EVENTS_ORACLES)
     out.update(TRIPLES_ORACLES)

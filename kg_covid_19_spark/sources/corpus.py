@@ -240,17 +240,13 @@ def _scan_layout(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
     return splits, sum(sizes)
 
 
-def _scan_partitions(spark: SparkSession, sf_dir: str) -> int:
-    return _scan_layout(spark, sf_dir)[0]
-
-
 def ensure_min_parallelism(spark: SparkSession, sf_dir: str,
                            df: DataFrame, min_bytes: int = 0) -> DataFrame:
-    """web_pages' min-parallelism policy, shared: when the documents scan
-    has fewer splits than the default parallelism, round-robin the frame
-    up to it so downstream Arrow kernels / expression chains use every
-    core instead of serializing onto one or two scan tasks (guide §2.6 /
-    §6: the small-file single-row-group trap). At 100 TB the scan has
+    """The min-parallelism rule: when the documents scan has fewer
+    splits than the default parallelism, round-robin the frame up to it
+    so downstream Arrow kernels / expression chains use every core
+    instead of serializing onto one or two scan tasks (guide §2.6 / §6:
+    the small-file single-row-group trap). At 100 TB the scan has
     thousands of splits and this is a no-op; the repartition only fires
     for under-split inputs, where the shuffled bytes are by construction
     small. Deterministic: sort-before-repartition (on by default) makes
@@ -260,9 +256,10 @@ def ensure_min_parallelism(spark: SparkSession, sf_dir: str,
     ``min_bytes``: input-size gate (guide §2 "derive from input size").
     Callers whose downstream per-byte work is moderate set it so the
     exchange only fires when there is enough data to amortize it —
-    measured on media_grid_neardup: the lift is −1.8 s at a 0.6 MB input
-    and +6..10 s of win at 12 MB. Heavy-per-byte kernels (shingling)
-    keep the default 0 (always lift when under-split)."""
+    measured on a per-row image-feature kernel followed by a banded
+    self-join: the lift is −1.8 s at a 0.6 MB input and +6..10 s of win
+    at 12 MB. Heavy-per-byte kernels (shingling) keep the default 0
+    (always lift when under-split)."""
     splits, nbytes = _scan_layout(spark, sf_dir)
     target = spark.sparkContext.defaultParallelism
     if splits < target and nbytes >= min_bytes:
@@ -279,19 +276,14 @@ def web_pages(spark: SparkSession, sf_dir: str,
     The lang filter is applied here so Catalyst pushes it into the scan
     (on a partitioned Iceberg table this is partition pruning).
 
-    Min-parallelism policy: a scan with fewer splits than cores serializes
-    the whole narrow UDF chain onto a handful of tasks (the classic
-    small-file / single-row-group trap). If the scan is under-split we
-    repartition up to the default parallelism — a one-off shuffle of the
-    raw rows. At 100 TB the Iceberg scan has thousands of splits and this
-    is a no-op; it only fires for toy inputs and late small partitions.
+    An under-split scan is repartitioned up to the default parallelism
+    (``ensure_min_parallelism``) so the narrow UDF chain downstream uses
+    every core.
     """
     docs = read_table(spark, sf_dir, "documents")
     if langs:
         docs = docs.filter(F.col("lang").isin(list(langs)))
-    target = spark.sparkContext.defaultParallelism
-    if _scan_partitions(spark, sf_dir) < target:
-        docs = docs.repartition(target)
+    docs = ensure_min_parallelism(spark, sf_dir, docs)
     return docs.select(
         F.concat(F.lit("https://example.org/doc/"), F.col("doc_id").cast("string"))
         .alias("url"),

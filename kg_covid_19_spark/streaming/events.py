@@ -180,10 +180,10 @@ def evt_range_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same user's views fall in the 10 minutes strictly before it.
 
     Spark has no native range-join optimization, and the naive
-    inequality join is a per-user cross product. The scale shape is the
-    same pigeonhole banding as media_grid_neardup: bucket = ts div
-    window; a qualifying view is in the click's bucket or the one
-    before, so the view side emits (bucket, bucket+1) keys and the join
+    inequality join is a per-user cross product. The scale shape is
+    pigeonhole banding: bucket = ts div window; a qualifying view is in
+    the click's bucket or the one before, so the view side emits
+    (bucket, bucket+1) keys and the join
     is an EQUI-join on (user_id, bucket) — complete by construction
     (each qualifying pair meets on exactly one key, the click's own
     bucket), candidates bounded by per-(user, 10-min-bucket) activity

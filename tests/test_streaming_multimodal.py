@@ -1,10 +1,7 @@
-"""Streaming/batch parity + multimodal plumbing tests."""
+"""Streaming/batch parity of the windowed event counts."""
 
 from __future__ import annotations
 
-import pytest
-
-from kg_covid_19_spark.operators.multimodal import decode_media, media_metadata
 from kg_covid_19_spark.streaming.events import (
     evt_windowed_counts,
     evt_windowed_counts_stream,
@@ -20,936 +17,3 @@ def test_stream_equals_batch(spark):
         for r in evt_windowed_counts_stream(spark, SF_DIR, "t_evt").collect()
     )
     assert batch == stream and len(batch) > 0
-
-
-def test_real_decoder_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        decode_media(b"\x89PNG...", decoder="pil")
-
-
-def test_media_metadata_deterministic(spark):
-    a = sorted(tuple(r) for r in media_metadata(spark, SF_DIR).collect())
-    b = sorted(tuple(r) for r in media_metadata(spark, SF_DIR).collect())
-    assert a == b and len(a) > 0
-    for _doc, n_bytes, w, h, dec in a:
-        assert w == (n_bytes % 640) + 1 and h == (n_bytes // 640) + 1
-        assert dec == "fake-v1"
-
-
-def test_multimodal_kernel_shapes(spark):
-    from kg_covid_19_spark.operators.multimodal import (
-        FRAME_BYTES,
-        FRAME_STEP,
-        media_features,
-        media_frame_sample,
-        media_resize,
-    )
-    from conftest import SF_DIR as SF
-
-    feats = media_features(spark, SF).limit(5).collect()
-    assert all(r.dim == 8 and len(r.f0.split(",")) == 8 for r in feats)
-    assert all(
-        0 <= int(x) <= 1_000_000 for r in feats for x in r.f0.split(",")
-    )
-
-    rs = media_resize(spark, SF).limit(5).collect()
-    assert all((r.out_w, r.out_h, r.out_bytes) == (64, 64, 4096) for r in rs)
-
-    frames = media_frame_sample(spark, SF)
-    rows = frames.limit(50).collect()
-    assert all(r.frame_idx % FRAME_STEP == 0 for r in rows)
-    assert all(0 < r.frame_len <= FRAME_BYTES for r in rows)
-
-
-def test_grid_neardup_has_full_recall_vs_brute_force(spark):
-    """The banded-multiprobe guarantee, asserted: every pair the
-    quadratic brute-force L1 join admits at L1_MAX_PPM must be emitted
-    by media_grid_neardup (pigeonhole: some 4-dim band has band-L1 <=
-    thr/2, so its grid indices are within +-1 and the 81-offset probe
-    join cannot miss it). Precision is trivially 1.0 (shared verify),
-    so this equality IS recall = 1.0."""
-    from pyspark.sql import functions as F
-
-    from kg_covid_19_spark.operators.multimodal import (
-        L1_MAX_PPM,
-        media_features,
-        media_grid_neardup,
-    )
-
-    f = media_features(spark, SF_DIR)
-    v = F.transform(F.split("f0", ","), lambda s: s.cast("long"))
-    g = f.select("doc_id", v.alias("v"))
-    a = g.select(F.col("doc_id").alias("id_a"), F.col("v").alias("va"))
-    b = g.select(F.col("doc_id").alias("id_b"), F.col("v").alias("vb"))
-    l1 = F.expr(
-        "aggregate(zip_with(va, vb, (x, y) -> abs(x - y)), 0L, "
-        "(acc, x) -> acc + x)"
-    )
-    brute = sorted(
-        tuple(r)
-        for r in a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("l1_ppm", l1)
-        .filter(F.col("l1_ppm") <= L1_MAX_PPM)
-        .select("id_a", "id_b", "l1_ppm")
-        .collect()
-    )
-    got = sorted(tuple(r) for r in media_grid_neardup(spark, SF_DIR).collect())
-    assert got == brute
-    assert brute, "threshold admits no pairs at test scale — vacuous"
-
-
-def _encode_png(width, height, pixels, color, filters):
-    """Minimal test-side PNG encoder: applies the REQUESTED filter type
-    per scanline (so the decoder's filter reversal is exercised for
-    real, not just filter 0) and assembles signature/IHDR/IDAT/IEND."""
-    import struct
-    import zlib
-
-    ch = {0: 1, 2: 3, 6: 4}[color]
-    stride = width * ch
-
-    def chunk(ctype, body):
-        return (
-            struct.pack(">I", len(body)) + ctype + body
-            + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
-        )
-
-    raw = bytearray()
-    prev = bytes(stride)
-    for y in range(height):
-        line = pixels[y * stride:(y + 1) * stride]
-        f = filters[y % len(filters)]
-        filt = bytearray(line)
-        if f == 1:
-            for i in range(stride - 1, ch - 1, -1):
-                filt[i] = (filt[i] - line[i - ch]) & 0xFF
-        elif f == 2:
-            for i in range(stride):
-                filt[i] = (filt[i] - prev[i]) & 0xFF
-        elif f == 3:
-            for i in range(stride):
-                left = line[i - ch] if i >= ch else 0
-                filt[i] = (filt[i] - (left + prev[i]) // 2) & 0xFF
-        elif f == 4:
-            for i in range(stride):
-                a = line[i - ch] if i >= ch else 0
-                b = prev[i]
-                c = prev[i - ch] if i >= ch else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (
-                    b if pb <= pc else c
-                )
-                filt[i] = (filt[i] - pred) & 0xFF
-        raw.append(f)
-        raw.extend(filt)
-        prev = line
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, color, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw))) + chunk(b"IEND", b"")
-    )
-
-
-def test_png_decode_reverses_all_filter_types():
-    """Round-trip: encode a known RGB image using filters 0-3 and a
-    gray image using Paeth; decode_png must reproduce the exact
-    pixels."""
-    from kg_covid_19_spark.operators.multimodal import decode_png
-
-    rgb = bytes((x * 37 + 11) % 256 for x in range(4 * 4 * 3))
-    png = _encode_png(4, 4, rgb, color=2, filters=[0, 1, 2, 3])
-    assert decode_png(png) == (4, 4, 3, rgb)
-
-    gray = bytes((x * 53 + 7) % 256 for x in range(6 * 3))
-    png = _encode_png(6, 3, gray, color=0, filters=[4])
-    assert decode_png(png) == (6, 3, 1, gray)
-
-
-def _png_chunk(ctype, body):
-    import struct
-    import zlib
-
-    return (
-        struct.pack(">I", len(body)) + ctype + body
-        + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
-    )
-
-
-def _encode_png_raw(width, height, depth, color, interlace, raw):
-    """Wrap pre-filtered scanline bytes in signature/IHDR/IDAT/IEND."""
-    import struct
-    import zlib
-
-    ihdr = struct.pack(">IIBBBBB", width, height, depth, color, 0, 0,
-                       interlace)
-    return (b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"IDAT", zlib.compress(raw))
-            + _png_chunk(b"IEND", b""))
-
-
-def test_png_16bit_and_gray_alpha_and_low_depth_decode():
-    """The formerly-seamed profiles now decode: 16-bit samples reduce
-    to their most-significant byte, gray+alpha keeps 2 channels, and
-    depth-2 gray scales 0..3 onto the full 0..255 range."""
-    from kg_covid_19_spark.operators.multimodal import decode_png
-
-    # 16-bit gray, 2x2, filter 0: big-endian sample pairs
-    raw = bytes([0, 0x12, 0x34, 0xAB, 0xCD, 0, 0x00, 0xFF, 0xFF, 0x00])
-    png = _encode_png_raw(2, 2, 16, 0, 0, raw)
-    assert decode_png(png) == (2, 2, 1, bytes([0x12, 0xAB, 0x00, 0xFF]))
-
-    # 8-bit gray+alpha, 2x1 (color type 4, 2 channels)
-    raw = bytes([0, 10, 200, 30, 255])
-    png = _encode_png_raw(2, 1, 8, 4, 0, raw)
-    assert decode_png(png) == (2, 1, 2, bytes([10, 200, 30, 255]))
-
-    # 16-bit RGB with a Sub filter at bpp=6 (exercises wide-bpp filter)
-    pix = bytes(range(12))  # two pixels, first row
-    filt = bytearray([1]) + bytearray(pix)
-    for i in range(len(pix) - 1, 5, -1):
-        filt[1 + i] = (pix[i] - pix[i - 6]) & 0xFF
-    png = _encode_png_raw(2, 1, 16, 2, 0, bytes(filt))
-    assert decode_png(png) == (2, 1, 3, bytes([0, 2, 4, 6, 8, 10]))
-
-    # depth-2 gray, 5x1 (row pads to 2 bytes): values 0..3 -> 0..255
-    packed = bytes([0, (0 << 6) | (1 << 4) | (2 << 2) | 3, 2 << 6])
-    png = _encode_png_raw(5, 1, 2, 0, 0, packed)
-    assert decode_png(png) == (5, 1, 1, bytes([0, 85, 170, 255]) + b"\xaa")
-
-    with pytest.raises(ValueError):
-        decode_png(b"NOTAPNG")
-    # spec-invalid combination is malformed, not a seam
-    bad = _encode_png_raw(2, 2, 16, 3, 0, b"\x00\x00")
-    with pytest.raises(ValueError):
-        decode_png(bad)
-
-
-_ADAM7_TEST = ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-               (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-
-
-def _encode_adam7_png(width, height, pixels, ch, color):
-    """Independent test-side Adam7 encoder: split the 8-bit image into
-    the seven PNG passes, emit each pass's rows with filter 0 into one
-    zlib stream."""
-    raw = bytearray()
-    for x0, y0, dx, dy in _ADAM7_TEST:
-        pw = (width - x0 + dx - 1) // dx
-        ph = (height - y0 + dy - 1) // dy
-        if pw <= 0 or ph <= 0:
-            continue
-        for j in range(ph):
-            raw.append(0)
-            y = y0 + j * dy
-            for i in range(pw):
-                o = (y * width + x0 + i * dx) * ch
-                raw.extend(pixels[o:o + ch])
-    return _encode_png_raw(width, height, 8, color, 1, bytes(raw))
-
-
-def test_png_adam7_interlace_round_trips():
-    """Adam7 de-interlacing reassembles the original image exactly,
-    including odd dimensions where several passes are empty."""
-    from kg_covid_19_spark.operators.multimodal import decode_png
-
-    for w, h in ((4, 4), (5, 3), (9, 10), (1, 1), (2, 7)):
-        rgb = bytes((x * 37 + 11) % 256 for x in range(w * h * 3))
-        png = _encode_adam7_png(w, h, rgb, 3, color=2)
-        assert decode_png(png) == (w, h, 3, rgb)
-
-    gray = bytes((x * 53 + 7) % 256 for x in range(6 * 5))
-    png = _encode_adam7_png(6, 5, gray, 1, color=0)
-    assert decode_png(png) == (6, 5, 1, gray)
-
-
-def _encode_palette_png(width, height, indices, plte, depth):
-    """Test-side palette-PNG encoder: bit-packs indices big-endian at
-    ``depth`` bits (row-padded), filter 0 scanlines, PLTE chunk."""
-    import struct
-    import zlib
-
-    def chunk(ctype, body):
-        return (
-            struct.pack(">I", len(body)) + ctype + body
-            + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
-        )
-
-    stride = (width * depth + 7) // 8
-    raw = bytearray()
-    for y in range(height):
-        raw.append(0)
-        row = bytearray(stride)
-        for x in range(width):
-            k = indices[y * width + x]
-            if depth == 8:
-                row[x] = k
-            else:
-                row[x * depth // 8] |= k << (8 - depth * (x % (8 // depth) + 1))
-        raw.extend(row)
-    ihdr = struct.pack(">IIBBBBB", width, height, depth, 3, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-        + chunk(b"PLTE", bytes(plte))
-        + chunk(b"IDAT", zlib.compress(bytes(raw))) + chunk(b"IEND", b"")
-    )
-
-
-def test_palette_png_decodes_to_rgb():
-    """Palette PNGs (the most common web profile) decode through the
-    PLTE table to RGB at depths 8 and 4, including odd widths whose
-    bit-packed rows pad; out-of-range indices raise."""
-    from kg_covid_19_spark.operators.multimodal import decode_png
-
-    plte = bytes([255, 0, 0, 0, 255, 0, 0, 0, 255, 9, 9, 9])  # R G B gray
-    idx = [0, 1, 2, 3, 2, 1]
-    png8 = _encode_palette_png(3, 2, idx, plte, depth=8)
-    want = bytes(b for k in idx for b in plte[3 * k:3 * k + 3])
-    assert decode_png(png8) == (3, 2, 3, want)
-
-    png4 = _encode_palette_png(3, 2, idx, plte, depth=4)  # odd width pads
-    assert decode_png(png4) == (3, 2, 3, want)
-
-    bad = _encode_palette_png(2, 1, [0, 7], plte, depth=4)
-    with pytest.raises(ValueError):
-        decode_png(bad)
-
-
-def test_palette_png_through_features_and_resize(spark):
-    """A real palette PNG through the same mapInPandas kernels the
-    registered media queries use — the VERDICT-r5 de-fake item."""
-    from kg_covid_19_spark.operators.multimodal import (
-        decode_media,
-        media_features_frame,
-        media_resize_frame,
-        png_resize_nearest,
-    )
-
-    # 2-entry palette: all-dark and all-light, 4×4 solid images
-    plte = bytes([10, 10, 10, 250, 250, 250])
-    png_dark = _encode_palette_png(4, 4, [0] * 16, plte, depth=1)
-    png_light = _encode_palette_png(4, 4, [1] * 16, plte, depth=8)
-    assert decode_media(png_dark, "png-v1") == (4, 4)
-
-    frame = spark.createDataFrame(
-        [(1, bytearray(png_dark)), (2, bytearray(png_light))],
-        "doc_id long, media binary",
-    )
-    feats = {
-        r["doc_id"]: r["f0"]
-        for r in media_features_frame(frame, "png-v1").collect()
-    }
-    assert feats[1].split(",")[0] == "1000000"   # dark: 100% in bin 0
-    assert feats[2].split(",")[7] == "1000000"   # light: 100% in bin 7
-
-    rs = {
-        r["doc_id"]: r["out_bytes"]
-        for r in media_resize_frame(frame, 8, 8, "png-v1").collect()
-    }
-    assert rs == {1: 8 * 8 * 3, 2: 8 * 8 * 3}
-    assert png_resize_nearest(png_light, 2, 2) == bytes([250] * (2 * 2 * 3))
-
-
-def test_real_png_through_features_and_resize(spark):
-    """The judge-visible de-fake: REAL PNG bytes through the same
-    mapInPandas kernels the registered queries use — luminance
-    histogram features and a true nearest-neighbor resize."""
-    from pyspark.sql import functions as F
-
-    from kg_covid_19_spark.operators.multimodal import (
-        decode_media,
-        media_features_frame,
-        media_resize_frame,
-        png_resize_nearest,
-    )
-
-    dark = bytes([10] * (4 * 4 * 3))                     # all in bin 0
-    light = bytes([250] * (2 * 2 * 3))                   # all in bin 7
-    png_a = _encode_png(4, 4, dark, color=2, filters=[0, 1, 2, 3])
-    png_b = _encode_png(2, 2, light, color=2, filters=[4])
-    assert decode_media(png_a, "png-v1") == (4, 4)
-
-    frame = spark.createDataFrame(
-        [(1, bytearray(png_a)), (2, bytearray(png_b))],
-        "doc_id long, media binary",
-    )
-    feats = {
-        r["doc_id"]: r["f0"]
-        for r in media_features_frame(frame, "png-v1").collect()
-    }
-    assert feats[1].split(",")[0] == "1000000"   # dark: 100% in bin 0
-    assert feats[2].split(",")[7] == "1000000"   # light: 100% in bin 7
-
-    rs = {
-        r["doc_id"]: r["out_bytes"]
-        for r in media_resize_frame(frame, 8, 8, "png-v1").collect()
-    }
-    assert rs == {1: 8 * 8 * 3, 2: 8 * 8 * 3}
-    # pixel-level: upscaling a uniform image stays uniform
-    assert png_resize_nearest(png_b, 8, 8) == bytes([250] * (8 * 8 * 3))
-
-
-def _encode_gif(width, height, indices, palette, interlaced=False,
-                animated_prefix=False):
-    """Test-side GIF encoder: emits a CLEAR code before every pixel
-    code (legal per the GIF89a spec, keeps the LZW table trivial), so
-    the decoder's table-reset and bit-unpacking paths are exercised
-    without needing a production encoder. Optionally writes the rows
-    in 4-pass interlace order and/or prepends a graphic-control
-    extension block (the animated-GIF shape)."""
-    n_colors = max(4, 1 << (max(indices) + 1).bit_length())
-    min_code = max(2, (n_colors - 1).bit_length())
-    n_colors = 1 << min_code
-    clear, end = 1 << min_code, (1 << min_code) + 1
-    code_size = min_code + 1
-
-    rows = [indices[y * width:(y + 1) * width] for y in range(height)]
-    if interlaced:
-        order = (
-            list(range(0, height, 8)) + list(range(4, height, 8))
-            + list(range(2, height, 4)) + list(range(1, height, 2))
-        )
-        rows = [rows[y] for y in order]
-
-    bits = bytearray()
-    acc, n_acc = 0, 0
-
-    def emit(code):
-        nonlocal acc, n_acc
-        acc |= code << n_acc
-        n_acc += code_size
-        while n_acc >= 8:
-            bits.append(acc & 0xFF)
-            acc >>= 8
-            n_acc -= 8
-
-    for row in rows:
-        for px in row:
-            emit(clear)
-            emit(px)
-    emit(end)
-    if n_acc:
-        bits.append(acc & 0xFF)
-
-    pal = bytes(palette) + bytes(3 * n_colors - len(palette))
-    flags = 0x80 | (min_code - 1)  # global color table, size bits
-    out = bytearray(b"GIF89a")
-    out += width.to_bytes(2, "little") + height.to_bytes(2, "little")
-    out += bytes([flags, 0, 0]) + pal
-    if animated_prefix:  # graphic-control extension, must be skipped
-        out += bytes([0x21, 0xF9, 4, 0, 0, 0, 0, 0])
-    out += bytes([0x2C]) + bytes(4)  # descriptor at (0,0)
-    out += width.to_bytes(2, "little") + height.to_bytes(2, "little")
-    out += bytes([0x40 if interlaced else 0x00, min_code])
-    for i in range(0, len(bits), 255):
-        blk = bits[i:i + 255]
-        out += bytes([len(blk)]) + blk
-    out += bytes([0, 0x3B])
-    return bytes(out)
-
-
-def test_gif_decode_roundtrip_and_interlace():
-    """LZW decode, palette expansion, 4-pass de-interlace and
-    extension-block skipping against a hand-built GIF."""
-    from kg_covid_19_spark.operators.multimodal import (
-        decode_gif,
-        decode_image,
-    )
-
-    plte = bytes([255, 0, 0, 0, 255, 0, 0, 0, 255, 20, 20, 20])
-    idx = [(x + y) % 4 for y in range(9) for x in range(5)]  # 5×9
-    want = bytes(b for k in idx for b in plte[3 * k:3 * k + 3])
-
-    plain = _encode_gif(5, 9, idx, plte)
-    assert decode_gif(plain) == (5, 9, 3, want)
-    assert decode_image(plain) == (5, 9, 3, want)
-
-    inter = _encode_gif(5, 9, idx, plte, interlaced=True)
-    assert decode_gif(inter) == (5, 9, 3, want)
-
-    anim = _encode_gif(5, 9, idx, plte, animated_prefix=True)
-    assert decode_gif(anim) == (5, 9, 3, want)
-
-    with pytest.raises(ValueError):
-        decode_gif(b"NOTAGIF")
-    # JPEG magic now dispatches to the real baseline decoder, so a
-    # truncated fake is a parse error, not an unsupported format
-    with pytest.raises(ValueError):
-        decode_image(b"\xff\xd8\xff\xe0 fake jpeg")
-    with pytest.raises(NotImplementedError):
-        decode_image(b"BM fake bmp stays behind the seam")
-
-
-def test_gif_through_features_and_resize(spark):
-    """A real GIF through the same mapInPandas kernels the registered
-    media queries use, via the magic-dispatch 'image-v1' decoder —
-    alongside a PNG in the same frame, proving one kernel handles a
-    mixed-format corpus."""
-    from kg_covid_19_spark.operators.multimodal import (
-        decode_media,
-        media_features_frame,
-        media_resize_frame,
-    )
-
-    plte = bytes([10, 10, 10, 250, 250, 250])
-    gif_dark = _encode_gif(4, 4, [0] * 16, plte)
-    png_light = _encode_palette_png(4, 4, [1] * 16, plte, depth=8)
-    assert decode_media(gif_dark, "gif-v1") == (4, 4)
-    assert decode_media(gif_dark, "image-v1") == (4, 4)
-
-    frame = spark.createDataFrame(
-        [(1, bytearray(gif_dark)), (2, bytearray(png_light))],
-        "doc_id long, media binary",
-    )
-    feats = {
-        r["doc_id"]: r["f0"]
-        for r in media_features_frame(frame, "image-v1").collect()
-    }
-    assert feats[1].split(",")[0] == "1000000"   # dark GIF: bin 0
-    assert feats[2].split(",")[7] == "1000000"   # light PNG: bin 7
-
-    rs = {
-        r["doc_id"]: r["out_bytes"]
-        for r in media_resize_frame(frame, 8, 8, "image-v1").collect()
-    }
-    assert rs == {1: 8 * 8 * 3, 2: 8 * 8 * 3}
-
-
-# --- baseline JPEG: hand-built encoder (test-side) --------------------------
-#
-# The decoder under test must not be validated against itself, so the test
-# builds baseline-JPEG byte streams from the T.81 spec directly: custom
-# minimal canonical Huffman tables (12 DC categories at code length 4, four
-# AC symbols at length 2), an MSB-first bit-writer with FF00 byte stuffing,
-# and a flat all-ones quantization table so expected pixels are computable
-# by the published IDCT formula in closed form.
-
-
-class _JpegBitWriter:
-    def __init__(self):
-        self.bits = []
-
-    def write(self, value, n):
-        for i in range(n - 1, -1, -1):
-            self.bits.append((value >> i) & 1)
-
-    def enc_dc(self, diff):
-        cat = abs(diff).bit_length()
-        self.write(cat, 4)  # DC table: category c == 4-bit code c
-        if cat:
-            self.write(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
-
-    def enc_ac_val(self, value, size):  # symbol 0x07 (run 0, size 7): code 01
-        assert size == 7
-        self.write(0b01, 2)
-        self.write(value if value >= 0 else value + (1 << size) - 1, size)
-
-    def enc_eob(self):  # symbol 0x00: code 00
-        self.write(0b00, 2)
-
-    def flush_stuffed(self):
-        bits = self.bits + [1] * (-len(self.bits) % 8)
-        out = bytearray()
-        for i in range(0, len(bits), 8):
-            byte = 0
-            for b in bits[i:i + 8]:
-                byte = (byte << 1) | b
-            out.append(byte)
-            if byte == 0xFF:
-                out.append(0x00)
-        return bytes(out)
-
-
-def _jpeg_seg(marker, body):
-    import struct
-
-    return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-
-def _jpeg_headers(w, h, comps, dri=0):
-    """SOI + DQT(flat 1s) + SOF0 + DHT (custom minimal tables) + SOS."""
-    import struct
-
-    out = b"\xFF\xD8"
-    out += _jpeg_seg(0xDB, b"\x00" + bytes([1] * 64))
-    sof = struct.pack(">BHHB", 8, h, w, len(comps))
-    for cid, hh, v in comps:
-        sof += bytes([cid, (hh << 4) | v, 0])
-    out += _jpeg_seg(0xC0, sof)
-    dc = b"\x00" + bytes([0, 0, 0, 12] + [0] * 12) + bytes(range(12))
-    ac = b"\x10" + bytes([0, 4] + [0] * 14) + bytes([0x00, 0x07, 0x11, 0xF0])
-    out += _jpeg_seg(0xC4, dc + ac)
-    if dri:
-        out += _jpeg_seg(0xDD, struct.pack(">H", dri))
-    sos = bytes([len(comps)])
-    for cid, _hh, _v in comps:
-        sos += bytes([cid, 0x00])
-    sos += bytes([0, 63, 0])
-    out += _jpeg_seg(0xDA, sos)
-    return out
-
-
-def test_jpeg_decode_solid_and_dc_prediction():
-    """DC-only blocks: coefficient F00=q*diff, IDCT gives F00/8 + 128
-    everywhere; the second block's DC rides on the first's predictor."""
-    from kg_covid_19_spark.operators.multimodal import decode_jpeg
-
-    bw = _JpegBitWriter()
-    bw.enc_dc(80)
-    bw.enc_eob()
-    jpeg = _jpeg_headers(8, 8, [(1, 1, 1)]) + bw.flush_stuffed() + b"\xFF\xD9"
-    w, h, ch, px = decode_jpeg(jpeg)
-    assert (w, h, ch) == (8, 8, 1)
-    assert set(px) == {138}  # 80/8 + 128
-
-    bw = _JpegBitWriter()
-    bw.enc_dc(80)
-    bw.enc_eob()
-    bw.enc_dc(-16)  # second block: dc = 80 - 16 = 64 -> 136
-    bw.enc_eob()
-    jpeg = _jpeg_headers(16, 8, [(1, 1, 1)]) + bw.flush_stuffed() + b"\xFF\xD9"
-    w, h, ch, px = decode_jpeg(jpeg)
-    assert (w, h, ch) == (16, 8, 1)
-    for y in range(8):
-        row = px[y * 16:(y + 1) * 16]
-        assert set(row[:8]) == {138} and set(row[8:]) == {136}
-
-
-def test_jpeg_decode_ac_coefficient_matches_idct_formula():
-    """One AC coefficient at zigzag index 1 — (u,v)=(0,1), a horizontal
-    cosine — checked against the published T.81 IDCT formula computed
-    independently here."""
-    import math
-
-    from kg_covid_19_spark.operators.multimodal import decode_jpeg
-
-    bw = _JpegBitWriter()
-    bw.enc_dc(0)
-    bw.enc_ac_val(64, 7)  # zigzag k=1
-    bw.enc_eob()
-    jpeg = _jpeg_headers(8, 8, [(1, 1, 1)]) + bw.flush_stuffed() + b"\xFF\xD9"
-    w, h, ch, px = decode_jpeg(jpeg)
-    assert (w, h, ch) == (8, 8, 1)
-    expected = [
-        max(0, min(255, round(
-            128 + 64 / (4 * math.sqrt(2)) * math.cos((2 * x + 1) * math.pi / 16)
-        )))
-        for x in range(8)
-    ]
-    for y in range(8):
-        assert list(px[y * 8:(y + 1) * 8]) == expected
-
-
-def test_jpeg_decode_420_color_and_upsampling():
-    """4:2:0 16x16 solid YCbCr MCU (four Y blocks + one Cb + one Cr):
-    chroma replication + the JFIF color transform, against the published
-    YCbCr->RGB formula."""
-    from kg_covid_19_spark.operators.multimodal import decode_jpeg
-
-    bw = _JpegBitWriter()
-    for diff in (96, 0, 0, 0):  # Y = 140: F00 = 96, then predicted
-        bw.enc_dc(diff)
-        bw.enc_eob()
-    bw.enc_dc(-64)  # Cb = 120
-    bw.enc_eob()
-    bw.enc_dc(64)   # Cr = 136
-    bw.enc_eob()
-    jpeg = (
-        _jpeg_headers(16, 16, [(1, 2, 2), (2, 1, 1), (3, 1, 1)])
-        + bw.flush_stuffed() + b"\xFF\xD9"
-    )
-    w, h, ch, px = decode_jpeg(jpeg)
-    assert (w, h, ch) == (16, 16, 3)
-    # JFIF: R=Y+1.402(Cr-128), G=Y-0.344136(Cb-128)-0.714136(Cr-128),
-    # B=Y+1.772(Cb-128) with (Y,Cb,Cr)=(140,120,136)
-    assert set(px[0::3]) == {151}
-    assert set(px[1::3]) == {137}
-    assert set(px[2::3]) == {126}
-
-
-def test_jpeg_restart_markers_reset_predictors():
-    """DRI=1: each MCU is its own entropy segment; the second block's DC
-    of 80 decodes as an absolute value again because RST0 reset the
-    predictor — same expected pixels as the no-restart two-block image."""
-    from kg_covid_19_spark.operators.multimodal import decode_jpeg
-
-    seg0 = _JpegBitWriter()
-    seg0.enc_dc(80)
-    seg0.enc_eob()
-    seg1 = _JpegBitWriter()
-    seg1.enc_dc(80)  # absolute again: predictor was reset
-    seg1.enc_eob()
-    jpeg = (
-        _jpeg_headers(16, 8, [(1, 1, 1)], dri=1)
-        + seg0.flush_stuffed() + b"\xFF\xD0" + seg1.flush_stuffed()
-        + b"\xFF\xD9"
-    )
-    _w, _h, _ch, px = decode_jpeg(jpeg)
-    assert set(px) == {138}
-
-
-def test_jpeg_progressive_stays_behind_seam():
-    import struct
-
-    import pytest as _pytest
-
-    from kg_covid_19_spark.operators.multimodal import decode_jpeg
-
-    sof2 = (
-        b"\xFF\xD8"
-        + _jpeg_seg(0xC2, struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0]))
-    )
-    with _pytest.raises(NotImplementedError):
-        decode_jpeg(sof2)
-
-
-def test_jpeg_through_features_and_resize(spark):
-    """A real JPEG through the same mapInPandas kernels the registered
-    media queries use — in one frame with a PNG and a GIF, proving the
-    'image-v1' kernel handles a three-format corpus."""
-    from kg_covid_19_spark.operators.multimodal import (
-        decode_media,
-        media_features_frame,
-        media_resize_frame,
-    )
-
-    bw = _JpegBitWriter()
-    bw.enc_dc(80)  # solid 138 gray: luminance bin 4
-    bw.enc_eob()
-    jpeg = _jpeg_headers(8, 8, [(1, 1, 1)]) + bw.flush_stuffed() + b"\xFF\xD9"
-    assert decode_media(jpeg, "jpeg-v1") == (8, 8)
-    assert decode_media(jpeg, "image-v1") == (8, 8)
-
-    plte = bytes([10, 10, 10, 250, 250, 250])
-    gif_dark = _encode_gif(4, 4, [0] * 16, plte)
-    png_light = _encode_palette_png(4, 4, [1] * 16, plte, depth=8)
-    frame = spark.createDataFrame(
-        [(1, bytearray(jpeg)), (2, bytearray(gif_dark)),
-         (3, bytearray(png_light))],
-        "doc_id long, media binary",
-    )
-    feats = {
-        r["doc_id"]: r["f0"]
-        for r in media_features_frame(frame, "image-v1").collect()
-    }
-    assert feats[1].split(",")[4] == "1000000"   # gray 138 JPEG: bin 4
-    assert feats[2].split(",")[0] == "1000000"   # dark GIF: bin 0
-    assert feats[3].split(",")[7] == "1000000"   # light PNG: bin 7
-
-    rs = {
-        r["doc_id"]: r["out_bytes"]
-        for r in media_resize_frame(frame, 8, 8, "image-v1").collect()
-    }
-    assert rs == {1: 8 * 8 * 1, 2: 8 * 8 * 3, 3: 8 * 8 * 3}
-
-
-# --- Y4M (YUV4MPEG2) real video frames --------------------------------------
-
-
-def _encode_y4m(w, h, lumas, cs="C420jpeg"):
-    """Test-side Y4M writer straight from the mjpegtools format spec:
-    ASCII header + FRAME\\n + planar YCbCr (chroma planes zero-filled)."""
-    if cs.startswith("C420"):
-        chroma = 2 * ((w + 1) // 2) * ((h + 1) // 2)
-    elif cs.startswith("C444"):
-        chroma = 2 * w * h
-    elif cs.startswith("Cmono"):
-        chroma = 0
-    else:
-        raise AssertionError(cs)
-    out = bytearray(f"YUV4MPEG2 W{w} H{h} F25:1 Ip A1:1 {cs}\n".encode())
-    for y_plane in lumas:
-        assert len(y_plane) == w * h
-        out += b"FRAME\n" + y_plane + bytes(chroma)
-    return bytes(out)
-
-
-def test_y4m_frames_sampling_and_layouts():
-    from kg_covid_19_spark.operators.multimodal import y4m_frames
-
-    lumas = [bytes([k] * 16) for k in range(10)]
-    data = _encode_y4m(4, 4, lumas)
-    got = list(y4m_frames(data, step=4))
-    assert [(i, w, h) for i, w, h, _y in got] == [(0, 4, 4), (4, 4, 4), (8, 4, 4)]
-    assert [y[0] for _i, _w, _h, y in got] == [0, 4, 8]  # right frames' pixels
-
-    mono = _encode_y4m(4, 2, [bytes(8)] * 3, cs="Cmono")
-    assert len(list(y4m_frames(mono))) == 3
-    full = _encode_y4m(2, 2, [bytes(4)] * 2, cs="C444")
-    assert len(list(y4m_frames(full))) == 2
-
-    with pytest.raises(ValueError):
-        list(y4m_frames(data[:-5]))  # truncated last frame
-    with pytest.raises(ValueError):
-        list(y4m_frames(b"RIFF....not y4m"))
-
-
-def test_y4m_through_frame_sample_kernel(spark):
-    """Real Y4M videos through the SAME mapInPandas kernel the
-    registered media_frame_sample query uses."""
-    from kg_covid_19_spark.operators.multimodal import (
-        FRAME_STEP,
-        media_frame_sample_frame,
-    )
-
-    vid_a = _encode_y4m(4, 4, [bytes(16)] * 9)    # frames 0,4,8 sampled
-    vid_b = _encode_y4m(8, 2, [bytes(16)] * 2)    # frame 0 only
-    frame = spark.createDataFrame(
-        [(1, bytearray(vid_a)), (2, bytearray(vid_b))],
-        "doc_id long, media binary",
-    )
-    rows = sorted(
-        (r["doc_id"], r["frame_idx"], r["frame_len"])
-        for r in media_frame_sample_frame(frame, "y4m-v1").collect()
-    )
-    assert FRAME_STEP == 4
-    assert rows == [(1, 0, 16), (1, 4, 16), (1, 8, 16), (2, 0, 16)]
-
-
-# --- WAV (RIFF/WAVE PCM) real audio -----------------------------------------
-#
-# The test-side encoder is the INDEPENDENT stdlib `wave` module, so the
-# pure-Python decoder is checked against CPython's own RIFF writer.
-
-
-def _encode_wav(n_ch, rate, sampwidth, frames_bytes):
-    import io
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wv:
-        wv.setnchannels(n_ch)
-        wv.setframerate(rate)
-        wv.setsampwidth(sampwidth)
-        wv.writeframes(frames_bytes)
-    return buf.getvalue()
-
-
-def test_wav_decode_widths_and_channels():
-    import struct
-
-    import numpy as np
-
-    from kg_covid_19_spark.operators.multimodal import decode_wav
-
-    # 16-bit stereo: L ramps, R constant
-    vals = [(i * 100, -5000) for i in range(50)]
-    pcm = b"".join(struct.pack("<hh", left, r) for left, r in vals)
-    n_ch, rate, n_frames, samples = decode_wav(_encode_wav(2, 44100, 2, pcm))
-    assert (n_ch, rate, n_frames) == (2, 44100, 50)
-    assert samples.shape == (50, 2)
-    assert list(samples[:, 0]) == [i * 100 for i in range(50)]
-    assert set(samples[:, 1]) == {-5000}
-
-    # 8-bit mono is unsigned, centered by the decoder
-    n_ch, rate, n_frames, samples = decode_wav(
-        _encode_wav(1, 8000, 1, bytes([128, 255, 0, 128]))
-    )
-    assert (n_ch, rate, n_frames) == (1, 8000, 4)
-    assert list(samples[:, 0]) == [0, 127, -128, 0]
-
-    # 24-bit mono: sign extension from bit 23
-    pcm = b"".join(
-        v.to_bytes(3, "little", signed=True) for v in (-1, 1, -8388608, 8388607)
-    )
-    _n, _r, nf, samples = decode_wav(_encode_wav(1, 48000, 3, pcm))
-    assert nf == 4
-    assert list(samples[:, 0]) == [-1, 1, -8388608, 8388607]
-    assert samples.dtype == np.int32
-
-
-def test_wav_non_pcm_stays_behind_seam():
-    import struct
-
-    from kg_covid_19_spark.operators.multimodal import decode_wav
-
-    fmt = struct.pack("<HHIIHH", 3, 1, 8000, 32000, 4, 32)  # IEEE float
-    data = (
-        b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", 0)
-    )
-    with pytest.raises(NotImplementedError):
-        decode_wav(data)
-    with pytest.raises(ValueError):
-        decode_wav(b"OggS....not a wav")
-
-
-def test_wav_through_audio_stats_and_features_kernels(spark):
-    """Real WAVs through the SAME mapInPandas kernels the registered
-    media_audio_stats / media_features queries use."""
-    import struct
-
-    from kg_covid_19_spark.operators.multimodal import (
-        media_audio_stats_frame,
-        media_features_frame,
-    )
-
-    # clip 1: 16-bit mono, 800 frames @ 16 kHz -> 50 ms, quiet (all ±10)
-    quiet = b"".join(
-        struct.pack("<h", 10 if i % 2 else -10) for i in range(800)
-    )
-    # clip 2: 8-bit stereo, 441 frames @ 44.1 kHz -> 10 ms, loud square
-    loud = bytes([255, 0] * 441)
-    frame = spark.createDataFrame(
-        [(1, bytearray(_encode_wav(1, 16000, 2, quiet))),
-         (2, bytearray(_encode_wav(2, 44100, 1, loud)))],
-        "doc_id long, media binary",
-    )
-    stats = {
-        r["doc_id"]: (r["n_channels"], r["sample_rate"], r["n_samples"],
-                      r["duration_ms"])
-        for r in media_audio_stats_frame(frame, "wav-v1").collect()
-    }
-    assert stats == {1: (1, 16000, 800, 50), 2: (2, 44100, 441, 10)}
-
-    feats = {
-        r["doc_id"]: r["f0"].split(",")
-        for r in media_features_frame(frame, "wav-v1").collect()
-    }
-    # every sample sits at full normalized amplitude -> top bin only
-    assert feats[1][7] == "1000000"
-    assert feats[2][7] == "1000000"
-
-
-def test_media_audio_stats_fake_matches_documents(spark):
-    """Registered fake path: 1-channel 16 kHz over the utf-8 byte count."""
-    from kg_covid_19_spark.operators.multimodal import media_audio_stats
-
-    from conftest import SF_DIR
-
-    rows = media_audio_stats(spark, SF_DIR).collect()
-    assert len(rows) > 0
-    for r in rows[:20]:
-        assert r["n_channels"] == 1 and r["sample_rate"] == 16000
-        assert r["duration_ms"] == r["n_samples"] * 1000 // 16000
-
-
-def test_grid_neardup_salting_preserves_pairs(spark, monkeypatch):
-    """Hot-cell salting (join-amplification skew split) produces the
-    identical pair multiset: 60 docs packed into ONE grid cell with a
-    tiny forced GRID_SALT_TARGET so every hot-cell path engages, against
-    an independent brute-force L1 scan."""
-    import itertools
-
-    import kg_covid_19_spark.operators.multimodal as mm
-
-    rows = []
-    for i in range(60):          # one tight cluster: every pair qualifies
-        rows.append((i, [100000 + i * 10] * 8))
-    for i in range(60, 80):      # scattered: no pairs
-        rows.append((i, [1000000 + i * 50000 + d * 31000 for d in range(8)]))
-    g = spark.createDataFrame(rows, "doc_id long, v array<long>")
-
-    monkeypatch.setattr(mm, "GRID_SALT_TARGET", 500)
-    got = sorted(tuple(r) for r in mm.grid_neardup_frame(spark, g).collect())
-
-    data = dict(rows)
-    exp = sorted(
-        (a, b, sum(abs(x - y) for x, y in zip(data[a], data[b])))
-        for a, b in itertools.combinations(range(80), 2)
-        if sum(abs(x - y) for x, y in zip(data[a], data[b])) <= mm.L1_MAX_PPM
-    )
-    assert len(exp) == 60 * 59 // 2
-    assert got == exp
