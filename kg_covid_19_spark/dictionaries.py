@@ -4,7 +4,8 @@ The reference builds all of its join dictionaries in-driver at startup
 (ENSP→ENSG string_ppi.py:61-96, gene_info symbol map scibite_cord.py:420-452,
 SSSOM normalization map utils/normalize_utils.py:7-46). Our engine does the
 same, but the dictionaries become *broadcast DataFrames* (Catalyst-visible
-broadcast hash joins) or broadcast variables consumed inside Arrow UDFs.
+broadcast hash joins) or, for mention detection, one term → curie map
+literal inside a native expression (operators/mentions.py).
 
 Terms are drawn from the deterministic driver corpus vocabulary
 (/root/testdata/sf*/documents.parquet) so that expected mentions are exactly

@@ -128,9 +128,6 @@ def _markers_sql(lang: str) -> str:
     return "[" + ", ".join(f"'{m}'" for m in LANG_MARKERS[lang]) + "]"
 
 
-_LANG_CASE = ""
-
-
 def _lang_pred_sql() -> str:
     langs = sorted(LANG_MARKERS)
     cnt = {

@@ -10,77 +10,80 @@ entity mentions with a short connecting token span become one triple
 whose predicate is that span (ReVerb-lite: 1..MAX_GAP connecting
 tokens, joined with '_', prefixed ``rel:``).
 
-Execution shape: one Arrow-vectorized pandas UDF per document (no
-per-row Python, no shuffle until the final count); the dictionary is
-the same pre-normalized broadcast gazetteer the mention kernel uses, so
-subjects/objects arrive pre-linked and pre-canonicalized. The DuckDB
-oracle replicates the whole chain (sentence split, tokenization,
-token-equality mention positions, lead() pairing, connecting-span
-aggregation) in SQL, so the driver's hash gate checks the extractor
-end-to-end.
+Execution shape: one native expression per document (:func:`triples`),
+no shuffle until the final count. It splits the text into sentences on
+'.', tokenizes each with the mention operator's token rule and looks
+each token up in the same term → canonical-curie map literal
+(operators/mentions.py), so subjects/objects arrive pre-linked and
+pre-canonicalized. The DuckDB oracle replicates the whole chain
+(sentence split, tokenization, token-equality mention positions, lead()
+pairing, connecting-span aggregation) in SQL, so the driver's hash gate
+checks the extractor end-to-end.
 """
 
 from __future__ import annotations
 
-import re
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..dictionaries import (
-    gazetteer_values_sql,
-    normalized_gazetteer,
-    sssom_values_sql,
-)
+from ..dictionaries import gazetteer_values_sql, sssom_values_sql
+from ..plans.pipeline import cooc_pairs
 from ..sources.corpus import read_table
+from .mentions import curies, term_map, tokens
 
 MAX_GAP = 4  # max connecting tokens between two mentions (ReVerb-lite)
 
-_TOKEN_RE = re.compile(r"[^a-z0-9]+")
 
-def _extract_doc(text: str, term_to_curie: dict[str, str]
-                 ) -> list[tuple[str, str, str]]:
-    """Per-document extraction: sentence windows on '.', token-equality
-    mentions, consecutive-pair predicates."""
-    out = []
-    for sent in text.lower().split("."):
-        toks = [t for t in _TOKEN_RE.split(sent) if t]
-        hits = [
-            (i, term_to_curie[t]) for i, t in enumerate(toks)
-            if t in term_to_curie
-        ]
-        for (i1, c1), (i2, c2) in zip(hits, hits[1:]):
-            gap = i2 - i1 - 1
-            if 1 <= gap <= MAX_GAP and c1 != c2:
-                pred = "rel:" + "_".join(toks[i1 + 1:i2])
-                out.append((c1, pred, c2))
-    return out
+def _sentences(text: Column) -> Column:
+    """The lower-cased sentences of ``text``: its pieces between '.'s."""
+    return F.split(F.lower(text), r"\.")
 
 
-def make_triple_udf(entries: list[tuple[str, str, str, str]] | None = None):
-    entries = entries if entries is not None else normalized_gazetteer()
-    term_to_curie = {t.lower(): c for t, c, _n, _cat in entries}
+def triples(text: Column,
+            entries: list[tuple[str, str, str, str]] | None = None) -> Column:
+    """``array<struct<subject, predicate, object>>`` of one document.
 
-    @F.pandas_udf("array<struct<subject:string,predicate:string,object:string>>")
-    def extract_triples(text: pd.Series) -> pd.Series:
-        return text.map(
-            lambda t: [] if t is None else _extract_doc(t, term_to_curie)
-        )
+    Per sentence: the tokens that are a term, with their index
+    (``transform((t, i) …)``); each hit paired with the next one; pairs
+    with 1..MAX_GAP tokens between them and unequal curies kept; the
+    predicate is ``rel:`` + the tokens between them joined by '_'. Each
+    stage reads the previous one through a lambda variable, so the split
+    and the lookups run once per sentence."""
+    m, _ = term_map(entries)
 
-    return extract_triples
+    def with_hits(toks: Column) -> Column:
+        found = F.transform(toks, lambda t, i: F.struct(
+            i.alias("i"), F.try_element_at(m, t).alias("c")))
+        return F.struct(toks.alias("toks"), F.filter(
+            found, lambda h: h["c"].isNotNull()).alias("h"))
+
+    def pairs(s: Column) -> Column:
+        h = s["h"]
+        consecutive = F.transform(F.slice(h, 2, F.size(h)), lambda b, k: F.struct(
+            h[k]["i"].alias("i"), h[k]["c"].alias("s"),
+            b["i"].alias("j"), b["c"].alias("o")))
+        kept = F.filter(consecutive, lambda p: (
+            (p["j"] - p["i"] - 1).between(1, MAX_GAP) & (p["s"] != p["o"])))
+        return F.transform(kept, lambda p: F.struct(
+            p["s"].alias("subject"),
+            F.concat(F.lit("rel:"), F.array_join(
+                F.slice(s["toks"], p["i"] + 2, p["j"] - p["i"] - 1), "_"),
+            ).alias("predicate"),
+            p["o"].alias("object"),
+        ))
+
+    sent_hits = F.transform(F.transform(_sentences(text), tokens), with_hits)
+    return F.flatten(F.transform(sent_hits, pairs))
 
 
 def doc_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All extracted triples with document provenance — narrow chain.
     (r7: a min-parallelism repartition was tried and REVERTED — the
-    extractor kernel is cheap enough that the extra exchange cost more
-    than the serial scan at both bench scales, measured +8%/+20%.)"""
-    udf = make_triple_udf()
+    extractor was cheap enough that the extra exchange cost more than
+    the serial scan at both bench scales, measured +8%/+20%.)"""
     return (
         read_table(spark, sf_dir, "documents")
-        .select("doc_id", F.explode_outer(udf(F.col("text"))).alias("t"))
+        .select("doc_id", F.explode_outer(triples(F.col("text"))).alias("t"))
         .filter(F.col("t").isNotNull())
         .select("doc_id", "t.subject", "t.predicate", "t.object")
     )
@@ -153,56 +156,24 @@ FROM triples GROUP BY subject, predicate, object
 """
 
 
-def _sent_curies(text: str, term_to_curie: dict[str, str]) -> list[list[str]]:
-    out = []
-    for sent in text.lower().split("."):
-        toks = [t for t in _TOKEN_RE.split(sent) if t]
-        cs = sorted({term_to_curie[t] for t in toks if t in term_to_curie})
-        if len(cs) >= 2:
-            out.append(cs)
-    return out
-
-
 def kg_sentence_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sentence-windowed co-occurrence — the reference's actual cooc
     granularity (cv19_scc.tsv is one row per sentence,
     scibite_cord.py:253-271), vs the doc-level pairs of the main
-    pipeline. Pairs are expanded row-locally from the per-sentence
-    distinct-curie sets (i<j), then counted — narrow until the final
-    dictionary²-bounded aggregation."""
-    entries = normalized_gazetteer()
-    term_to_curie = {t.lower(): c for t, c, _n, _cat in entries}
-
-    @F.pandas_udf("array<array<string>>")
-    def per_sentence(text: pd.Series) -> pd.Series:
-        return text.map(
-            lambda t: [] if t is None else _sent_curies(t, term_to_curie)
-        )
-
-    docs = read_table(spark, sf_dir, "documents")
-    sent = docs.select(
-        "doc_id", F.explode_outer(per_sentence(F.col("text"))).alias("cs")
-    ).filter(F.col("cs").isNotNull())
-    pairs = sent.select(
-        "doc_id",
-        F.explode(
-            F.filter(
-                F.flatten(
-                    F.transform(
-                        "cs",
-                        lambda a: F.transform(
-                            F.col("cs"),
-                            lambda b: F.struct(a.alias("s"), b.alias("o")),
-                        ),
-                    )
-                ),
-                lambda p: p["s"] < p["o"],
-            )
-        ).alias("p"),
+    pipeline. Each sentence's distinct curie array (:func:`curies` of
+    the sentence) is expanded into its pairs by the pipeline's
+    row-local :func:`cooc_pairs`, then counted — narrow until the final
+    dictionary²-bounded aggregation. ``explode_outer``, as in
+    ``doc_mentions``: an inner explode's inferred ``size() > 0`` filter
+    would evaluate the extraction a second time."""
+    per_sentence = F.transform(_sentences(F.col("text")), lambda s: curies(s))
+    sents = read_table(spark, sf_dir, "documents").select(
+        "doc_id", F.explode_outer(per_sentence).alias("curies")
     )
     return (
-        pairs.select("doc_id", "p.s", "p.o")
-        .groupBy(F.col("s").alias("curie_a"), F.col("o").alias("curie_b"))
+        cooc_pairs(sents, "doc_id")
+        .groupBy(F.col("subject").alias("curie_a"),
+                 F.col("object").alias("curie_b"))
         .agg(
             F.count("*").alias("n_sentences"),
             F.countDistinct("doc_id").alias("n_docs"),

@@ -160,27 +160,7 @@ def build_kg_subset(spark: SparkSession, sf_dir: str,
         F.lit("SIO:000255").alias("relation"),
         F.lit("documents").alias("provided_by"),
     )
-    pairs = (
-        pm.select(
-            F.explode_outer(
-                F.filter(
-                    F.flatten(
-                        F.transform(
-                            "curies",
-                            lambda a: F.transform(
-                                F.col("curies"),
-                                lambda b: F.struct(a.alias("s"), b.alias("o")),
-                            ),
-                        )
-                    ),
-                    lambda p: p["s"] < p["o"],
-                )
-            ).alias("p")
-        )
-        .filter(F.col("p").isNotNull())
-        .select(F.col("p.s").alias("subject"), F.col("p.o").alias("object"))
-    )
-    cooc_edges = pairs.dropDuplicates(["subject", "object"]).select(
+    cooc_edges = P.cooc_pairs(pm).dropDuplicates(["subject", "object"]).select(
         "subject",
         F.lit("biolink:correlated_with").alias("predicate"),
         "object",

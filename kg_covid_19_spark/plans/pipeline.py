@@ -1,13 +1,14 @@
 """End-to-end KG construction plan (SURVEY.md §7.2 minimum slice, grown up).
 
-web_pages → text kernel → mention detection (broadcast gazetteer, Arrow UDF)
-→ triple extraction (mentions + co-occurrence edges) → node/edge frames.
+web_pages → text → mention detection (one native token-match expression
+over a term → curie map literal, operators/mentions.py) → mention and
+co-occurrence edges → node/edge frames.
 
 Shuffle budget at 100 TB (the thing that decides whether this survives a
 1000-executor cluster):
 
 * mention detection, mention edges, pair generation: **zero shuffles** —
-  narrow map chain; per-doc dedup happens inside the kernel (row-local
+  narrow map chain; per-doc dedup happens inside the expression (row-local
   state) and co-occurrence pairs are expanded from the per-row mention
   array (:func:`cooc_pairs`), never via a groupBy/self-join on doc_id.
 * term nodes: groupBy over ≤|dictionary| distinct keys — partial
@@ -37,7 +38,7 @@ from ..dictionaries import (
     canonical_gazetteer,
 )
 from ..functions.text import extracted_text
-from ..operators.mentions import make_curie_udf
+from ..operators.mentions import curies
 from ..sources.corpus import (
     _scan_layout,
     artifact,
@@ -51,8 +52,8 @@ def pages_with_mentions(spark: SparkSession, sf_dir: str,
                         langs: tuple[str, ...] | None = None,
                         has_html: bool = False) -> DataFrame:
     """web_pages + ``curies: array<string>`` — the sorted, per-document-
-    deduped canonical mention set. One narrow pass: text kernel + broadcast-
-    dictionary automaton, no shuffle.
+    deduped canonical mention set (:func:`operators.mentions.curies`).
+    One narrow projection, no shuffle.
 
     ``has_html``: the driver corpus declares html as a null literal, so by
     default the text kernel is the (JVM-side) identity and the html→text
@@ -60,28 +61,25 @@ def pages_with_mentions(spark: SparkSession, sf_dir: str,
     with raw bytes and the full extraction kernel (functions/text.py) runs.
     """
     pages = web_pages(spark, sf_dir, langs)
-    udf = make_curie_udf()
     text = (
         extracted_text(F.col("text"), F.col("html")) if has_html else F.col("text")
     )
-    return pages.withColumn("text", text).withColumn(
-        "curies", F.sort_array(udf(F.col("text")))
-    )
+    return pages.withColumn("text", text).withColumn("curies", curies(F.col("text")))
 
 
 def doc_mentions(spark: SparkSession, sf_dir: str,
                  langs: tuple[str, ...] | None = None) -> DataFrame:
     """(doc_id, curie) distinct mention pairs — the engine's E4 analog.
 
-    Distinct by construction (the kernel dedups per document against the
-    pre-normalized gazetteer, dictionaries.normalized_gazetteer) — the
+    Distinct by construction (the expression dedups per document against
+    the pre-normalized gazetteer, dictionaries.normalized_gazetteer) — the
     reference's ``seen`` set (scibite_cord.py:187-188) without any shuffle.
     """
     # explode_outer + post-filter rather than inner explode: an inner
     # explode makes Catalyst infer a `size(curies) > 0` pre-filter that
-    # re-evaluates the mention UDF a second time (and below the ingest
-    # repartition, i.e. at scan parallelism). explode_outer generates no
-    # such filter → the UDF runs exactly once, after the exchange.
+    # evaluates the mention extraction a second time, below the ingest
+    # repartition (at scan parallelism). explode_outer infers no such
+    # filter → the extraction runs once, after the exchange.
     return (
         pages_with_mentions(spark, sf_dir, langs)
         .select("doc_id", F.explode_outer("curies").alias("curie"))
@@ -89,23 +87,23 @@ def doc_mentions(spark: SparkSession, sf_dir: str,
     )
 
 
-def cooc_pairs(frame: DataFrame) -> DataFrame:
-    """(subject, object) rows, subject < object, for every pair of one
-    row's ``curies`` (a per-document deduped mention array) — the ONE
-    row-local pair expansion. Zero shuffle: the scale-safe alternative
-    to a mentions self-join on doc_id, which at 100 TB shuffles the
-    whole corpus on a corpus-sized key.
+def cooc_pairs(frame: DataFrame, *carry: str) -> DataFrame:
+    """(``*carry``, subject, object) rows, subject < object, for every
+    pair of one row's ``curies`` (a deduped mention array of a document
+    or a sentence) — the ONE row-local pair expansion. Zero shuffle: the
+    scale-safe alternative to a mentions self-join on doc_id, which at
+    100 TB shuffles the whole corpus on a corpus-sized key.
 
     Two generators and a filter, so the expansion stays in whole-stage
     codegen (a nested transform/flatten/filter lambda does not).
     ``explode_outer`` rather than ``explode``: an inner explode makes
     Catalyst infer a ``size(curies) > 0`` filter that it pushes below a
-    projection computing ``curies`` with the mention UDF, which then
-    runs twice (see :func:`doc_mentions`); the null rows of the outer
-    form fail ``subject < object``."""
+    projection computing ``curies``, which then evaluates the mention
+    extraction twice (see :func:`doc_mentions`); the null rows of the
+    outer form fail ``subject < object``."""
     return (
-        frame.select(F.explode_outer("curies").alias("subject"), "curies")
-        .select("subject", F.explode_outer("curies").alias("object"))
+        frame.select(*carry, F.explode_outer("curies").alias("subject"), "curies")
+        .select(*carry, "subject", F.explode_outer("curies").alias("object"))
         .filter(F.col("subject") < F.col("object"))
     )
 
@@ -176,7 +174,7 @@ def build_kg(spark: SparkSession, sf_dir: str,
     deduped on the KGX keys (id) / (subject,predicate,object,relation).
 
     Every frame is a projection of the cached mention set
-    (:func:`get_mention_set`), so the mention kernel ran once, before
+    (:func:`get_mention_set`), so the mention extraction ran once, before
     this call, and no pair is expanded here:
 
     * publication nodes: the mention rows with ``pos = 0`` or a null
@@ -243,13 +241,13 @@ def _artifact_partitions(spark: SparkSession, sf_dir: str) -> int:
     """Partition count for the persisted graph artifacts, derived from
     input size (guide §2: scale-adaptive, never a local constant): one
     partition per ~8 MB of corpus, floored at 2. The KGX frames and the
-    mention rows are narrow projections off the mention kernel's output,
+    mention rows are narrow projections off the mention extraction's output,
     so they inherit the ingest's width — ~65 near-empty partitions at
     bench scale for the KGX union, and every one of the ~30 downstream
     graph queries paid a task per partition per scan (measured: the merge
     stage alone re-scanned them 4×). coalesce() to this count is a
     no-op at 100 TB (count ≥ existing partitions) and collapses only
-    cache-read + projection work locally — the mention kernel's own
+    cache-read + projection work locally — the mention extraction's own
     parallelism is untouched (it runs before the coalesce)."""
     _, nbytes = _scan_layout(spark, sf_dir)
     return max(2, nbytes // (8 << 20))
@@ -283,7 +281,7 @@ def get_mention_set(spark: SparkSession, sf_dir: str,
     * pair counts ``(subject, object, n_docs)`` — :func:`pair_counts`
       over the same documents.
 
-    One pass of the mention kernel feeds both: its ``(doc_id, curies)``
+    One pass of the mention extraction feeds both: its ``(doc_id, curies)``
     output is persisted for the length of the build, the two frames are
     persisted and counted from it, and it is released. Both hold only
     scalar columns, which Spark's columnar cache encodes and compresses;
@@ -307,7 +305,7 @@ def get_mention_set(spark: SparkSession, sf_dir: str,
             .persist()
         )
         # pairs first: its map stage reads ``pm`` at the ingest width, so
-        # the kernel runs there once and fills ``pm``; the coalesced rows
+        # the extraction runs there once and fills ``pm``; the coalesced rows
         # then read ``pm`` from the cache
         pairs.count()
         rows.count()
@@ -322,7 +320,7 @@ def get_mentions(spark: SparkSession, sf_dir: str,
     """(doc_id, curie) mention pairs — the mention rows of
     :func:`get_mention_set` that carry a curie.
 
-    Distinct on (doc_id, curie) by construction: the kernel dedups each
+    Distinct on (doc_id, curie) by construction: the extraction dedups each
     document's mentions (see :func:`doc_mentions`), so a count per curie
     is its document frequency without a distinct."""
     rows, _ = get_mention_set(spark, sf_dir, langs)

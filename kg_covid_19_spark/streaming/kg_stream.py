@@ -5,7 +5,7 @@ resumability contract is "already-transformed inputs are skipped"
 (cached downloads, download_utils.py:50-56 — batch analog:
 plans/checkpoint.py). This module is the continuous version of the same
 contract: new document files arriving in a directory flow through the
-SAME mention kernel (operators/mentions.make_curie_udf — the stream and
+SAME mention expression (operators/mentions.curies — the stream and
 the batch share one code path, so batch/stream parity is structural,
 not coincidental) and append ``biolink:mentions`` edges to a parquet
 sink. The file-source + checkpoint pair gives exactly-once per input
@@ -13,9 +13,10 @@ file: a restart with the same checkpoint re-processes nothing, and
 newly arrived files are picked up incrementally — the streaming analog
 of the per-partition lineage manifest.
 
-The streaming query is a narrow map chain (schema'd scan → Arrow UDF →
-explode → project), so the micro-batch plan has zero shuffles — the
-same 100 TB property as the batch build (plans/pipeline.py docstring).
+The streaming query is a narrow map chain (schema'd scan → mention
+expression → explode → project), so the micro-batch plan has zero
+shuffles — the same 100 TB property as the batch build
+(plans/pipeline.py docstring).
 """
 
 from __future__ import annotations
@@ -29,17 +30,16 @@ from ..dictionaries import (
     MENTION_RELATION,
     PROVIDED_BY,
 )
-from ..operators.mentions import make_curie_udf
+from ..operators.mentions import curies
 
 
 def _mention_edges(docs: DataFrame) -> DataFrame:
     """(streaming or batch) documents → mention edge rows; shared with
     the batch pipeline's edge shape (plans/pipeline.py build_kg)."""
-    detect = make_curie_udf()
     return (
         docs.select(
             F.col("doc_id"),
-            F.explode_outer(detect(F.col("text"))).alias("curie"),
+            F.explode_outer(curies(F.col("text"))).alias("curie"),
         )
         .filter(F.col("curie").isNotNull())
         .select(
@@ -88,7 +88,7 @@ def stream_mention_edges(
 
 
 def batch_mention_edges(spark: SparkSession, docs_dir: str) -> DataFrame:
-    """The batch plan the stream must converge to (same kernel)."""
+    """The batch plan the stream must converge to (same expression)."""
     return _mention_edges(spark.read.parquet(docs_dir))
 
 
@@ -199,8 +199,7 @@ def _pair_count_plan(docs: DataFrame) -> DataFrame:
     parity is structural."""
     from ..plans.pipeline import pair_counts
 
-    detect = make_curie_udf()
-    return pair_counts(docs.select(detect(F.col("text")).alias("curies")))
+    return pair_counts(docs.select(curies(F.col("text")).alias("curies")))
 
 
 def stream_cooc_counts(

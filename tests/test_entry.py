@@ -58,8 +58,8 @@ def test_only_local_frame_calls_create_dataframe():
 def test_query_module_helpers_are_used():
     """Every top-level function and UPPER_CASE constant of the query
     modules, the merge operators and the build-path modules (corpus
-    sources, pipeline) is used outside its own definition, so a helper
-    or operator orphaned by a cut fails here. A use is an AST
+    sources, pipeline, mentions, triples) is used outside its own
+    definition, so a helper or operator orphaned by a cut fails here. A use is an AST
     ``Name``/``Attribute`` load or an ``import`` of the name.
     A ``_``-prefixed helper or a constant must be used in the package or
     the driver entry; a public function may also be used only by
@@ -82,7 +82,8 @@ def test_query_module_helpers_are_used():
             uses += [(path, node.lineno, n, path in tests) for n in names]
     unused = []
     for rel in ("plans/queries.py", "plans/merged.py", "operators/merge.py",
-                "sources/corpus.py", "plans/pipeline.py"):
+                "sources/corpus.py", "plans/pipeline.py",
+                "operators/mentions.py", "operators/triples.py"):
         path = root / rel
         for node in ast.parse(path.read_text(), rel).body:
             if isinstance(node, ast.FunctionDef):

@@ -1,8 +1,9 @@
 """Physical-plan regression tests — the scale properties the README
 claims are asserted here so a refactor can't silently lose them:
 predicate pushdown + column pruning into the parquet scan, broadcast
-(not sort-merge) dimension joins, and a single Arrow UDF evaluation in
-the mention chain with at most the one ingest repartition exchange."""
+(not sort-merge) dimension joins, no Python evaluation on the KG build
+path, and one tokenization in the mention chain with at most the one
+ingest repartition exchange."""
 
 from __future__ import annotations
 
@@ -19,6 +20,9 @@ def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+_PYTHON_EVAL = re.compile(r"ArrowEvalPython|BatchEvalPython|MapInPandas")
+
+
 def test_mention_chain_single_udf_min_exchanges(spark):
     # explicit langs → distinct logical plan, so a session-cached
     # mention frame can't shadow this test with an InMemoryTableScan
@@ -26,14 +30,30 @@ def test_mention_chain_single_udf_min_exchanges(spark):
         doc_mentions(spark, SF_DIR, langs=("en", "de", "fr", "es", "xx"))
     )
     assert "InMemoryTableScan" not in plan
-    # the Arrow kernel is evaluated exactly once (no Catalyst duplication
-    # via inferred size()>0 filters — see doc_mentions docstring)
-    assert plan.count("ArrowEvalPython") == 1
+    # a native expression: no Python evaluation, and the text is split
+    # into tokens once (no Catalyst duplication via inferred size()>0
+    # filters — see doc_mentions)
+    assert not _PYTHON_EVAL.search(plan), plan
+    assert plan.count("split(") == 1, plan
     # narrow chain: at most the one ingest repartition exchange
     n_exchange = len(
         re.findall(r"Exchange (?!SinglePartition)", plan)
     )
     assert n_exchange <= 1, plan
+
+
+def test_build_path_runs_no_python(spark):
+    """Mentions, triples and sentence co-occurrence are native
+    expressions: none of their executed plans evaluates Python."""
+    from kg_covid_19_spark.operators.triples import (
+        doc_triples, kg_sentence_cooc,
+    )
+    from kg_covid_19_spark.plans.pipeline import pages_with_mentions
+
+    for df in (pages_with_mentions(spark, SF_DIR), doc_triples(spark, SF_DIR),
+               kg_sentence_cooc(spark, SF_DIR)):
+        plan = _executed_plan(df)
+        assert not _PYTHON_EVAL.search(plan), plan
 
 
 def test_cooccurrence_counts_no_docid_join(spark):

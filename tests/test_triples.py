@@ -8,7 +8,7 @@ from kg_covid_19_spark.operators.triples import (
     MAX_GAP,
     doc_triples,
     kg_openie_triples,
-    make_triple_udf,
+    triples,
 )
 
 from conftest import SF_DIR
@@ -35,11 +35,10 @@ def test_openie_udf_golden(spark):
         ("aspirin", "CHEBI:15365", "aspirin", "biolink:Drug"),
         ("fever", "MONDO:0005091", "fever", "biolink:Disease"),
     ]
-    udf = make_triple_udf(entries)
     df = spark.createDataFrame(
         [("Aspirin strongly reduces fever. aspirin fever.",)], "text string"
     )
-    got = df.select(udf(F.col("text")).alias("t")).collect()[0].t
+    got = df.select(triples(F.col("text"), entries).alias("t")).collect()[0].t
     # adjacent pair (gap 0) in the 2nd sentence is rejected
     assert [tuple(x) for x in got] == [
         ("CHEBI:15365", "rel:strongly_reduces", "MONDO:0005091")

@@ -8,9 +8,9 @@ Method:
   without pinning a "small cluster" silently borrows the whole machine;
 * identical input and partition count at both sizes (partitioning is a
   property of the data, not the cluster);
-* workload: the KG-construction hot path (text → gazetteer mention UDF →
-  triple extraction → pair dedup) over the sf0.1 corpus replicated in-plan
-  so compute dominates fixed scheduling overhead;
+* workload: the KG-construction hot path (text → gazetteer mention
+  expression → mention rows + pair dedup) over the sf0.1 corpus
+  replicated in-plan so compute dominates fixed scheduling overhead;
 * reported: wall, busy core-seconds (from /proc/stat, user+nice+system),
   triples/sec, and eff = (tput_4N / tput_N) / 4.
 
@@ -46,7 +46,8 @@ import json, sys, time
 sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
 from kg_covid_19_spark.session import get_spark
-from kg_covid_19_spark.operators.mentions import make_curie_udf
+from kg_covid_19_spark.operators.mentions import curies
+from kg_covid_19_spark.plans.pipeline import cooc_pairs
 
 cores = {cores}
 rep = {rep}
@@ -59,23 +60,16 @@ docs = (spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
         .repartition(parts)
         .crossJoin(spark.range(rep).toDF("rep"))
         .select((F.col("doc_id") * rep + F.col("rep")).alias("doc_id"), "text"))
-udf = make_curie_udf()
-pm = docs.withColumn("curies", F.sort_array(udf(F.col("text"))))
+pm = docs.withColumn("curies", curies(F.col("text")))
 mentions = (pm.select("doc_id", F.explode_outer("curies").alias("curie"))
               .filter(F.col("curie").isNotNull()))
-pairs = (pm.select(F.explode_outer(F.filter(F.flatten(F.transform("curies",
-          lambda a: F.transform(F.col("curies"),
-            lambda b: F.struct(a.alias("s"), b.alias("o"))))),
-          lambda p: p["s"] < p["o"])).alias("p"))
-         .filter(F.col("p").isNotNull())
-         .select(F.col("p.s").alias("subject"), F.col("p.o").alias("object"))
-         .dropDuplicates(["subject", "object"]))
+pairs = cooc_pairs(pm).dropDuplicates(["subject", "object"])
 
 def busy():
     f = open("/proc/stat").readline().split()
     return sum(int(x) for x in f[1:4]) / 100.0
 
-mentions.count()  # warm-up pass (JIT + python workers)
+mentions.count()  # warm-up pass (JIT)
 b0 = busy(); t0 = time.time()
 n_mentions = mentions.count()
 n_pairs = pairs.count()
