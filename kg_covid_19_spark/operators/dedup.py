@@ -161,7 +161,7 @@ def make_shingle_udf():
 
 def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingle) exploded distinct shingles — a session artifact
-    like the materialized KG (plans/pipeline.get_kg): the signature
+    like the mention set (plans/pipeline.get_mention_set): the signature
     build and BOTH sides of the Jaccard-verify
     intersection read this frame, so without the cache one
     neardup_pairs run re-scans and re-shingles the corpus three times.

@@ -5,9 +5,9 @@ documents source (plans/pipeline.get_kg) + ontology source
 nodes/edges/stats, each with a DuckDB oracle over
 dictionaries.merged_cte_sql.
 
-The merged graph is not a second persisted copy: it is the pinned KG
-frames, filtered to the rows whose key the ontology does not have, plus
-one driver-side frame per side holding the fused overlap.
+The merged graph is not a second persisted copy: it is the KG plans,
+filtered to the rows whose key the ontology does not have, plus one
+driver-side frame per side holding the fused overlap.
 """
 
 from __future__ import annotations
@@ -42,7 +42,7 @@ def get_merged(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     fused half (at most the ontology plus the document rows sharing its
     keys) is collected once per build and kept as a one-partition
     ``LocalRelation``, so executing the merged frames runs no shuffle
-    and the build pins nothing beyond ``get_kg``'s frames."""
+    and the build pins nothing beyond the mention set ``get_kg`` reads."""
     def build():
         doc_nodes, doc_edges = get_kg(spark, sf_dir)
         merged = []

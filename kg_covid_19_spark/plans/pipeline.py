@@ -43,6 +43,7 @@ from ..sources.corpus import (
     _scan_layout,
     artifact,
     local_frame,
+    materialize,
     read_table,
     web_pages,
 )
@@ -173,39 +174,41 @@ def build_kg(spark: SparkSession, sf_dir: str,
     biolink:correlated_with term-term edges (scibite_cord.py:290-340), all
     deduped on the KGX keys (id) / (subject,predicate,object,relation).
 
-    Every frame is a projection of the cached mention set
-    (:func:`get_mention_set`), so the mention extraction ran once, before
-    this call, and no pair is expanded here:
+    Both frames are plans over the cached mention set
+    (:func:`get_mention_set`) and one driver constant: nothing is
+    persisted, extracted or pair-expanded here.
 
+    * term nodes: the distinct mentioned curies, collected once per
+      call and joined to the gazetteer on the driver (≤|dictionary|
+      rows), as a one-partition ``LocalRelation``;
     * publication nodes: the mention rows with ``pos = 0`` or a null
       ``pos`` — exactly one per document;
     * mention edges: the mention rows with a non-null ``curie``;
-    * term nodes: the distinct curies joined to the gazetteer;
     * co-occurrence edges: the keys of the pair-support counts.
+
+    Each branch's ``category``/``predicate`` is a literal, so a filter
+    on it prunes the other branches (the co-occurrence edges read only
+    the pair counts). Each union is coalesced to the rows' width, so a
+    whole-frame scan runs no more tasks than a scan of the rows.
     """
     doc_curie = F.concat(F.lit(DOC_PREFIX), F.col("doc_id").cast("string"))
     rows, pairs = get_mention_set(spark, sf_dir, langs)
-
+    mentions = rows.filter(F.col("curie").isNotNull())
+    mentioned = {r.curie for r in mentions.select("curie").distinct().collect()}
+    term_nodes = local_frame(
+        spark,
+        [(c, n, cat, PROVIDED_BY) for c, n, cat in canonical_gazetteer()
+         if c in mentioned],
+        "id string, name string, category string, provided_by string",
+    ).coalesce(1)
     pub_nodes = rows.filter(F.col("pos").isNull() | (F.col("pos") == 0)).select(
         doc_curie.alias("id"),
         F.concat(F.lit("Document "), F.col("doc_id").cast("string")).alias("name"),
         F.lit(PUB_CATEGORY).alias("category"),
         F.lit(PROVIDED_BY).alias("provided_by"),
     )
-
-    mentions = rows.filter(F.col("curie").isNotNull())
-
-    # term nodes: distinct mentioned curies (KB-sized groupBy) ⋈ broadcast
-    # canonical dictionary.
-    term_nodes = (
-        mentions.select("curie").distinct()
-        .join(F.broadcast(gazetteer_nodes(spark)), "curie")
-        .select(
-            F.col("curie").alias("id"), "name", "category",
-            F.lit(PROVIDED_BY).alias("provided_by"),
-        )
-    )
-    nodes = term_nodes.unionByName(pub_nodes)
+    n_parts = _artifact_partitions(spark, sf_dir)
+    nodes = term_nodes.unionByName(pub_nodes).coalesce(n_parts)
 
     mention_edges = mentions.select(
         doc_curie.alias("subject"),
@@ -214,7 +217,6 @@ def build_kg(spark: SparkSession, sf_dir: str,
         F.lit(MENTION_RELATION).alias("relation"),
         F.lit(PROVIDED_BY).alias("provided_by"),
     )
-
     cooc_edges = pairs.select(
         "subject",
         F.lit(COOC_PREDICATE).alias("predicate"),
@@ -222,32 +224,30 @@ def build_kg(spark: SparkSession, sf_dir: str,
         F.lit(COOC_RELATION).alias("relation"),
         F.lit(PROVIDED_BY).alias("provided_by"),
     )
-
-    edges = mention_edges.unionByName(cooc_edges)
+    edges = mention_edges.unionByName(cooc_edges).coalesce(n_parts)
     return nodes, edges
 
 
 # ---------------------------------------------------------------------------
 # Materialized graph. The reference never queries raw sources — it
 # queries the *merged artifact* (a Blazegraph journal loaded from merged-kg,
-# Jenkinsfile:126, query.py:8-15). Our equivalent: build the KG once per
-# input snapshot as session artifacts (sources/corpus.artifact) and let
-# every query plan start from the materialized graph. On a cluster this
-# is the Iceberg output table of the merge stage.
+# Jenkinsfile:126, query.py:8-15). Our equivalent: materialize the mention
+# set once per input snapshot as a session artifact (sources/corpus.artifact)
+# and let every query plan start from it through the graph plans. On a
+# cluster this is the Iceberg output table of the merge stage.
 # ---------------------------------------------------------------------------
 
 
 def _artifact_partitions(spark: SparkSession, sf_dir: str) -> int:
-    """Partition count for the persisted graph artifacts, derived from
-    input size (guide §2: scale-adaptive, never a local constant): one
-    partition per ~8 MB of corpus, floored at 2. The KGX frames and the
-    mention rows are narrow projections off the mention extraction's output,
-    so they inherit the ingest's width — ~65 near-empty partitions at
-    bench scale for the KGX union, and every one of the ~30 downstream
-    graph queries paid a task per partition per scan (measured: the merge
-    stage alone re-scanned them 4×). coalesce() to this count is a
-    no-op at 100 TB (count ≥ existing partitions) and collapses only
-    cache-read + projection work locally — the mention extraction's own
+    """Partition count for the cached mention rows, derived from input
+    size (guide §2: scale-adaptive, never a local constant): one
+    partition per ~8 MB of corpus, floored at 2. The rows are a narrow
+    projection off the mention extraction's output, so they would
+    inherit the ingest's width — ~65 near-empty partitions at bench
+    scale — and every graph query over the node and edge plans pays a
+    task per partition per scan. coalesce() to this count is a no-op at
+    100 TB (count ≥ existing partitions) and collapses only cache-read
+    + projection work locally — the mention extraction's own
     parallelism is untouched (it runs before the coalesce)."""
     _, nbytes = _scan_layout(spark, sf_dir)
     return max(2, nbytes // (8 << 20))
@@ -255,24 +255,16 @@ def _artifact_partitions(spark: SparkSession, sf_dir: str) -> int:
 
 def get_kg(spark: SparkSession, sf_dir: str,
            langs: tuple[str, ...] | None = None) -> tuple[DataFrame, DataFrame]:
-    def build():
-        n_parts = _artifact_partitions(spark, sf_dir)
-        nodes, edges = build_kg(spark, sf_dir, langs)
-        nodes = nodes.coalesce(n_parts).persist()
-        edges = edges.coalesce(n_parts).persist()
-        # eager materialization: queries must read the graph, not re-run
-        # the transform per union branch.
-        nodes.count()
-        edges.count()
-        return nodes, edges
-
-    return artifact(spark, sf_dir, ("kg", langs), build)
+    """:func:`build_kg` as a session artifact: one term constant per input."""
+    return artifact(spark, sf_dir, ("kg", langs),
+                    lambda: build_kg(spark, sf_dir, langs))
 
 
 def get_mention_set(spark: SparkSession, sf_dir: str,
                     langs: tuple[str, ...] | None = None
                     ) -> tuple[DataFrame, DataFrame]:
-    """The cached mention set: (mention rows, pair counts).
+    """The cached mention set: (mention rows, pair counts), the only
+    frames the graph pins.
 
     * mention rows ``(doc_id, pos, curie)`` — each document's sorted,
       deduped mention set, one row per mention (``posexplode_outer``);
@@ -283,11 +275,12 @@ def get_mention_set(spark: SparkSession, sf_dir: str,
 
     One pass of the mention extraction feeds both: its ``(doc_id, curies)``
     output is persisted for the length of the build, the two frames are
-    persisted and counted from it, and it is released. Both hold only
-    scalar columns, which Spark's columnar cache encodes and compresses;
-    an ``array<string>`` column it stores uncompressed, at several times
-    the bytes. They are plain persists, so a lost block is recomputed
-    from lineage.
+    filled from it, pairs first (its map stage runs the extraction at
+    the ingest width and fills ``pm``; the coalesced rows read ``pm``),
+    and it is released. Both hold only scalar columns, which Spark's
+    columnar cache encodes and compresses (an ``array<string>`` column
+    it stores uncompressed). They are plain persists, so a lost block
+    is recomputed from lineage.
 
     Every mention reader projects this value: the graph (:func:`build_kg`),
     :func:`get_mentions`, the pair-support queries and, regrouped,
@@ -304,11 +297,7 @@ def get_mention_set(spark: SparkSession, sf_dir: str,
             .coalesce(_artifact_partitions(spark, sf_dir))
             .persist()
         )
-        # pairs first: its map stage reads ``pm`` at the ingest width, so
-        # the extraction runs there once and fills ``pm``; the coalesced rows
-        # then read ``pm`` from the cache
-        pairs.count()
-        rows.count()
+        materialize(pairs, rows)
         pm.unpersist()
         return rows, pairs
 

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..dictionaries import kg_cte_sql, normalized_gazetteer
-from ..sources.corpus import _release, artifact, local_frame, read_table
+from ..sources.corpus import _release, artifact, local_frame, materialize, read_table
 from .pipeline import (
     cooc_pairs,
     get_kg,
@@ -90,7 +90,7 @@ def _und_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
     on ``subject`` and persisted once per input (a session artifact).
 
     r7: every iterative graph query (pagerank, components, the hop
-    joins) re-derived this frame from the persisted KGX edge union
+    joins) re-derived this frame from the KGX edge union
     EACH ROUND — at 32 shuffle partitions per branch that was ~130
     scan tasks per round and the dominant cost of the whole family at
     bench scale (measured: 110 stages / 8855 tasks for one 3-round
@@ -112,7 +112,7 @@ def _und_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition(F.col("subject"))
             .persist()
         )
-        und.count()
+        materialize(und)
         return und
 
     return artifact(spark, sf_dir, "und_cooc", build)
@@ -133,7 +133,7 @@ def _cooc_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
         deg = und.groupBy(F.col("subject").alias("id")).agg(
             F.countDistinct("object").alias("deg")
         ).persist()
-        deg.count()
+        materialize(deg)
         return deg
 
     return artifact(spark, sf_dir, "cooc_degrees", build)

@@ -7,9 +7,9 @@ After ``register_kg_views(spark, sf_dir)``:
     spark.sql("SELECT category, count(*) FROM kg_nodes GROUP BY 1")
     spark.sql(QUERY_01_SQL)  # the shipped .rq templates as SQL
 
-The views sit over the session-persisted KG frames (plans/pipeline.py
-get_kg), so repeated SQL hits the cache, mirroring the reference's
-query-the-published-graph model (§3.3).
+The views sit over the KG plans (plans/pipeline.py get_kg) over the
+session-cached mention set, so repeated SQL hits the cache, mirroring
+the reference's query-the-published-graph model (§3.3).
 """
 
 from __future__ import annotations

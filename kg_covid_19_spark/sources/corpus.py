@@ -83,9 +83,10 @@ def artifact(spark: SparkSession, sf_dir: str, name: Hashable,
     """The session artifact ``name`` derived from the tables under
     ``sf_dir``: returned from the registry while its inputs are
     unchanged, else ``build()`` — which returns the value already
-    materialized (persisted and counted, or local-checkpointed), or a
-    plan over other artifacts' materialized frames and driver constants
-    (``merged``: the pinned ``kg`` frames plus the fused ontology
+    materialized (persisted and filled by :func:`materialize`, or
+    local-checkpointed), or a plan over other artifacts' materialized
+    frames and driver constants (``kg``: the cached mention set plus the
+    term-node constant; ``merged``: those plans plus the fused ontology
     overlap) — is run and its result kept.
 
     Keying and release. An entry is keyed by (application, catalog,
@@ -108,7 +109,7 @@ def artifact(spark: SparkSession, sf_dir: str, name: Hashable,
     tools/scaling.py does), or its timings of the artifact-backed
     queries measure a dict lookup.
 
-    Durability: a persisted artifact (the graph, the mention set) keeps
+    Durability: a persisted artifact (the mention set, ``und_cooc``) keeps
     its lineage, so a lost block is recomputed. Builds that
     ``localCheckpoint`` (the iterative graph loops) cut lineage to
     executor-local blocks. A lost executor, or one removed by dynamic
@@ -161,6 +162,15 @@ def invalidate_session_caches(spark: SparkSession) -> int:
     reads. Path-mode file changes need no call (see :func:`artifact`)."""
     app = spark.sparkContext.applicationId
     return _release_where(lambda key, _fp: key[0] == app)
+
+
+def materialize(*frames: DataFrame) -> None:
+    """Fill the caches of the persisted ``frames`` in order (a later
+    frame may read an earlier one's cache). A ``noop`` write runs the
+    plan and drops its rows; under AQE it never runs more jobs than
+    ``count()``, and one fewer on a frame not ending in an exchange."""
+    for df in frames:
+        df.write.format("noop").mode("overwrite").save()
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

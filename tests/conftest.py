@@ -42,3 +42,19 @@ def assert_df_matches_oracle(df, duck, sql):
         f"mismatch: spark={len(got)} rows, duckdb={len(want)} rows; "
         f"first diff: {next((a, b) for a, b in zip(got, want) if a != b) if got and want else (got[:2], want[:2])}"
     )
+
+
+def cached_reads(df) -> set[int]:
+    """Ids of the cached RDDs that ``df``'s optimized plan reads."""
+    ids = set()
+
+    def walk(node):
+        if node.nodeName() == "InMemoryRelation":
+            ids.add(node.cacheBuilder().cachedColumnBuffers().id())
+            return
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().optimizedPlan())
+    return ids

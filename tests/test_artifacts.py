@@ -15,7 +15,7 @@ from kg_covid_19_spark.plans import pipeline
 from kg_covid_19_spark.plans.queries import KG_ORACLES, kg_mention_counts
 from kg_covid_19_spark.sources.corpus import invalidate_session_caches
 
-from conftest import SF_DIR
+from conftest import SF_DIR, cached_reads
 
 
 def _split_corpus(tmp_path, parts: int):
@@ -160,6 +160,28 @@ def test_invalidate_after_serve_mix_leaves_nothing_persisted(spark, tmp_path):
     assert set(persistent().keySet()) - before
     invalidate_session_caches(spark)
     assert set(persistent().keySet()) - before == set()
+
+
+def test_graph_pins_only_the_mention_set(spark, tmp_path):
+    """The KG frames are plans over the mention set and the merged graph
+    adds driver constants, so building both persists exactly the mention
+    rows and the pair counts; neither KG frame is persisted itself."""
+    from kg_covid_19_spark.plans.merged import get_merged
+
+    _split_corpus(tmp_path, 1)()
+    sf = str(tmp_path)
+    invalidate_session_caches(spark)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keySet())
+    nodes, edges = pipeline.get_kg(spark, sf)
+    get_merged(spark, sf)
+    rows, pairs = pipeline.get_mention_set(spark, sf)
+    assert set(persistent().keySet()) - before == (
+        cached_reads(rows) | cached_reads(pairs)
+    )
+    assert nodes.storageLevel == StorageLevel.NONE
+    assert edges.storageLevel == StorageLevel.NONE
+    invalidate_session_caches(spark)
 
 
 def test_holdout_forest_is_one_registry_value(spark, tmp_path):

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from kg_covid_19_spark.plans.pipeline import doc_mentions
 
-from conftest import SF_DIR
+from conftest import SF_DIR, cached_reads
 
 
 def _executed_plan(df) -> str:
@@ -399,3 +399,20 @@ def test_gazetteer_nodes_are_pre_reduced(spark):
     got = sorted(tuple(r) for r in df.collect())
     assert got == sorted(tuple(r) for r in want.collect())
     assert len(got) == len({r[0] for r in got}) < len(normalized_gazetteer())
+
+
+def test_graph_filters_prune_union_branches(spark):
+    """The KG frames are unions of branches whose ``predicate`` and
+    ``category`` are literals: a co-occurrence filter reads only the
+    pair-count cache, and the protein query reads only the driver-side
+    term constant, no cache at all."""
+    from kg_covid_19_spark.plans.pipeline import get_kg, get_mention_set
+    from kg_covid_19_spark.plans.queries import kg_protein_nodes
+
+    _, edges = get_kg(spark, SF_DIR)
+    rows, pairs = get_mention_set(spark, SF_DIR)
+    (rows_id,), (pairs_id,) = cached_reads(rows), cached_reads(pairs)
+    assert cached_reads(edges) == {rows_id, pairs_id}
+    cooc = edges.filter(F.col("predicate") == "biolink:correlated_with")
+    assert cached_reads(cooc) == {pairs_id}
+    assert cached_reads(kg_protein_nodes(spark, SF_DIR)) == set()
